@@ -18,9 +18,16 @@ Layout:
     streaming/   Structured Streaming ingest analog of the reference loop
     functions/   scalar/vector helper expressions (money, excel dates, text)
     multimodal/  binary-column (image/audio) plumbing with stubbed decoders
+    zip_finders  zip import finders that skip unchanged-archive re-reads
 """
 
-from datawarehouse1_spark.session import get_spark
+from datawarehouse1_spark import zip_finders
+
+# Runs in every Python worker that deserializes package code: later tasks
+# in that worker skip pyspark.zip's per-task directory re-reads.
+zip_finders.install()
+
+from datawarehouse1_spark.session import get_spark  # noqa: E402
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

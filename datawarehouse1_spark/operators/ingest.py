@@ -31,22 +31,42 @@ class IngestResult:
     errors: list[str] = field(default_factory=list)
 
 
+@dataclass(frozen=True)
+class BatchCounts:
+    """Constraint counts for a batch, computed where its rows already sit
+    (the xlsx parse task, streaming/file_ingest.py) instead of by Spark
+    jobs over the batch. `n_null` counts rows violating NOT NULL; `n_dup`
+    counts business keys occurring more than once in the batch, the
+    figures `null_violations(...).count()` and
+    `duplicate_keys(...).count()` return."""
+
+    n_rows: int
+    n_null: int
+    n_dup: int
+
+
 def validate_batch(
     batch: DataFrame,
     business_key: str,
     not_null_cols: list[str],
     existing: DataFrame | None = None,
     fk_checks: list[tuple[DataFrame, str, str]] | None = None,
+    counts: BatchCounts | None = None,
 ) -> list[str]:
     """All constraint checks the reference delegates to Postgres, computed
-    in one pass where possible. Returns [] when the batch is appendable."""
+    in one pass where possible. Returns [] when the batch is appendable.
+    With `counts`, the NOT NULL and in-batch UNIQUE checks read those
+    figures instead of running two counting jobs each."""
     errors: list[str] = []
 
-    n_null = null_violations(batch, not_null_cols).count()
+    if counts is None:
+        n_null = null_violations(batch, not_null_cols).count()
+        n_dup = duplicate_keys(batch, [business_key]).count()
+    else:
+        n_null, n_dup = counts.n_null, counts.n_dup
     if n_null:
         errors.append(f"{n_null} rows violate NOT NULL on {not_null_cols}")
 
-    n_dup = duplicate_keys(batch, [business_key]).count()
     if n_dup:
         errors.append(f"{n_dup} duplicate business keys within the batch")
 
@@ -79,31 +99,37 @@ def append_if_valid(
     existing: DataFrame | None = None,
     fk_checks: list[tuple[DataFrame, str, str]] | None = None,
     partition_by: list[str] | None = None,
+    counts: BatchCounts | None = None,
 ) -> IngestResult:
     """Fail-the-file atomicity: validate everything, then one append.
 
     partition_by is the physical analog of the reference's date index
     (init-db/init.sql:67): facts partition by month(date) so date-range
-    queries prune files instead of scanning."""
-    errors = validate_batch(batch, business_key, not_null_cols, existing, fk_checks)
+    queries prune files instead of scanning. `counts`, when the caller
+    already holds them, replace the NOT NULL / UNIQUE counting jobs and
+    the row count; the accept/reject decision is the same."""
+    errors = validate_batch(
+        batch, business_key, not_null_cols, existing, fk_checks, counts
+    )
     if errors:
         return IngestResult(table_name, source_file, "error", 0, errors)
 
-    # Row count via observe(): the metric rides the write job itself
-    # (the reference logs per-file row counts, etl/app.py; a post-write
-    # .count() would re-scan the batch — a second job for a number the
-    # write already saw).
-    from pyspark.sql import Observation
+    if counts is not None:
+        writer = batch.write.mode("append")
+    else:
+        # Row count via observe(): the metric rides the write job itself
+        # (the reference logs per-file row counts, etl/app.py; a
+        # post-write .count() would re-scan the batch — a second job for
+        # a number the write already saw).
+        from pyspark.sql import Observation
 
-    obs = Observation(f"ingest-{source_file}")
-    observed = batch.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    writer = observed.write.mode("append")
+        obs = Observation(f"ingest-{source_file}")
+        writer = batch.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    return IngestResult(
-        table_name, source_file, "success", int(obs.get["n_rows"]), []
-    )
+    n_rows = counts.n_rows if counts is not None else int(obs.get["n_rows"])
+    return IngestResult(table_name, source_file, "success", n_rows, [])
 
 
 def with_month_partition(df: DataFrame, ts_col: str, out: str = "month") -> DataFrame:

@@ -48,7 +48,7 @@ def run_service(args: argparse.Namespace, spark=None, schema: StructType | None 
     (caller awaits termination — split out for testability)."""
     from datawarehouse1_spark import get_spark
     from datawarehouse1_spark.schemas import TABLE_SCHEMAS
-    from datawarehouse1_spark.streaming.file_ingest import make_ingest_sink, stream_ingest
+    from datawarehouse1_spark.streaming.file_ingest import IngestSink, stream_ingest
 
     spark = spark or get_spark(f"ingest-{args.table}")
     schema = schema or TABLE_SCHEMAS[args.table]
@@ -59,7 +59,7 @@ def run_service(args: argparse.Namespace, spark=None, schema: StructType | None 
         spark,
         args.watch_dir,
         schema,
-        make_ingest_sink(sink_path, args.business_key, not_null),
+        IngestSink(sink_path, args.business_key, not_null),
         ckpt,
         fmt=args.format,
         trigger_seconds=args.interval,

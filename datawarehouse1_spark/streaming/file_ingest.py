@@ -11,13 +11,36 @@ etl/app.py:36-89 subsumed), trigger(processingTime) replaces the sleep,
 query restart from checkpoint replaces reconnect/backoff. foreachBatch
 runs validate-then-write per micro-batch, preserving the reference's
 fail-the-file atomicity.
+
+The xlsx commit (`service.run_service` -> `stream_ingest(fmt="xlsx")` ->
+`sources/excel.py` parse task -> `IngestSink.commit` ->
+`append_if_valid`) runs 2 Spark jobs per single-file trigger, 3 when a
+status row is written:
+
+1. one narrow `collect` of the per-file marker rows over the persisted
+   batch. It runs the parse task and fills the cache. The parse task
+   already holds each file as one pandas frame, so it counts the file's
+   rows, NOT NULL violations and in-file duplicate keys there;
+2. the `file_status` append, only when some file failed to parse (a
+   missing required column, an unreadable workbook);
+3. one append of every clean row, decided by `append_if_valid` from
+   those counts.
+
+Keys duplicated across files are checked with `duplicate_keys` (3 more
+jobs) only when a batch holds two or more parsed files; the result
+equals `validate_batch`'s batch-wide count. Non-xlsx formats keep
+`validate_batch`'s counting jobs. The parse task itself is cheap only
+in a worker where `zip_finders.install()` has run: without it, pyspark's
+per-task `importlib.invalidate_caches()` re-reads `pyspark.zip` ~16 times
+before the parse starts (~210-240 ms of worker CPU against ~40 ms, on a
+4-core x86 box).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -37,7 +60,7 @@ def stream_ingest(
     status_dir: str | None = None,
 ) -> StreamingQuery:
     """Watch a directory, enrich with lineage columns, hand each
-    micro-batch to `sink` (typically ingest_sink below). fmt='xlsx'
+    micro-batch to `sink` (typically an IngestSink below). fmt='xlsx'
     routes through the binaryFile source + per-task parse
     (sources/excel.py::xlsx_stream) — the reference's actual input
     format on the streaming path; other formats use the native file
@@ -47,10 +70,12 @@ def stream_ingest(
     durable status=error rows in `status_dir` (default:
     `<checkpoint_dir>/file_status`, queryable parquet) — the reference's
     per-file file_metadata status row (etl/app.py:271-275). A log-only
-    skip would leave operators with no record of dropped uploads."""
+    skip would leave operators with no record of dropped uploads. An
+    `IngestSink` also gets each file's counts from the parse task."""
     if fmt == "xlsx":
         from datawarehouse1_spark.sources.excel import xlsx_stream
 
+        checks = sink if isinstance(sink, IngestSink) else None
         # lineage columns are added inside the parse body
         stream = xlsx_stream(
             spark,
@@ -58,6 +83,8 @@ def stream_ingest(
             schema,
             glob=glob if glob != LOCK_GLOB else "[!~]*.xlsx",
             with_status=True,
+            business_key=checks.business_key if checks else None,
+            not_null_cols=checks.not_null_cols if checks else (),
         )
         sink = _with_status_sink(
             sink, status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
@@ -84,55 +111,98 @@ def stream_ingest(
 def _with_status_sink(
     inner: Callable[[DataFrame, int], None], status_dir: str
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink: route parse_error status rows to a
-    durable quarantine table (append-only parquet — one row per failed
-    file: source_file, parse_error, imported_at, batch_id), pass clean
-    rows (parse_error column dropped) to the wrapped sink. The batch is
-    persisted because it is consumed twice — without the persist each
-    filter would re-run the whole mapInPandas parse."""
+    """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output:
+    route failed files' marker rows to a durable quarantine table
+    (append-only parquet — one row per failed file: source_file,
+    parse_error, imported_at, batch_id, status) and pass the data rows
+    (parse_error and marker columns dropped) to the wrapped sink, with
+    the marker rows when it is an IngestSink. The batch is persisted
+    because it is consumed more than once; the marker collect is its
+    first consumer, so it runs the parse and fills the cache."""
+    from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, MARKER_COLS, NULL_ROWS
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
-            errors = batch.filter(F.col("parse_error").isNotNull()).select(
-                "source_file",
-                "parse_error",
-                "imported_at",
-                F.lit(batch_id).alias("batch_id"),
-                F.lit("error").alias("status"),
+            markers = (
+                batch.filter(F.col(FILE_ROWS).isNotNull())
+                .select("source_file", "parse_error", FILE_ROWS, NULL_ROWS, DUP_KEYS)
+                .collect()
             )
-            if not errors.isEmpty():
-                errors.write.mode("append").parquet(status_dir)
-            inner(batch.filter(F.col("parse_error").isNull()).drop("parse_error"), batch_id)
+            if any(m.parse_error is not None for m in markers):
+                batch.filter(F.col("parse_error").isNotNull()).select(
+                    "source_file",
+                    "parse_error",
+                    "imported_at",
+                    F.lit(batch_id).alias("batch_id"),
+                    F.lit("error").alias("status"),
+                ).write.mode("append").parquet(status_dir)
+            rows = batch.filter(F.col(FILE_ROWS).isNull()).drop("parse_error", *MARKER_COLS)
+            if isinstance(inner, IngestSink):
+                inner.commit(rows, batch_id, markers)
+            else:
+                inner(rows, batch_id)
         finally:
             batch.unpersist()
 
     return sink
 
 
-def make_ingest_sink(
-    table_path: str,
-    business_key: str,
-    not_null_cols: list[str],
-) -> Callable[[DataFrame, int], None]:
+class IngestSink:
     """foreachBatch body: validate-then-append per micro-batch (the
-    transaction-per-file analog). Invalid batches are skipped whole —
-    the streaming query keeps running (per-file try/except semantics,
-    etl/app.py:271-275)."""
-    from datawarehouse1_spark.operators.ingest import append_if_valid
+    transaction-per-file analog) into the parquet table at `table_path`.
+    Invalid batches are skipped whole — the streaming query keeps
+    running (per-file try/except semantics, etl/app.py:271-275). The
+    accept/reject decision is `operators.ingest.append_if_valid`, looked
+    up at call time."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def __init__(self, table_path: str, business_key: str, not_null_cols: list[str]):
+        self.table_path = table_path
+        self.business_key = business_key
+        self.not_null_cols = list(not_null_cols)
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        """A batch from a native file source: validate_batch counts it."""
+        from datawarehouse1_spark.operators import ingest
+
         if batch.isEmpty():
             return
-        append_if_valid(
+        ingest.append_if_valid(
             batch,
-            table_path,
-            business_key,
-            not_null_cols,
+            self.table_path,
+            self.business_key,
+            self.not_null_cols,
             source_file=f"batch-{batch_id}",
         )
 
-    return sink
+    def commit(self, rows: DataFrame, batch_id: int, markers: list[Row]) -> None:
+        """The data rows of an xlsx batch plus one marker row per file
+        (sources/excel.py): the counts come from the markers; keys are
+        re-counted batch-wide only when two or more files hold rows."""
+        from datawarehouse1_spark.operators import ingest
+        from datawarehouse1_spark.operators.warehouse import duplicate_keys
+        from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, NULL_ROWS
+
+        files = [m for m in markers if m.parse_error is None and m[FILE_ROWS]]
+        if not files:
+            return
+        if len(files) > 1:
+            n_dup = duplicate_keys(rows, [self.business_key]).count()
+        else:
+            n_dup = files[0][DUP_KEYS]
+        counts = ingest.BatchCounts(
+            n_rows=sum(m[FILE_ROWS] for m in files),
+            n_null=sum(m[NULL_ROWS] for m in files),
+            n_dup=n_dup,
+        )
+        ingest.append_if_valid(
+            rows,
+            self.table_path,
+            self.business_key,
+            self.not_null_cols,
+            source_file=", ".join(sorted(m.source_file for m in files)),
+            counts=counts,
+        )
 
 
 def stream_tumbling_counts(

@@ -6,9 +6,12 @@ sorted-by-name schema + order-insensitive value equality.
 
 from __future__ import annotations
 
+import io
 import math
 import os
+import zipfile
 from datetime import date, datetime
+from xml.sax.saxutils import escape
 
 import duckdb
 import pytest
@@ -113,8 +116,71 @@ SLOW_TESTS = {
 def pytest_collection_modifyitems(config, items):
     for item in items:
         mod = os.path.splitext(os.path.basename(str(item.fspath)))[0]
-        if mod in SLOW_MODULES or item.originalname in SLOW_TESTS:
+        if mod in SLOW_MODULES or getattr(item, "originalname", item.name) in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+def _xlsx_cell(col: int, row: int, value) -> str:
+    ref = f"{'ABCDEFGHIJ'[col]}{row}"
+    if value is None:
+        return ""
+    if isinstance(value, str):
+        return f'<c r="{ref}" t="inlineStr"><is><t>{escape(value)}</t></is></c>'
+    return f'<c r="{ref}"><v>{value}</v></c>'
+
+
+def _xlsx_bytes(header: list[str], rows: list[list]) -> bytes:
+    """A one-sheet workbook with inline strings and numeric cells, written
+    with the standard library in the subset sources/xlsx_mini.py reads;
+    None leaves the cell out (an empty cell)."""
+    body = []
+    for r, values in enumerate([header, *rows], start=1):
+        cells = "".join(_xlsx_cell(c, r, v) for c, v in enumerate(values))
+        body.append(f'<row r="{r}">{cells}</row>')
+    ns = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+    rel_ns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    pkg_rels = "http://schemas.openxmlformats.org/package/2006/relationships"
+    parts = {
+        "[Content_Types].xml": (
+            '<?xml version="1.0" encoding="UTF-8"?>'
+            '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
+            '<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>'
+            '<Default Extension="xml" ContentType="application/xml"/>'
+            '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
+            '<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
+            "</Types>"
+        ),
+        "_rels/.rels": (
+            f'<?xml version="1.0" encoding="UTF-8"?><Relationships xmlns="{pkg_rels}">'
+            f'<Relationship Id="rId1" Type="{rel_ns}/officeDocument" Target="xl/workbook.xml"/>'
+            "</Relationships>"
+        ),
+        "xl/workbook.xml": (
+            f'<?xml version="1.0" encoding="UTF-8"?><workbook {ns} xmlns:r="{rel_ns}">'
+            '<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets></workbook>'
+        ),
+        "xl/_rels/workbook.xml.rels": (
+            f'<?xml version="1.0" encoding="UTF-8"?><Relationships xmlns="{pkg_rels}">'
+            f'<Relationship Id="rId1" Type="{rel_ns}/worksheet" Target="worksheets/sheet1.xml"/>'
+            "</Relationships>"
+        ),
+        "xl/worksheets/sheet1.xml": (
+            f'<?xml version="1.0" encoding="UTF-8"?><worksheet {ns}><sheetData>'
+            + "".join(body)
+            + "</sheetData></worksheet>"
+        ),
+    }
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, text in parts.items():
+            zf.writestr(name, text)
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="session")
+def xlsx_bytes():
+    """`xlsx_bytes(header, rows) -> bytes`: a one-sheet workbook."""
+    return _xlsx_bytes
 
 
 @pytest.fixture(scope="session")

@@ -7,7 +7,6 @@ from __future__ import annotations
 import io
 import struct
 import wave
-from pathlib import Path
 
 import numpy as np
 import pytest
@@ -328,10 +327,11 @@ def test_audio_features_single_sample_no_nan():
     assert np.isfinite(feat).all(), f"NaN/inf in features: {feat}"
 
 
-def test_xlsx_mini_sheet_index_out_of_range():
+def test_xlsx_mini_sheet_index_out_of_range(xlsx_bytes):
     from datawarehouse1_spark.sources.xlsx_mini import parse_xlsx_bytes
 
-    data = (Path("/root/reference/data/excel/clients.xlsx")).read_bytes()
+    data = xlsx_bytes(["client_id", "nom"], [["CLI001", "Diallo"]])
+    assert parse_xlsx_bytes(data)["client_id"].tolist() == ["CLI001"]
     with pytest.raises(ValueError, match="out of range"):
         parse_xlsx_bytes(data, sheet=3)
 

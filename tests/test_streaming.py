@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from datawarehouse1_spark.streaming.file_ingest import (
-    make_ingest_sink,
+    IngestSink,
     stream_ingest,
     stream_sessionize,
     stream_tumbling_counts,
@@ -48,7 +48,7 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         spark,
         str(watch) + "/*",
         SCHEMA,
-        make_ingest_sink(sink_path, "produit_id", ["produit_id", "nom"]),
+        IngestSink(sink_path, "produit_id", ["produit_id", "nom"]),
         ckpt,
         trigger_seconds=1,
     )
@@ -85,7 +85,7 @@ def test_stream_invalid_batch_skipped_stream_survives(spark, tmp_path):
         spark,
         str(watch) + "/*",
         SCHEMA,
-        make_ingest_sink(sink_path, "produit_id", ["produit_id", "nom"]),
+        IngestSink(sink_path, "produit_id", ["produit_id", "nom"]),
         ckpt,
         trigger_seconds=1,
     )

@@ -1,0 +1,172 @@
+"""One xlsx trigger through service.run_service: the commit's Spark-job
+budget and its accept/reject law.
+
+Every case places its files in the watched directory before the stream
+starts, so they all land in the stream's first trigger. Jobs are counted
+from the JVM status store (`sc._jsc.sc().statusStore()`): the jobs of
+that trigger are the ones started between the stream's start and
+`processAllAvailable()`. The budget per trigger: one narrow collect of
+the per-file marker rows, the `file_status` append when a file failed
+to parse, the table append when the batch is accepted, and the three
+jobs of the batch-wide `duplicate_keys` count when two or more files
+parsed. A rejected batch's errors must equal what `validate_batch`
+reports over the same parsed rows.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from datawarehouse1_spark.operators import ingest
+from datawarehouse1_spark.schemas import BUSINESS_KEYS, NOT_NULL, VENTES
+from datawarehouse1_spark.service import build_parser, run_service
+from datawarehouse1_spark.sources.excel import read_xlsx_dir
+
+HEADER = ["vente_id", "client_id", "produit_id", "quantite", "prix_total", "date_vente"]
+ROWS = 5
+
+
+def _ventes(prefix: str, ids: list[str] | None = None) -> list[list]:
+    ids = ids or [f"{prefix}-{i}" for i in range(ROWS)]
+    return [
+        [v, f"CLI{i:03d}", f"PRD{i:03d}", i + 1, 10.25 * (i + 1), 45658.5 + i]
+        for i, v in enumerate(ids)
+    ]
+
+
+def _without(header: list[str], rows: list[list], col: str) -> tuple[list[str], list[list]]:
+    i = header.index(col)
+    return header[:i] + header[i + 1:], [r[:i] + r[i + 1:] for r in rows]
+
+
+def _null_key(rows: list[list]) -> list[list]:
+    return [[None, *rows[0][1:]], *rows[1:]]
+
+
+def _in_file_dup(rows: list[list]) -> list[list]:
+    return [*rows, [rows[0][0], *rows[-1][1:]]]
+
+
+# name -> ({file: (header, rows)}, rows appended, status rows, result, job budget)
+CASES = {
+    "valid": ({"ventes_a.xlsx": (HEADER, _ventes("A"))}, ROWS, 0, "success", 2),
+    "valid_and_missing_column": (
+        {
+            "ventes_a.xlsx": (HEADER, _ventes("A")),
+            "ventes_b.xlsx": _without(HEADER, _ventes("B"), "quantite"),
+        },
+        ROWS, 1, "success", 3,
+    ),
+    "valid_and_null_key": (
+        {
+            "ventes_a.xlsx": (HEADER, _ventes("A")),
+            "ventes_b.xlsx": (HEADER, _null_key(_ventes("B"))),
+        },
+        0, 0, "error", 4,
+    ),
+    "cross_file_duplicate": (
+        {
+            "ventes_a.xlsx": (HEADER, _ventes("A")),
+            "ventes_b.xlsx": (HEADER, _ventes("B", ["A-0", *[f"B-{i}" for i in range(1, ROWS)]])),
+        },
+        0, 0, "error", 4,
+    ),
+    "in_file_duplicate": (
+        {"ventes_a.xlsx": (HEADER, _in_file_dup(_ventes("A")))}, 0, 0, "error", 1,
+    ),
+}
+
+
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job-end events arrive asynchronously
+    jobs = sc.statusStore().jobsList(None)
+    it = jobs.iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
+    files, want_rows, want_status, want_result, budget = CASES[case]
+    watch, root = tmp_path / "watch", tmp_path / "tables"
+    watch.mkdir()
+    for name, (header, rows) in files.items():
+        (watch / name).write_bytes(xlsx_bytes(header, rows))
+
+    results = []
+    append = ingest.append_if_valid
+
+    def recorded(*args, **kwargs):
+        results.append(append(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(ingest, "append_if_valid", recorded)
+    args = build_parser().parse_args([
+        "--watch-dir", str(watch),
+        "--table-root", str(root),
+        "--table", "ventes",
+        "--business-key", BUSINESS_KEYS["ventes"],
+        "--not-null", ",".join(NOT_NULL["ventes"]),
+        "--interval", "0",
+        "--format", "xlsx",
+    ])
+    before = _job_ids(spark)
+    query = run_service(args, spark=spark)
+    try:
+        query.processAllAvailable()
+        jobs = len(_job_ids(spark) - before)
+    finally:
+        query.stop()
+
+    table, status = root / "ventes", root / "_checkpoints" / "ventes" / "file_status"
+    n_rows = spark.read.parquet(str(table)).count() if table.exists() else 0
+    n_status = spark.read.parquet(str(status)).count() if status.exists() else 0
+    assert (n_rows, n_status) == (want_rows, want_status)
+
+    assert len(results) == 1
+    result = results[0]
+    assert result.status == want_result
+    parsed = sorted(n for n, (h, _) in files.items() if h == HEADER)
+    assert result.source_file == ", ".join(parsed)
+    if want_result == "success":
+        assert result.n_rows == want_rows and not result.errors
+    else:  # every file of a rejected case parses
+        batch = read_xlsx_dir(spark, str(watch), VENTES)
+        assert result.errors == ingest.validate_batch(
+            batch, BUSINESS_KEYS["ventes"], NOT_NULL["ventes"]
+        )
+    assert jobs <= budget, jobs
+
+
+def test_plain_sink_gets_data_rows_only(spark, tmp_path, xlsx_bytes):
+    """A foreachBatch sink that is not an IngestSink sees the parsed rows
+    with the lineage columns and none of the status/marker columns."""
+    from datawarehouse1_spark.streaming.file_ingest import stream_ingest
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    (watch / "ventes_a.xlsx").write_bytes(xlsx_bytes(HEADER, _ventes("A")))
+    (watch / "ventes_b.xlsx").write_bytes(xlsx_bytes(*_without(HEADER, _ventes("B"), "quantite")))
+    seen = []
+    query = stream_ingest(
+        spark,
+        str(watch),
+        VENTES,
+        lambda batch, batch_id: seen.append((batch.columns, batch.collect())),
+        str(tmp_path / "ckpt"),
+        fmt="xlsx",
+        trigger_seconds=0,
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert len(seen) == 1
+    columns, rows = seen[0]
+    assert columns == [*HEADER, "source_file", "imported_at"]
+    assert sorted(r.vente_id for r in rows) == [f"A-{i}" for i in range(ROWS)]
+    status = spark.read.parquet(str(tmp_path / "ckpt" / "file_status")).collect()
+    assert [r.source_file for r in status] == ["ventes_b.xlsx"]

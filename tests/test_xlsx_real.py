@@ -132,7 +132,7 @@ def test_streaming_xlsx_ingest_real_bytes(tmp_path, spark):
     validate-then-append to the warehouse table, lock files skipped,
     already-seen files not re-ingested on the next batch."""
     from datawarehouse1_spark.streaming.file_ingest import (
-        make_ingest_sink,
+        IngestSink,
         stream_ingest,
     )
 
@@ -156,7 +156,7 @@ def test_streaming_xlsx_ingest_real_bytes(tmp_path, spark):
         spark,
         str(watch),
         schema,
-        make_ingest_sink(table_path, "vente_id", ["vente_id", "client_id"]),
+        IngestSink(table_path, "vente_id", ["vente_id", "client_id"]),
         str(tmp_path / "ckpt"),
         fmt="xlsx",
         trigger_seconds=1,
@@ -186,7 +186,7 @@ def test_streaming_xlsx_skips_invalid_file(tmp_path, spark):
     line alone gives operators no queryable record). Later valid files
     still ingest."""
     from datawarehouse1_spark.streaming.file_ingest import (
-        make_ingest_sink,
+        IngestSink,
         stream_ingest,
     )
 
@@ -210,7 +210,7 @@ def test_streaming_xlsx_skips_invalid_file(tmp_path, spark):
         spark,
         str(watch),
         schema,
-        make_ingest_sink(table_path, "vente_id", ["vente_id"]),
+        IngestSink(table_path, "vente_id", ["vente_id"]),
         str(tmp_path / "ckpt"),
         fmt="xlsx",
         trigger_seconds=1,
