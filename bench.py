@@ -16,6 +16,7 @@ import os
 import re
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -88,6 +89,42 @@ def spread_digits(spreads: dict[str, float]) -> str:
         format(min(15, math.ceil(round(s, 4) * 10)), "x")
         for s in spreads.values()
     )
+
+
+def _famstrip(key: str) -> str:
+    """'q_dedup_minhash_lsh' -> 'minhash_lsh' (unique across each
+    line's key set — pinned by tests/test_bench_tail.py). Single-segment
+    names ('q_foo') keep their full stripped name (ADVICE r14: the old
+    [1] indexing crashed output emission AFTER all timings were
+    gathered)."""
+    return key[2:].split("_", 1)[-1]
+
+
+def _tpch_key(key: str) -> str:
+    """'q_tpch_q7' -> '7'. A non-canonical name (no q<digits>) falls
+    back to its suffix after 'q_tpch_', or to the whole name when it
+    lacks that prefix, instead of raising AFTER all queries ran but
+    BEFORE the parseable tail printed."""
+    if m := re.match(r"q_tpch_q(\d+)", key):
+        return m.group(1)
+    return key[len("q_tpch_") :] if key.startswith("q_tpch_") else key
+
+
+def flat_per_query(
+    sections: tuple[dict[str, float], ...], tpch: dict[str, float]
+) -> dict[str, float]:
+    """The final line's flat per-query map across every section, keyed
+    by the same short names as the per-section lines. Every key whose
+    short name collides with another key's keeps its full name, so no
+    two queries merge and none is favoured by order."""
+    short = {k: _famstrip(k) for section in sections for k in section}
+    short.update({k: _tpch_key(k) for k in tpch})
+    seen = Counter(short.values())
+    return {
+        (k if seen[short[k]] > 1 else short[k]): round(v, 2)
+        for section in (*sections, tpch)
+        for k, v in section.items()
+    }
 
 
 def run_one(spark, fn, sf_dir: str, timed_runs: int = 2) -> tuple[float, float]:
@@ -338,7 +375,7 @@ def main() -> None:
     # BENCH_r12's tail is exactly 2000), so the FULL record above is for
     # local runs; the artifact-visible record is the compact lines
     # below, printed least-critical FIRST so an overflow truncates from
-    # the top (tests/test_accuracy_metrics.py pins the worst-case sum of
+    # the top (tests/test_bench_tail.py pins the worst-case sum of
     # these lines under the tail budget):
     #   1. analytics_per_query — the 9 most expensive analytics-surface
     #      timings (full names; VERDICT r12 #5)
@@ -368,14 +405,6 @@ def main() -> None:
     #      canary_rN/canary_rM before calling a delta a regression; a
     #      per-query delta inside its spread digit is box noise
     #      either way.
-    def _famstrip(key: str) -> str:
-        """'q_dedup_minhash_lsh' -> 'minhash_lsh' (unique across each
-        line's key set — pinned by tests/test_accuracy_metrics.py).
-        Single-segment names ('q_foo') keep their full stripped name
-        (ADVICE r14: the old [1] indexing crashed output emission AFTER
-        all timings were gathered)."""
-        return key[2:].split("_", 1)[-1]
-
     if analytics:
         print(
             json.dumps(
@@ -395,7 +424,7 @@ def main() -> None:
     )
     if metrics:
         # family-stripped keys in every compact line: the tail budget
-        # is real (tests/test_accuracy_metrics.py pins the worst case)
+        # is real (tests/test_bench_tail.py pins the worst case)
         mline = {
             "rows_only_metrics": {_famstrip(k): v for k, v in metrics.items()}
         }
@@ -405,17 +434,8 @@ def main() -> None:
     print(
         json.dumps(
             {
-                # guarded: the section collects every q_tpch_* name, so
-                # a non-canonical one (no q<digits>) must fall back to
-                # its suffix instead of AttributeError-ing AFTER all
-                # queries ran but BEFORE the parseable tail printed
                 "tpch_per_query": {
-                    (
-                        m.group(1)
-                        if (m := re.match(r"q_tpch_q(\d+)", k))
-                        else k[len("q_tpch_") :]
-                    ): round(v, 2)
-                    for k, v in tpch.items()
+                    _tpch_key(k): round(v, 2) for k, v in tpch.items()
                 }
             },
             separators=(",", ":"),
@@ -461,21 +481,13 @@ def main() -> None:
     # existing key above is unchanged, methodology untouched. Keys are
     # the same family-stripped names (tpch: bare "1".."22") as the
     # per-section lines; a cross-section strip collision (none today —
-    # pinned by tests/test_accuracy_metrics.py) falls back to the full
-    # name rather than silently merging two queries. Because this line
+    # pinned by tests/test_bench_tail.py) gives every colliding key its
+    # full name rather than silently merging two queries. Because this line
     # alone now approaches the driver's 2000-char capture, it also
     # carries the rows-only accuracy metrics and the spread digits:
     # everything the artifact needs survives even when the (redundant)
     # per-section lines above truncate from the top.
-    per_query: dict[str, float] = {}
-    for section in (timings, llm, analytics):
-        for k, v in section.items():
-            sk = _famstrip(k)
-            per_query[k if sk in per_query else sk] = round(v, 2)
-    for k, v in tpch.items():
-        m = re.match(r"q_tpch_q(\d+)", k)
-        sk = m.group(1) if m else k[len("q_tpch_") :]
-        per_query[k if sk in per_query else sk] = round(v, 2)
+    per_query = flat_per_query((timings, llm, analytics), tpch)
     if per_query:
         compact["per_query"] = per_query
     if metrics:

@@ -52,10 +52,11 @@ TS_COLUMNS: dict[str, tuple[str, ...]] = {
 
 
 # Per-session memo of the resolved (lazy) table DataFrames — the moral
-# equivalent of a metastore catalog: `spark.read.parquet` costs ~100 ms
-# per call in driver-side footer/py4j work (measured r16), and a query
-# that touches five tables paid half a second of pure scan-node
-# construction on EVERY build. The memo holds only the ANALYZED LAZY
+# equivalent of a metastore catalog. A miss runs no Spark job (the
+# schema comes from footer_schema), but it still pays the py4j
+# DataFrame construction and analysis of a fresh relation (file
+# listing, schema resolution), and a query that touches five tables
+# would pay that on EVERY build. The memo holds only the ANALYZED LAZY
 # PLAN (schema + file listing), never data or results: every execution
 # still scans the parquet inputs. Keyed by the owning SparkSession
 # (id() + applicationId — two sessions sharing one context have
@@ -65,9 +66,11 @@ TS_COLUMNS: dict[str, tuple[str, ...]] = {
 # staged table under the same path (the test_r10_hardening welch
 # pattern) yields a fresh plan instead of a stale file listing AND
 # evicts the stale entry (one live entry per (session, path), no
-# unbounded growth under repeated overwrites). Missing/unstat-able
-# paths and nested-directory tables bypass the memo.
-# SPARK_GRAFT_TABLE_MEMO=0 disables.
+# unbounded growth under repeated overwrites). An insert also evicts
+# every entry of another applicationId: those plans belong to a
+# stopped context and would otherwise pin its JVM objects.
+# Missing/unstat-able paths and nested-directory tables bypass the
+# memo. SPARK_GRAFT_TABLE_MEMO=0 disables.
 _TABLE_MEMO: dict[tuple, tuple[object, DataFrame]] = {}
 
 
@@ -104,6 +107,149 @@ def _path_fingerprint(path: str):
     return tuple(entries)
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _schema_file(path: str) -> str | None:
+    """The one file whose footer Spark's non-merging inference reads:
+    the path itself, or the first data file of a flat directory (names
+    starting with `_` or `.` are not data, as in Spark's file index).
+    None for an empty or nested directory, or one with parquet summary
+    files (Spark reads `_metadata`/`_common_metadata` first)."""
+    if os.path.isfile(path):
+        return path
+    try:
+        names = sorted(os.listdir(path))
+    except OSError:
+        return None
+    data = []
+    for name in names:
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if name.startswith(("_", ".")):
+            continue
+        full = os.path.join(path, name)
+        if os.path.isdir(full):
+            return None
+        data.append(full)
+    return data[0] if data else None
+
+
+def _footer_mappable(at) -> bool:
+    """Arrow types whose Spark parquet reading equals from_arrow_type's
+    mapping. Everything else (ns timestamps, unsigned ints, large,
+    dictionary and map types, time, float16, ...) stays with Spark's
+    own inference."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(at):
+        return at.num_fields > 0 and all(_footer_mappable(f.type) for f in at)
+    if pat.is_list(at):
+        return _footer_mappable(at.value_type)
+    if pat.is_timestamp(at):
+        return at.unit != "ns"
+    return any(
+        pred(at)
+        for pred in (
+            pat.is_boolean, pat.is_int8, pat.is_int16, pat.is_int32,
+            pat.is_int64, pat.is_float32, pat.is_float64, pat.is_string,
+            pat.is_binary, pat.is_date32, pat.is_decimal128,
+        )
+    )
+
+
+def _arrow_ts_zones(fields):
+    """Whether each timestamp leaf under `fields` carries a time zone,
+    depth first (parquet's column order)."""
+    import pyarrow.types as pat
+
+    for f in fields:
+        if pat.is_struct(f.type):
+            yield from _arrow_ts_zones(f.type)
+        elif pat.is_list(f.type):
+            yield from _arrow_ts_zones([f.type.value_field])
+        elif pat.is_timestamp(f.type):
+            yield f.type.tz is not None
+
+
+def _as_nullable(dt):
+    """Spark's DataType.asNullable: a file-source relation reports every
+    field, element and value nullable, whatever the footer says."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def footer_schema(spark: SparkSession, path: str):
+    """The StructType Spark's schema inference gives the flat parquet
+    file or directory at `path`, read from one footer on the driver with
+    pyarrow: no Spark job (inference runs one per call, ~100 ms on a
+    4-core box).
+
+    Spark-written files carry their schema as JSON in the footer, which
+    Spark's inference prefers; other files map through from_arrow_schema.
+    Returns None wherever only Spark's inference is exact — a session
+    merging schemas or reading binary as string, an empty, nested or
+    summary-file directory, an unreadable footer, INT96 or nanosecond
+    timestamps (bigint under nanosAsLong), a footer whose timestamp
+    zones disagree with its arrow schema, and types outside
+    _footer_mappable — and the caller lets Spark infer.
+
+    A directory is assumed to hold one schema across its part files,
+    as Spark's non-merging inference assumes too."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    conf = spark.conf
+    if (
+        conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+        or conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true"
+    ):
+        return None
+    file = _schema_file(path)
+    if file is None:
+        return None
+    try:
+        meta = pq.read_metadata(file)
+        spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+        if spark_json is not None:
+            return _as_nullable(StructType.fromJson(json.loads(spark_json)))
+        columns = [meta.schema.column(i) for i in range(len(meta.schema))]
+        arrow = meta.schema.to_arrow_schema()
+    except (OSError, ValueError, KeyError, pa.ArrowException):
+        return None
+    parquet_ts = []
+    for col in columns:
+        if col.physical_type == "INT96":
+            return None
+        if col.logical_type.type == "TIMESTAMP":
+            ts = json.loads(col.logical_type.to_json())
+            if ts["timeUnit"] == "nanoseconds":
+                return None
+            parquet_ts.append(ts["isAdjustedToUTC"])
+    if not all(_footer_mappable(f.type) for f in arrow):
+        return None
+    if list(_arrow_ts_zones(arrow)) != parquet_ts:
+        return None
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    return _as_nullable(
+        from_arrow_schema(arrow, prefer_timestamp_ntz=ntz.lower() == "true")
+    )
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Parquet scan => vectorized reader, pushdown.
     Timestamp columns (TS_COLUMNS) are normalized to TIMESTAMP_NTZ."""
@@ -114,7 +260,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     memo_on = (
         os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0" and fp is not None
     )
-    key = (id(spark), spark.sparkContext.applicationId, path)
+    app_id = spark.sparkContext.applicationId
+    key = (id(spark), app_id, path)
     if memo_on:
         cached = _TABLE_MEMO.get(key)
         if cached is not None and cached[0] == fp:
@@ -123,12 +270,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ts_cols:
         # Runtime-settable; harmless when no file is TIMESTAMP(NANOS).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    read_path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, read_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(read_path)
     for col in ts_cols:
         df = _normalize_ts_column(df, name, col)
     if memo_on:
         # insert-replaces: the previous fingerprint's entry for this
-        # (session, path) is evicted, not accumulated (ADVICE r16)
+        # (session, path) is evicted, not accumulated (ADVICE r16), and
+        # so is every entry of a stopped context
+        for stale in [k for k in _TABLE_MEMO if k[1] != app_id]:
+            del _TABLE_MEMO[stale]
         _TABLE_MEMO[key] = (fp, df)
     return df
 

@@ -45,7 +45,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from datawarehouse1_spark.catalog import TABLES
+from datawarehouse1_spark.catalog import TABLES, footer_schema
 
 
 def register_warehouse(
@@ -54,18 +54,35 @@ def register_warehouse(
     """Publish the warehouse tables as external parquet catalog tables.
 
     Idempotent; `database` namespaces them (`warehouse.lineitem`), and
-    the files stay where they are — registration is metadata-only, so
-    it is O(1) regardless of data size.
+    the files stay where they are. Each table's columns come from its
+    parquet footer (catalog.footer_schema, read on the driver), so
+    registration runs no Spark job; a bare `CREATE TABLE ... LOCATION`
+    would run one per table to infer the schema. Tables the footer
+    mapping does not cover, or whose fields carry metadata that DDL
+    would drop, still let Spark infer. The stored schema is the same
+    either way.
     """
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
+        schema = footer_schema(spark, path)
+        columns = _column_ddl(spark, schema) if schema is not None else None
         spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {database}.{name} "
-            f"USING parquet LOCATION '{path}'"
+            f"CREATE TABLE IF NOT EXISTS {database}.{name}"
+            + (f" ({columns})" if columns else "")
+            + f" USING parquet LOCATION '{path}'"
         )
+
+
+def _column_ddl(spark: SparkSession, schema):
+    """Spark's column DDL for `schema`, or None when the DDL would not
+    parse back to the same schema (field metadata other than comments)."""
+    types = spark._jvm.org.apache.spark.sql.types
+    jschema = types.DataType.fromJson(schema.json())
+    ddl = jschema.toDDL()
+    return ddl if types.StructType.fromDDL(ddl).equals(jschema) else None
 
 
 # Semantic layer: curated SQL views published alongside the raw tables

@@ -125,11 +125,17 @@ def test_streaming_tumbling_and_session_plans_start(spark, tmp_path):
         .outputMode("append").option("checkpointLocation", str(tmp_path / "c2")).start()
     )
     try:
-        time.sleep(3)
-        q1.processAllAvailable()
-        q2.processAllAvailable()
+        # processAllAvailable() can chase a rate source forever when the
+        # batches run slower than it generates rows; wait for each
+        # query's first progress report instead, up to a deadline
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline and (
+            q1.lastProgress is None or q2.lastProgress is None
+        ):
+            time.sleep(0.5)
         assert q1.isActive and q2.isActive
         assert q1.lastProgress is not None
+        assert q2.lastProgress is not None
     finally:
         q1.stop()
         q2.stop()
