@@ -112,10 +112,17 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 def _schema_file(path: str) -> str | None:
     """The one file whose footer Spark's non-merging inference reads:
-    the path itself, or the first data file of a flat directory (names
-    starting with `_` or `.` are not data, as in Spark's file index).
-    None for an empty or nested directory, or one with parquet summary
-    files (Spark reads `_metadata`/`_common_metadata` first)."""
+    the path itself, or the first data file of a flat directory in
+    Spark's order (by name, as its full paths share the directory).
+    Data files are what Spark's file index keeps: not names starting
+    with `.`, nor with `_` unless they hold a `=`, nor names ending in
+    `._COPYING_`. None for an empty or nested directory, or one with
+    parquet summary files (Spark reads `_metadata`/`_common_metadata`
+    first).
+
+    Part files that disagree on schema need no special case: Spark's
+    inference reads this same one file and reports its schema, and a
+    scan with either schema fails or converts the other files alike."""
     if os.path.isfile(path):
         return path
     try:
@@ -126,7 +133,11 @@ def _schema_file(path: str) -> str | None:
     for name in names:
         if name.startswith(("_metadata", "_common_metadata")):
             return None
-        if name.startswith(("_", ".")):
+        if (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+        ):
             continue
         full = os.path.join(path, name)
         if os.path.isdir(full):

@@ -3,9 +3,21 @@ as validate-then-write over Spark tables.
 
 Transaction-per-file semantics (etl/app.py:162,191,220: one to_sql per
 file, constraint violation rolls back the whole file) cannot lean on
-Parquet transactions — so the pipeline REJECTS BEFORE WRITING: a file's
-batch is appended only if every constraint check passes; otherwise the
-whole batch is rejected and recorded status=error. Never write-then-clean.
+Parquet transactions — so the pipeline REJECTS BEFORE PUBLISH: a file's
+batch reaches the table only if every constraint check passes; otherwise
+the whole batch is rejected and recorded status=error. Never
+write-then-clean: readers of the table never see unvalidated rows.
+
+A batch reaches the table in one of two ways. `append_if_valid` appends
+it with a Spark write after the checks. A batch already written to a
+staging directory outside the table (`Staged`, the streaming xlsx
+commit in streaming/file_ingest.py) is published instead: its part
+files are renamed into the table through the Hadoop FileSystem API, so
+publishing runs no Spark job, and a rejected batch's staging is deleted
+without the table ever listing it. Published part files are named after
+the batch (`Staged.name`), which makes publishing idempotent: a batch
+replayed after a crash between the publish and the stream's commit log
+finds its files in place and adds nothing.
 """
 
 from __future__ import annotations
@@ -29,6 +41,55 @@ class IngestResult:
     status: str  # success | error
     n_rows: int = 0
     errors: list[str] = field(default_factory=list)
+
+
+@dataclass(frozen=True)
+class Staged:
+    """A batch written to `path`, a directory outside the table. `name`
+    identifies the batch among every batch published into the table:
+    its part files are published as `part-<name>-<n>` (n in the staged
+    files' name order, which is Spark's task order)."""
+
+    path: str
+    name: str
+
+
+def _fs_path(spark, path: str):
+    """(Hadoop FileSystem, Path) of `path` under the session's conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def qualified_path(spark, path: str) -> str:
+    """`path` with its file system's scheme, relative paths resolved."""
+    fs, hpath = _fs_path(spark, path)
+    return fs.makeQualified(hpath).toString()
+
+
+def delete_path(spark, path: str) -> None:
+    """Remove `path` and everything below it, if it exists."""
+    fs, hpath = _fs_path(spark, path)
+    fs.delete(hpath, True)
+
+
+def publish_staged(spark, staged: Staged, table_path: str) -> None:
+    """Rename the part files of `staged` into `table_path`. A target
+    name that already exists belongs to an earlier publish of the same
+    batch and is left as it is. Each file
+    appears in the table atomically (one rename); a batch of several
+    part files appears file by file, as a Spark append's job commit
+    also moves them."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, src = _fs_path(spark, staged.path)
+    table = Path(table_path)
+    fs.mkdirs(table)
+    names = sorted(st.getPath().getName() for st in fs.listStatus(src))
+    parts = [n for n in names if n.startswith("part-")]
+    for i, part in enumerate(parts):
+        ext = part[part.index("."):] if "." in part else ""
+        dst = Path(table, f"part-{staged.name}-{i:05d}{ext}")
+        if not fs.exists(dst) and not fs.rename(Path(src, part), dst):
+            raise OSError(f"could not publish {staged.path}/{part} as {dst}")
 
 
 @dataclass(frozen=True)
@@ -100,6 +161,7 @@ def append_if_valid(
     fk_checks: list[tuple[DataFrame, str, str]] | None = None,
     partition_by: list[str] | None = None,
     counts: BatchCounts | None = None,
+    staged: Staged | None = None,
 ) -> IngestResult:
     """Fail-the-file atomicity: validate everything, then one append.
 
@@ -107,13 +169,22 @@ def append_if_valid(
     (init-db/init.sql:67): facts partition by month(date) so date-range
     queries prune files instead of scanning. `counts`, when the caller
     already holds them, replace the NOT NULL / UNIQUE counting jobs and
-    the row count; the accept/reject decision is the same."""
+    the row count; the accept/reject decision is the same. With
+    `staged` (which `batch` reads, and `counts` describes), an accepted
+    batch is published by renaming its staged files (publish_staged)
+    instead of being written again; a rejected one is left in staging
+    for the caller to delete."""
+    if staged is not None and (counts is None or partition_by):
+        raise ValueError("a staged batch needs counts and cannot be partitioned")
     errors = validate_batch(
         batch, business_key, not_null_cols, existing, fk_checks, counts
     )
     if errors:
         return IngestResult(table_name, source_file, "error", 0, errors)
 
+    if staged is not None:
+        publish_staged(batch.sparkSession, staged, table_path)
+        return IngestResult(table_name, source_file, "success", counts.n_rows, [])
     if counts is not None:
         writer = batch.write.mode("append")
     else:

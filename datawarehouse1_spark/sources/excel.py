@@ -23,22 +23,29 @@ On the streaming ingest path (xlsx_stream(with_status=True)) the parse
 task is also where the per-file constraint checks run: each file's row
 count, NOT NULL violations and in-file duplicate business keys are
 counted on the pandas frame the task already holds and emitted as one
-marker row per file. The sink reads the markers with one narrow collect
-and commits a single-file trigger in 2 Spark jobs (3 with a status row);
-see streaming/file_ingest.py. The task's fixed cost is small only
-because the package installs zip_finders on import: pyspark invalidates
-import caches before every task, and on CPython 3.11 that re-reads
-pyspark.zip's directory once per cached sub-package finder. Measured on
-a 4-core x86 box, a reused worker spent ~210-240 ms of CPU between two
-tasks without the fix and ~40 ms with it.
+marker row per file. The sink gathers the markers with observe() on the
+same write that stages the rows, and commits a single-file trigger in 1
+Spark job (2 with a status row); see streaming/file_ingest.py. The
+worksheet XML is read by one regex scan (sources/xlsx_mini.py), and the
+common column shapes coerce column-wise: on a 4-core x86 box the task
+body for a 2,000-row ventes file (parse, coerce, counts, Arrow batch)
+takes ~32-54 ms, against ~125-130 ms with the ElementTree walk and
+element-wise coercion. The task's fixed cost is small only because the package
+installs zip_finders on import: pyspark invalidates import caches before
+every task, and on CPython 3.11 that re-reads pyspark.zip's directory
+once per cached sub-package finder. Measured on a 4-core x86 box, a
+reused worker spent ~210-240 ms of CPU between two tasks without the
+fix and ~40 ms with it.
 """
 
 from __future__ import annotations
 
+import datetime
 import io
 import os
 from collections.abc import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +111,60 @@ def _xlsx_out_schema(schema: StructType, with_status: bool = False) -> StructTyp
     return out
 
 
+_EXCEL_EPOCH = datetime.datetime(1899, 12, 30)
+_SECOND = datetime.timedelta(seconds=1)
+# The serial seconds a datetime can hold, and those a datetime64[ns] can.
+_DATETIME_S = (
+    (datetime.datetime.min - _EXCEL_EPOCH) // _SECOND,
+    (datetime.datetime.max.replace(microsecond=0) - _EXCEL_EPOCH) // _SECOND,
+)
+_NS_S = (
+    (pd.Timestamp.min.ceil("s").to_pydatetime() - _EXCEL_EPOCH) // _SECOND,
+    (pd.Timestamp.max.floor("s").to_pydatetime() - _EXCEL_EPOCH) // _SECOND,
+)
+
+
+def _strings(s: pd.Series) -> pd.Series | None:
+    """A column of str values and None/NaN as the element-wise
+    conversion gives it (the same strings, None for NaN) in one pass;
+    None for any other column."""
+    if s.dtype != object or pd.api.types.infer_dtype(s, skipna=True) not in ("string", "empty"):
+        return None
+    missing = s.isna()
+    if not missing.any():
+        return s
+    if not all(v is None or isinstance(v, float) for v in s[missing]):
+        return None  # NaT / pd.NA render as text element-wise
+    return s.where(~missing, None)
+
+
+def _excel_serials(s: pd.Series) -> pd.Series | None:
+    """A numeric column of Excel serials as timestamps, equal to the
+    element-wise `epoch + timedelta(seconds=round(v * 86400))`: Python's
+    round() and np.rint both round half to even, and every serial within
+    the datetime range is exact in float64 seconds. Within datetime64[ns]
+    the column is datetime64[ns] with NaT for a missing cell; past it,
+    datetime objects and None, as pandas infers the element-wise result.
+    None (the caller converts element-wise) for a non-numeric column, a
+    column without values, and any value that leaves the datetime range,
+    where the element-wise conversion raises."""
+    if s.dtype.kind not in "if":
+        return None
+    seconds = np.rint(s.to_numpy(dtype="float64") * 86400)
+    present = ~np.isnan(seconds)
+    if not present.any():
+        return None
+    lo, hi = seconds[present].min(), seconds[present].max()
+    if not (_DATETIME_S[0] <= lo and hi <= _DATETIME_S[1]):
+        return None  # also catches ±inf
+    offsets = np.where(present, seconds, 0).astype("int64").astype("m8[s]")
+    stamps = np.datetime64(_EXCEL_EPOCH, "s") + offsets
+    stamps[~present] = np.datetime64("NaT")
+    if _NS_S[0] <= lo and hi <= _NS_S[1]:
+        return pd.Series(stamps.astype("M8[ns]"), index=s.index)
+    return pd.Series(stamps.astype("M8[us]").astype(object), index=s.index, dtype=object)
+
+
 def _coerce_to_fields(out: pd.DataFrame, fields) -> pd.DataFrame:
     """Coerce parsed pandas columns to the DECLARED Spark schema (O6 type
     coercion at the source, the reference's implicit pandas->Postgres
@@ -124,9 +185,11 @@ def _coerce_to_fields(out: pd.DataFrame, fields) -> pd.DataFrame:
                   epoch (how Excel stores every date); others parse via
                   pandas
 
+    String columns of str/None and numeric timestamp columns convert
+    column-wise (_strings, _excel_serials) to exactly what the
+    element-wise conversion gives; other columns convert element-wise.
     Coercion failures raise inside the caller's per-file try block —
     fail-the-file, never fail-the-stream."""
-    import datetime as _dt
     import decimal as _decimal
 
     from pyspark.sql.types import (
@@ -150,11 +213,19 @@ def _coerce_to_fields(out: pd.DataFrame, fields) -> pd.DataFrame:
             return str(int(v))
         return str(v)
 
+    def excel_ts(v):
+        if v is None or (isinstance(v, float) and pd.isna(v)):
+            return None
+        if isinstance(v, (int, float)):
+            return _EXCEL_EPOCH + datetime.timedelta(seconds=round(float(v) * 86400))
+        return pd.to_datetime(v).to_pydatetime()
+
     for f in fields:
         s = out[f.name]
         t = f.dataType
         if isinstance(t, StringType):
-            out[f.name] = s.map(to_str)
+            strings = _strings(s)
+            out[f.name] = s.map(to_str) if strings is None else strings
         elif isinstance(t, (IntegerType, LongType, ShortType, ByteType)):
             out[f.name] = pd.to_numeric(s).astype("Int64")
         elif isinstance(t, (DoubleType, FloatType)):
@@ -163,22 +234,14 @@ def _coerce_to_fields(out: pd.DataFrame, fields) -> pd.DataFrame:
             q = _decimal.Decimal(1).scaleb(-t.scale)
             out[f.name] = s.map(
                 lambda v, q=q: None
-                if v is None or (isinstance(v, float) and pd.isna(v))
+                if v is None or (isinstance(v, float) and v != v)  # NaN
                 else _decimal.Decimal(str(v)).quantize(
                     q, rounding=_decimal.ROUND_HALF_UP
                 )
             )
         elif isinstance(t, TimestampType):
-            epoch = _dt.datetime(1899, 12, 30)
-            out[f.name] = s.map(
-                lambda v: None
-                if v is None or (isinstance(v, float) and pd.isna(v))
-                else (
-                    epoch + _dt.timedelta(seconds=round(float(v) * 86400))
-                    if isinstance(v, (int, float))
-                    else pd.to_datetime(v).to_pydatetime()
-                )
-            )
+            stamps = _excel_serials(s)
+            out[f.name] = s.map(excel_ts) if stamps is None else stamps
     return out
 
 
@@ -230,10 +293,9 @@ def _make_xlsx_parse_fn(
     frame, so the sink reads them instead of running counting jobs."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import datetime as _dt
         import logging
 
-        now = _dt.datetime.now()
+        now = datetime.datetime.now()
 
         def _marker(path, error, n_rows, n_null, n_dup) -> pd.DataFrame:
             return pd.DataFrame(

@@ -9,41 +9,58 @@ Spark mapping (SURVEY.md E2): Structured Streaming's file source IS that
 loop — checkpointed file tracking replaces file_metadata (exactly-once,
 etl/app.py:36-89 subsumed), trigger(processingTime) replaces the sleep,
 query restart from checkpoint replaces reconnect/backoff. foreachBatch
-runs validate-then-write per micro-batch, preserving the reference's
+runs validate-then-publish per micro-batch, preserving the reference's
 fail-the-file atomicity.
 
 The xlsx commit (`service.run_service` -> `stream_ingest(fmt="xlsx")` ->
 `sources/excel.py` parse task -> `IngestSink.commit` ->
-`append_if_valid`) runs 2 Spark jobs per single-file trigger, 3 when a
+`append_if_valid`) runs 1 Spark job per single-file trigger, 2 when a
 status row is written:
 
-1. one narrow `collect` of the per-file marker rows over the persisted
-   batch. It runs the parse task and fills the cache. The parse task
-   already holds each file as one pandas frame, so it counts the file's
-   rows, NOT NULL violations and in-file duplicate keys there;
+1. one write of the batch's data rows to a staging directory under the
+   stream's checkpoint directory (never inside the table). It runs the
+   parse task, which already holds each file as one pandas frame and
+   counts the file's rows, NOT NULL violations and in-file duplicate
+   keys there. Each file's counts travel as a marker row that the same
+   plan gathers with `observe(collect_list(...))`, so they reach the
+   driver with that job;
 2. the `file_status` append, only when some file failed to parse (a
-   missing required column, an unreadable workbook);
-3. one append of every clean row, decided by `append_if_valid` from
-   those counts.
+   missing required column, an unreadable workbook), built on the
+   driver from the failed files' markers.
+
+`append_if_valid` decides from those counts. An accepted batch is
+published by renaming its staged part files into the table (no Spark
+job); a rejected batch's staging is deleted. Readers of the table never
+see unvalidated rows: the checks run before publish. Published files
+are named after the stream (a hash of its checkpoint path) and the
+batch id, so a batch that Spark replays after a crash between the
+publish and its commit log finds its files in place and appends nothing
+twice; status rows are published the same way. `stream_ingest` clears
+the staging root when it starts.
 
 Keys duplicated across files are checked with `duplicate_keys` (3 more
-jobs) only when a batch holds two or more parsed files; the result
-equals `validate_batch`'s batch-wide count. Non-xlsx formats keep
-`validate_batch`'s counting jobs. The parse task itself is cheap only
-in a worker where `zip_finders.install()` has run: without it, pyspark's
-per-task `importlib.invalidate_caches()` re-reads `pyspark.zip` ~16 times
-before the parse starts (~210-240 ms of worker CPU against ~40 ms, on a
-4-core x86 box).
+jobs) over the staged files, read with the known schema, only when a
+batch holds two or more parsed files; the result equals
+`validate_batch`'s batch-wide count. Non-xlsx formats keep
+`validate_batch`'s counting jobs and a Spark append. The parse task
+itself is cheap only in a worker where `zip_finders.install()` has run:
+without it, pyspark's per-task `importlib.invalidate_caches()` re-reads
+`pyspark.zip` ~16 times before the parse starts (~210-240 ms of worker
+CPU against ~40 ms, on a 4-core x86 box).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    from datawarehouse1_spark.operators.ingest import Staged
 
 LOCK_GLOB = "[!~]*"  # `~$` Excel lock-file skip (etl/app.py:262-263)
 
@@ -71,10 +88,18 @@ def stream_ingest(
     `<checkpoint_dir>/file_status`, queryable parquet) — the reference's
     per-file file_metadata status row (etl/app.py:271-275). A log-only
     skip would leave operators with no record of dropped uploads. An
-    `IngestSink` also gets each file's counts from the parse task."""
+    `IngestSink` also gets each file's counts from the parse task. Every
+    xlsx batch is staged under `<checkpoint_dir>/_staging`, which is
+    cleared here: a staging directory left by a crash holds no batch a
+    restart still needs."""
     if fmt == "xlsx":
+        import zlib
+
+        from datawarehouse1_spark.operators.ingest import delete_path, qualified_path
         from datawarehouse1_spark.sources.excel import xlsx_stream
 
+        ckpt = qualified_path(spark, checkpoint_dir)
+        delete_path(spark, f"{ckpt}/_staging")
         checks = sink if isinstance(sink, IngestSink) else None
         # lineage columns are added inside the parse body
         stream = xlsx_stream(
@@ -87,7 +112,10 @@ def stream_ingest(
             not_null_cols=checks.not_null_cols if checks else (),
         )
         sink = _with_status_sink(
-            sink, status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
+            sink,
+            f"{ckpt}/_staging",
+            status_dir or f"{checkpoint_dir.rstrip('/')}/file_status",
+            f"{zlib.crc32(ckpt.encode()):08x}",
         )
     else:
         stream = (
@@ -109,52 +137,81 @@ def stream_ingest(
 
 
 def _with_status_sink(
-    inner: Callable[[DataFrame, int], None], status_dir: str
+    inner: Callable[[DataFrame, int], None],
+    staging_root: str,
+    status_dir: str,
+    stream_tag: str,
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output:
-    route failed files' marker rows to a durable quarantine table
+    """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output.
+    One write stages the data rows (parse_error and marker columns
+    dropped) under `staging_root` and gathers the marker rows with
+    observe(), so parsing, counting and staging are one Spark job.
+    Failed files' markers become durable quarantine rows in `status_dir`
     (append-only parquet — one row per failed file: source_file,
-    parse_error, imported_at, batch_id, status) and pass the data rows
-    (parse_error and marker columns dropped) to the wrapped sink, with
-    the marker rows when it is an IngestSink. The batch is persisted
-    because it is consumed more than once; the marker collect is its
-    first consumer, so it runs the parse and fills the cache."""
+    parse_error, imported_at, batch_id, status). The wrapped sink gets
+    the staged rows read back with their known schema (no inference
+    job), valid only during the call, with the markers and the staging
+    directory when it is an IngestSink. The staging is deleted after
+    the call, published or not. Published file names carry
+    `stream_tag` and the batch id (operators.ingest.Staged)."""
+    from pyspark.sql import Observation
+
+    from datawarehouse1_spark.operators.ingest import Staged, delete_path, publish_staged
     from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, MARKER_COLS, NULL_ROWS
 
+    marker = F.struct("source_file", "parse_error", "imported_at", FILE_ROWS, NULL_ROWS, DUP_KEYS)
+
     def sink(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
+        spark = batch.sparkSession
+        stage = f"{staging_root}/batch-{batch_id}"
+        name = f"{stream_tag}-{batch_id:010d}"
+        is_marker = F.col(FILE_ROWS).isNotNull()
+        obs = Observation()
+        rows = (
+            batch.observe(obs, F.collect_list(F.when(is_marker, marker)).alias("markers"))
+            .filter(~is_marker)
+            .drop("parse_error", *MARKER_COLS)
+        )
         try:
-            markers = (
-                batch.filter(F.col(FILE_ROWS).isNotNull())
-                .select("source_file", "parse_error", FILE_ROWS, NULL_ROWS, DUP_KEYS)
-                .collect()
-            )
-            if any(m.parse_error is not None for m in markers):
-                batch.filter(F.col("parse_error").isNotNull()).select(
-                    "source_file",
-                    "parse_error",
-                    "imported_at",
-                    F.lit(batch_id).alias("batch_id"),
-                    F.lit("error").alias("status"),
-                ).write.mode("append").parquet(status_dir)
-            rows = batch.filter(F.col(FILE_ROWS).isNull()).drop("parse_error", *MARKER_COLS)
+            rows.write.mode("overwrite").parquet(f"{stage}/rows")
+            markers = obs.get["markers"]
+            failed = [
+                (m.source_file, m.parse_error, m.imported_at)
+                for m in markers
+                if m.parse_error is not None
+            ]
+            if failed:
+                spark.createDataFrame(
+                    failed, "source_file string, parse_error string, imported_at timestamp"
+                ).select(
+                    "*", F.lit(batch_id).alias("batch_id"), F.lit("error").alias("status")
+                ).write.mode("overwrite").parquet(f"{stage}/status")
+                publish_staged(spark, Staged(f"{stage}/status", name), status_dir)
+            staged = spark.read.schema(rows.schema).parquet(f"{stage}/rows")
             if isinstance(inner, IngestSink):
-                inner.commit(rows, batch_id, markers)
+                inner.commit(staged, batch_id, markers, Staged(f"{stage}/rows", name))
             else:
-                inner(rows, batch_id)
+                inner(staged, batch_id)
         finally:
-            batch.unpersist()
+            delete_path(spark, stage)
 
     return sink
 
 
 class IngestSink:
-    """foreachBatch body: validate-then-append per micro-batch (the
+    """foreachBatch body: validate-then-publish per micro-batch (the
     transaction-per-file analog) into the parquet table at `table_path`.
     Invalid batches are skipped whole — the streaming query keeps
     running (per-file try/except semantics, etl/app.py:271-275). The
     accept/reject decision is `operators.ingest.append_if_valid`, looked
-    up at call time."""
+    up at call time.
+
+    An xlsx batch arrives staged (`commit`): it is checked before it is
+    published, and publishing renames its staged files into the table
+    under names taken from the batch id, so a batch replayed after a
+    crash between the publish and the stream's commit log appends
+    nothing twice. A native-format batch (`__call__`) is appended by a
+    Spark write after the checks; a replay of it appends again."""
 
     def __init__(self, table_path: str, business_key: str, not_null_cols: list[str]):
         self.table_path = table_path
@@ -175,10 +232,13 @@ class IngestSink:
             source_file=f"batch-{batch_id}",
         )
 
-    def commit(self, rows: DataFrame, batch_id: int, markers: list[Row]) -> None:
-        """The data rows of an xlsx batch plus one marker row per file
-        (sources/excel.py): the counts come from the markers; keys are
-        re-counted batch-wide only when two or more files hold rows."""
+    def commit(
+        self, rows: DataFrame, batch_id: int, markers: list[Row], staged: Staged
+    ) -> None:
+        """The staged data rows of an xlsx batch (`rows` reads
+        `staged.path`) plus one marker row per file (sources/excel.py):
+        the counts come from the markers; keys are re-counted over the
+        staged rows only when two or more files hold rows."""
         from datawarehouse1_spark.operators import ingest
         from datawarehouse1_spark.operators.warehouse import duplicate_keys
         from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, NULL_ROWS
@@ -202,6 +262,7 @@ class IngestSink:
             self.not_null_cols,
             source_file=", ".join(sorted(m.source_file for m in files)),
             counts=counts,
+            staged=staged,
         )
 
 

@@ -216,3 +216,41 @@ def test_table_memo_evicts_entries_of_other_applications(spark, tmp_path):
         )
     finally:
         catalog._TABLE_MEMO.pop(foreign, None)
+
+
+def _two_part_dir(root, name: str, parts: dict[str, pa.Table]) -> str:
+    path = root / name
+    path.mkdir()
+    for fn, tbl in parts.items():
+        pq.write_table(tbl, str(path / fn))
+    return str(path)
+
+
+def test_footer_schema_on_mixed_schema_directories(spark, tmp_path):
+    """Part files whose footers disagree: Spark's non-merging inference
+    reads the first data file in its own listing order and reports that
+    file's schema, and footer_schema reads the same file. Names Spark's
+    file index skips (`._COPYING_`) or keeps (`_x=1`) are chosen the
+    same way."""
+    i32 = pa.table({"a": pa.array([1], pa.int32())})
+    i64 = pa.table({"a": pa.array([1], pa.int64())})
+    wide = pa.table({"a": pa.array([1], pa.int32()), "b": pa.array(["x"])})
+    dirs = {
+        "int32_then_int64": {"part-0.parquet": i32, "part-1.parquet": i64},
+        "int64_then_int32": {"part-0.parquet": i64, "part-1.parquet": i32},
+        "extra_column_last": {"part-0.parquet": i32, "part-1.parquet": wide},
+        "extra_column_first": {"part-0.parquet": wide, "part-1.parquet": i32},
+        "case_order": {"B.parquet": wide, "a.parquet": i32},
+        "copying_file": {"a.parquet._COPYING_": wide, "b.parquet": i32},
+        "underscore_with_equals": {"_a=1.parquet": wide, "b.parquet": i32},
+    }
+    for name, parts in dirs.items():
+        path = _two_part_dir(tmp_path, name, parts)
+        got = footer_schema(spark, path)
+        assert got is not None, name
+        assert got == spark.read.parquet(path).schema, name
+
+    appended = str(tmp_path / "spark_appends")
+    spark.range(2).selectExpr("CAST(id AS INT) AS a").write.parquet(appended)
+    spark.range(2).selectExpr("id AS a", "'x' AS b").write.mode("append").parquet(appended)
+    assert footer_schema(spark, appended) == spark.read.parquet(appended).schema

@@ -5,12 +5,13 @@ Every case places its files in the watched directory before the stream
 starts, so they all land in the stream's first trigger. Jobs are counted
 from the JVM status store (`sc._jsc.sc().statusStore()`): the jobs of
 that trigger are the ones started between the stream's start and
-`processAllAvailable()`. The budget per trigger: one narrow collect of
-the per-file marker rows, the `file_status` append when a file failed
-to parse, the table append when the batch is accepted, and the three
-jobs of the batch-wide `duplicate_keys` count when two or more files
-parsed. A rejected batch's errors must equal what `validate_batch`
-reports over the same parsed rows.
+`processAllAvailable()`. The budget per trigger: one write that parses
+the files, stages their rows and gathers the per-file marker rows, the
+`file_status` append when a file failed to parse, and the three jobs of
+the batch-wide `duplicate_keys` count when two or more files parsed.
+Publishing an accepted batch renames files and runs no job. A rejected
+batch's errors must equal what `validate_batch` reports over the same
+parsed rows.
 """
 
 from __future__ import annotations
@@ -49,13 +50,13 @@ def _in_file_dup(rows: list[list]) -> list[list]:
 
 # name -> ({file: (header, rows)}, rows appended, status rows, result, job budget)
 CASES = {
-    "valid": ({"ventes_a.xlsx": (HEADER, _ventes("A"))}, ROWS, 0, "success", 2),
+    "valid": ({"ventes_a.xlsx": (HEADER, _ventes("A"))}, ROWS, 0, "success", 1),
     "valid_and_missing_column": (
         {
             "ventes_a.xlsx": (HEADER, _ventes("A")),
             "ventes_b.xlsx": _without(HEADER, _ventes("B"), "quantite"),
         },
-        ROWS, 1, "success", 3,
+        ROWS, 1, "success", 2,
     ),
     "valid_and_null_key": (
         {
@@ -75,6 +76,18 @@ CASES = {
         {"ventes_a.xlsx": (HEADER, _in_file_dup(_ventes("A")))}, 0, 0, "error", 1,
     ),
 }
+
+
+def _service_args(watch, root):
+    return build_parser().parse_args([
+        "--watch-dir", str(watch),
+        "--table-root", str(root),
+        "--table", "ventes",
+        "--business-key", BUSINESS_KEYS["ventes"],
+        "--not-null", ",".join(NOT_NULL["ventes"]),
+        "--interval", "0",
+        "--format", "xlsx",
+    ])
 
 
 def _job_ids(spark) -> set[int]:
@@ -104,17 +117,8 @@ def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
         return results[-1]
 
     monkeypatch.setattr(ingest, "append_if_valid", recorded)
-    args = build_parser().parse_args([
-        "--watch-dir", str(watch),
-        "--table-root", str(root),
-        "--table", "ventes",
-        "--business-key", BUSINESS_KEYS["ventes"],
-        "--not-null", ",".join(NOT_NULL["ventes"]),
-        "--interval", "0",
-        "--format", "xlsx",
-    ])
     before = _job_ids(spark)
-    query = run_service(args, spark=spark)
+    query = run_service(_service_args(watch, root), spark=spark)
     try:
         query.processAllAvailable()
         jobs = len(_job_ids(spark) - before)
@@ -170,3 +174,56 @@ def test_plain_sink_gets_data_rows_only(spark, tmp_path, xlsx_bytes):
     assert sorted(r.vente_id for r in rows) == [f"A-{i}" for i in range(ROWS)]
     status = spark.read.parquet(str(tmp_path / "ckpt" / "file_status")).collect()
     assert [r.source_file for r in status] == ["ventes_b.xlsx"]
+
+
+def _run_once(spark, args) -> None:
+    query = run_service(args, spark=spark)
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+
+
+def test_replayed_batch_publishes_once_and_restart_clears_staging(
+    spark, tmp_path, monkeypatch, xlsx_bytes
+):
+    """A crash after the publish but before the commit log: on restart
+    Spark replays the batch under the same id. Its part files are
+    already in the table under names taken from that id, so the replay
+    adds nothing. A staging directory left behind is not part of the
+    table, and the restart removes it."""
+    watch, root = tmp_path / "watch", tmp_path / "tables"
+    watch.mkdir()
+    (watch / "ventes_a.xlsx").write_bytes(xlsx_bytes(HEADER, _ventes("A")))
+    (watch / "ventes_b.xlsx").write_bytes(xlsx_bytes(*_without(HEADER, _ventes("B"), "quantite")))
+    args = _service_args(watch, root)
+    table = root / "ventes"
+    ckpt = root / "_checkpoints" / "ventes"
+    status = ckpt / "file_status"
+    _run_once(spark, args)
+    published = sorted(p.name for p in table.glob("part-*"))
+    assert len(published) == 1
+    assert spark.read.parquet(str(table)).count() == ROWS
+    assert spark.read.parquet(str(status)).count() == 1
+
+    for entry in (ckpt / "commits").iterdir():  # batch 0 never committed
+        entry.unlink()
+    leftover = ckpt / "_staging" / "batch-7" / "rows"
+    leftover.mkdir(parents=True)
+    (leftover / published[0]).write_bytes((table / published[0]).read_bytes())
+    assert spark.read.parquet(str(table)).count() == ROWS
+
+    results = []
+    append = ingest.append_if_valid
+
+    def recorded(*a, **kw):
+        results.append(append(*a, **kw))
+        return results[-1]
+
+    monkeypatch.setattr(ingest, "append_if_valid", recorded)
+    _run_once(spark, args)
+    assert [r.status for r in results] == ["success"]  # batch 0 ran again
+    assert sorted(p.name for p in table.glob("part-*")) == published
+    assert spark.read.parquet(str(table)).count() == ROWS
+    assert spark.read.parquet(str(status)).count() == 1
+    assert not (ckpt / "_staging" / "batch-7").exists()
