@@ -17,11 +17,16 @@ publishing runs no Spark job, and a rejected batch's staging is deleted
 without the table ever listing it. Published part files are named after
 the batch (`Staged.name`), which makes publishing idempotent: a batch
 replayed after a crash between the publish and the stream's commit log
-finds its files in place and adds nothing.
+finds its files in place and adds nothing. The name also carries the
+stream's run id (`stream_run_id`), which is new whenever the checkpoint
+is recreated, so a stream whose batch numbering restarted at 0 after a
+lost checkpoint publishes its batches instead of taking them for
+replays.
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -44,14 +49,28 @@ class IngestResult:
 
 
 @dataclass(frozen=True)
+class BatchCounts:
+    """Constraint counts for a batch, computed where its rows already sit
+    (the xlsx parse task, streaming/file_ingest.py) instead of by Spark
+    jobs over the batch. `n_null` counts rows violating NOT NULL; `n_dup`
+    counts business keys occurring more than once in the batch, the
+    figures `null_violations(...).count()` and
+    `duplicate_keys(...).count()` return."""
+
+    n_rows: int
+    n_null: int
+    n_dup: int
+
+
+@dataclass(frozen=True)
 class Staged:
-    """A batch written to `path`, a directory outside the table. `name`
-    identifies the batch among every batch published into the table:
-    its part files are published as `part-<name>-<n>` (n in the staged
-    files' name order, which is Spark's task order)."""
+    """A batch written to `path`, a directory outside the table, with
+    the constraint `counts` of its rows. `name` identifies the batch
+    among every batch published into the table (publish_staged)."""
 
     path: str
     name: str
+    counts: BatchCounts
 
 
 def _fs_path(spark, path: str):
@@ -72,38 +91,63 @@ def delete_path(spark, path: str) -> None:
     fs.delete(hpath, True)
 
 
-def publish_staged(spark, staged: Staged, table_path: str) -> None:
-    """Rename the part files of `staged` into `table_path`. A target
-    name that already exists belongs to an earlier publish of the same
-    batch and is left as it is. Each file
+def check_same_file_system(spark, staging: str, *targets: str) -> None:
+    """Raise ValueError unless every target is on the file system of
+    `staging`: publish_staged renames from one into the other, and a
+    rename cannot cross file systems."""
+    from pyspark.errors import IllegalArgumentException
+
+    fs, _ = _fs_path(spark, staging)
+    for target in targets:
+        try:
+            fs.makeQualified(spark._jvm.org.apache.hadoop.fs.Path(target))
+        except IllegalArgumentException as e:  # Hadoop's "Wrong FS"
+            raise ValueError(
+                f"{target} is not on the file system of {staging} ({fs.getUri()}); "
+                "a staged batch is published by rename, so both must share one"
+            ) from e
+
+
+def stream_run_id(spark, checkpoint_dir: str) -> str:
+    """The id of the stream checkpointed in `checkpoint_dir`, kept in
+    `<checkpoint_dir>/_run_id`: drawn at random on the first start and
+    read back on every restart, so it is new exactly when the
+    checkpoint is."""
+    fs, hpath = _fs_path(spark, f"{checkpoint_dir}/_run_id")
+    if not fs.exists(hpath):
+        run_id = uuid.uuid4().hex
+        out = fs.create(hpath, False)
+        try:
+            out.write(run_id.encode())
+        finally:
+            out.close()
+        return run_id
+    stream = fs.open(hpath)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def publish_staged(spark, staged_path: str, name: str, table_path: str) -> None:
+    """Rename the part files under `staged_path` into `table_path` as
+    `part-<name>-<n>` (n in the staged files' name order, which is
+    Spark's task order). A target name that already exists belongs to
+    an earlier publish of the same batch and is left as it is. Each file
     appears in the table atomically (one rename); a batch of several
     part files appears file by file, as a Spark append's job commit
     also moves them."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    fs, src = _fs_path(spark, staged.path)
+    fs, src = _fs_path(spark, staged_path)
     table = Path(table_path)
     fs.mkdirs(table)
     names = sorted(st.getPath().getName() for st in fs.listStatus(src))
     parts = [n for n in names if n.startswith("part-")]
     for i, part in enumerate(parts):
         ext = part[part.index("."):] if "." in part else ""
-        dst = Path(table, f"part-{staged.name}-{i:05d}{ext}")
+        dst = Path(table, f"part-{name}-{i:05d}{ext}")
         if not fs.exists(dst) and not fs.rename(Path(src, part), dst):
-            raise OSError(f"could not publish {staged.path}/{part} as {dst}")
-
-
-@dataclass(frozen=True)
-class BatchCounts:
-    """Constraint counts for a batch, computed where its rows already sit
-    (the xlsx parse task, streaming/file_ingest.py) instead of by Spark
-    jobs over the batch. `n_null` counts rows violating NOT NULL; `n_dup`
-    counts business keys occurring more than once in the batch, the
-    figures `null_violations(...).count()` and
-    `duplicate_keys(...).count()` return."""
-
-    n_rows: int
-    n_null: int
-    n_dup: int
+            raise OSError(f"could not publish {staged_path}/{part} as {dst}")
 
 
 def validate_batch(
@@ -160,47 +204,42 @@ def append_if_valid(
     existing: DataFrame | None = None,
     fk_checks: list[tuple[DataFrame, str, str]] | None = None,
     partition_by: list[str] | None = None,
-    counts: BatchCounts | None = None,
     staged: Staged | None = None,
 ) -> IngestResult:
     """Fail-the-file atomicity: validate everything, then one append.
 
     partition_by is the physical analog of the reference's date index
     (init-db/init.sql:67): facts partition by month(date) so date-range
-    queries prune files instead of scanning. `counts`, when the caller
-    already holds them, replace the NOT NULL / UNIQUE counting jobs and
-    the row count; the accept/reject decision is the same. With
-    `staged` (which `batch` reads, and `counts` describes), an accepted
-    batch is published by renaming its staged files (publish_staged)
-    instead of being written again; a rejected one is left in staging
-    for the caller to delete."""
-    if staged is not None and (counts is None or partition_by):
-        raise ValueError("a staged batch needs counts and cannot be partitioned")
+    queries prune files instead of scanning. With `staged` (which
+    `batch` reads), the staged counts replace the NOT NULL / UNIQUE
+    counting jobs and the row count, the accept/reject decision is the
+    same, and an accepted batch is published by renaming its staged
+    files (publish_staged) instead of being written again; a rejected
+    one is left in staging for the caller to delete."""
+    if staged is not None and partition_by:
+        raise ValueError("a staged batch cannot be partitioned")
     errors = validate_batch(
-        batch, business_key, not_null_cols, existing, fk_checks, counts
+        batch, business_key, not_null_cols, existing, fk_checks,
+        staged.counts if staged is not None else None,
     )
     if errors:
         return IngestResult(table_name, source_file, "error", 0, errors)
 
     if staged is not None:
-        publish_staged(batch.sparkSession, staged, table_path)
-        return IngestResult(table_name, source_file, "success", counts.n_rows, [])
-    if counts is not None:
-        writer = batch.write.mode("append")
-    else:
-        # Row count via observe(): the metric rides the write job itself
-        # (the reference logs per-file row counts, etl/app.py; a
-        # post-write .count() would re-scan the batch — a second job for
-        # a number the write already saw).
-        from pyspark.sql import Observation
+        publish_staged(batch.sparkSession, staged.path, staged.name, table_path)
+        return IngestResult(table_name, source_file, "success", staged.counts.n_rows, [])
+    # Row count via observe(): the metric rides the write job itself
+    # (the reference logs per-file row counts, etl/app.py; a post-write
+    # .count() would re-scan the batch — a second job for a number the
+    # write already saw).
+    from pyspark.sql import Observation
 
-        obs = Observation(f"ingest-{source_file}")
-        writer = batch.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode("append")
+    obs = Observation(f"ingest-{source_file}")
+    writer = batch.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
-    n_rows = counts.n_rows if counts is not None else int(obs.get["n_rows"])
-    return IngestResult(table_name, source_file, "success", n_rows, [])
+    return IngestResult(table_name, source_file, "success", int(obs.get["n_rows"]), [])
 
 
 def with_month_partition(df: DataFrame, ts_col: str, out: str = "month") -> DataFrame:

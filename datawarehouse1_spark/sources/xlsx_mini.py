@@ -160,8 +160,8 @@ def _tree_grid(xml: bytes, shared: list[str]) -> tuple[dict, int]:
 # last group) any other character, which makes the scan decline. A cell
 # is <c r="A1"> with optional s= and t= in Excel's attribute order, an
 # optional <f> formula, then a <v> value, an <is> inline string (one
-# plain <t>, or anything else for _T_TEXT to read), or nothing. The
-# quantifiers are possessive: a token either matches at once or the
+# plain <t>, or rich-text runs for _rich_text to read), or nothing.
+# The quantifiers are possessive: a token either matches at once or the
 # scan declines, so nothing is gained by backtracking.
 _TOKEN = re.compile(
     r'<c r="([A-Z]{1,3})\d++"(?: s="\d++")?+(?: t="(\w++)")?+'
@@ -170,28 +170,40 @@ _TOKEN = re.compile(
     r'|<row r="(\d++)"[^>/]*+(/?)>|(</row>)|(\S)',
     re.S,
 )
-_T_TEXT = re.compile(r"<t(?:\s[^>]*)?>([^<]*)</t>")
-_T_OPEN = re.compile(r"<(?:[\w.-]+:)?t[\s/>]")
 _ROW_TAG = re.compile(r"<(?:[\w.-]+:)?row[\s/>]")
 _XML_ENCODING = re.compile(rb"""<\?xml[^>]*encoding=["']([^"']+)""")
 _SHEET_DATA = "<sheetData>"
 
 
+def _rich_text(body: str) -> str | None:
+    """The text of an <is> element whose body is `body`, read as
+    _text_of reads it, or None when `body` is not well-formed XML on its
+    own (nesting errors, namespace prefixes)."""
+    try:
+        return _text_of(ElementTree.fromstring(f"<is>{body}</is>"))
+    except ElementTree.ParseError:
+        return None
+
+
 def _scan_grid(xml: bytes, shared: list[str]) -> tuple[dict, int] | None:
     """One compiled-regex pass over a worksheet's <sheetData>, giving
     exactly what _tree_grid gives, or None when the document is not in
-    the forms the scan models: then the caller runs _tree_grid.
+    the forms the scan models: then the caller runs _tree_grid, which
+    also raises ParseError on every document that is not well-formed.
 
     The scan accepts a document only when every character of
     <sheetData> other than whitespace between elements belongs to a
     matched token. In well-formed XML every '<' opens markup, so no
-    `<c`, `<row` or any other element can be skipped. What the scan
-    cannot read the way an XML parser does declines the whole
-    document: a declared encoding other than UTF-8, entity or character
-    references (`&`), CDATA, comments and DOCTYPEs (`<!`), carriage
-    returns (a parser normalises them), namespace prefixes, cells or
-    rows without `r`, rows outside <sheetData>, other attribute orders
-    or child elements, and nesting errors."""
+    `<c`, `<row` or any other element can be skipped. The rest of the
+    document, with <sheetData> emptied, goes through ElementTree
+    (small: column widths, margins and the like), and so does the body
+    of each rich-text inline string; either failing declines. What the
+    scan cannot read the way an XML parser does declines the whole
+    document too: a declared encoding other than UTF-8, entity or
+    character references (`&`), CDATA, comments and DOCTYPEs (`<!`),
+    carriage returns (a parser normalises them), namespace prefixes,
+    cells or rows without `r`, rows outside <sheetData>, other
+    attribute orders or child elements, and nesting errors."""
     decl = _XML_ENCODING.match(xml)
     if decl and decl.group(1).lower() not in (b"utf-8", b"utf8"):
         return None
@@ -207,10 +219,13 @@ def _scan_grid(xml: bytes, shared: list[str]) -> tuple[dict, int] | None:
         or "&" in text
         or "<!" in text
         or "\r" in text
-        or not text.rstrip().endswith("</worksheet>")
         or _ROW_TAG.search(text, 0, start)
         or _ROW_TAG.search(text, end)
     ):
+        return None
+    try:
+        ElementTree.fromstring(f"{text[:start]}<sheetData/>{text[end + len('</sheetData>'):]}")
+    except ElementTree.ParseError:
         return None
     grid: dict[int, dict[int, object]] = {}
     col_of: dict[str, int] = {}
@@ -224,10 +239,9 @@ def _scan_grid(xml: bytes, shared: list[str]) -> tuple[dict, int] | None:
                 return None
             if inline:
                 if rich:
-                    texts = _T_TEXT.findall(rich)
-                    if len(texts) != len(_T_OPEN.findall(rich)):
+                    val = _rich_text(rich)
+                    if val is None:
                         return None
-                    val = "".join(texts)
                 else:
                     val = text_t
             elif v:

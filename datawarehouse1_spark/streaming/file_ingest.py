@@ -32,11 +32,16 @@ status row is written:
 published by renaming its staged part files into the table (no Spark
 job); a rejected batch's staging is deleted. Readers of the table never
 see unvalidated rows: the checks run before publish. Published files
-are named after the stream (a hash of its checkpoint path) and the
-batch id, so a batch that Spark replays after a crash between the
-publish and its commit log finds its files in place and appends nothing
-twice; status rows are published the same way. `stream_ingest` clears
-the staging root when it starts.
+are named after the stream's run id (`operators.ingest.stream_run_id`,
+kept in the checkpoint) and the batch id, so a batch that Spark replays
+after a crash between the publish and its commit log finds its files in
+place and appends nothing twice; status rows are published the same
+way. A stream on a recreated checkpoint has a new run id, so its batch
+numbering, restarted at 0, does not collide with the batches it
+published before. Publishing is a rename, so the
+table and status directories must be on the checkpoint's file system;
+`stream_ingest` checks that, and clears the staging root, when it
+starts.
 
 Keys duplicated across files are checked with `duplicate_keys` (3 more
 jobs) over the staged files, read with the known schema, only when a
@@ -52,15 +57,11 @@ CPU against ~40 ms, on a 4-core x86 box).
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
-
-if TYPE_CHECKING:
-    from datawarehouse1_spark.operators.ingest import Staged
 
 LOCK_GLOB = "[!~]*"  # `~$` Excel lock-file skip (etl/app.py:262-263)
 
@@ -91,16 +92,25 @@ def stream_ingest(
     `IngestSink` also gets each file's counts from the parse task. Every
     xlsx batch is staged under `<checkpoint_dir>/_staging`, which is
     cleared here: a staging directory left by a crash holds no batch a
-    restart still needs."""
+    restart still needs. Staged files are published by rename, so a
+    `status_dir` or IngestSink table on another file system than the
+    checkpoint raises ValueError here."""
     if fmt == "xlsx":
-        import zlib
-
-        from datawarehouse1_spark.operators.ingest import delete_path, qualified_path
+        from datawarehouse1_spark.operators.ingest import (
+            check_same_file_system,
+            delete_path,
+            qualified_path,
+            stream_run_id,
+        )
         from datawarehouse1_spark.sources.excel import xlsx_stream
 
         ckpt = qualified_path(spark, checkpoint_dir)
-        delete_path(spark, f"{ckpt}/_staging")
+        staging = f"{ckpt}/_staging"
+        status_dir = status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
         checks = sink if isinstance(sink, IngestSink) else None
+        targets = (status_dir, checks.table_path) if checks else (status_dir,)
+        check_same_file_system(spark, staging, *targets)
+        delete_path(spark, staging)
         # lineage columns are added inside the parse body
         stream = xlsx_stream(
             spark,
@@ -111,12 +121,7 @@ def stream_ingest(
             business_key=checks.business_key if checks else None,
             not_null_cols=checks.not_null_cols if checks else (),
         )
-        sink = _with_status_sink(
-            sink,
-            f"{ckpt}/_staging",
-            status_dir or f"{checkpoint_dir.rstrip('/')}/file_status",
-            f"{zlib.crc32(ckpt.encode()):08x}",
-        )
+        sink = _with_status_sink(sink, staging, status_dir, stream_run_id(spark, ckpt))
     else:
         stream = (
             spark.readStream.schema(schema)
@@ -140,7 +145,7 @@ def _with_status_sink(
     inner: Callable[[DataFrame, int], None],
     staging_root: str,
     status_dir: str,
-    stream_tag: str,
+    run_id: str,
 ) -> Callable[[DataFrame, int], None]:
     """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output.
     One write stages the data rows (parse_error and marker columns
@@ -152,11 +157,11 @@ def _with_status_sink(
     the staged rows read back with their known schema (no inference
     job), valid only during the call, with the markers and the staging
     directory when it is an IngestSink. The staging is deleted after
-    the call, published or not. Published file names carry
-    `stream_tag` and the batch id (operators.ingest.Staged)."""
+    the call, published or not. Published file names carry `run_id`
+    and the batch id (operators.ingest.publish_staged)."""
     from pyspark.sql import Observation
 
-    from datawarehouse1_spark.operators.ingest import Staged, delete_path, publish_staged
+    from datawarehouse1_spark.operators.ingest import delete_path, publish_staged
     from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, MARKER_COLS, NULL_ROWS
 
     marker = F.struct("source_file", "parse_error", "imported_at", FILE_ROWS, NULL_ROWS, DUP_KEYS)
@@ -164,7 +169,7 @@ def _with_status_sink(
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         stage = f"{staging_root}/batch-{batch_id}"
-        name = f"{stream_tag}-{batch_id:010d}"
+        name = f"{run_id}-{batch_id:010d}"
         is_marker = F.col(FILE_ROWS).isNotNull()
         obs = Observation()
         rows = (
@@ -186,10 +191,10 @@ def _with_status_sink(
                 ).select(
                     "*", F.lit(batch_id).alias("batch_id"), F.lit("error").alias("status")
                 ).write.mode("overwrite").parquet(f"{stage}/status")
-                publish_staged(spark, Staged(f"{stage}/status", name), status_dir)
+                publish_staged(spark, f"{stage}/status", name, status_dir)
             staged = spark.read.schema(rows.schema).parquet(f"{stage}/rows")
             if isinstance(inner, IngestSink):
-                inner.commit(staged, batch_id, markers, Staged(f"{stage}/rows", name))
+                inner.commit(staged, batch_id, markers, f"{stage}/rows", name)
             else:
                 inner(staged, batch_id)
         finally:
@@ -208,10 +213,12 @@ class IngestSink:
 
     An xlsx batch arrives staged (`commit`): it is checked before it is
     published, and publishing renames its staged files into the table
-    under names taken from the batch id, so a batch replayed after a
-    crash between the publish and the stream's commit log appends
-    nothing twice. A native-format batch (`__call__`) is appended by a
-    Spark write after the checks; a replay of it appends again."""
+    under names taken from the stream's run id and the batch id, so a
+    batch replayed after a crash between the publish and the stream's commit
+    log appends nothing twice, while a stream on a recreated checkpoint
+    publishes its renumbered batches. A native-format batch (`__call__`)
+    is appended by a Spark write after the checks; a replay of it
+    appends again."""
 
     def __init__(self, table_path: str, business_key: str, not_null_cols: list[str]):
         self.table_path = table_path
@@ -233,12 +240,13 @@ class IngestSink:
         )
 
     def commit(
-        self, rows: DataFrame, batch_id: int, markers: list[Row], staged: Staged
+        self, rows: DataFrame, batch_id: int, markers: list[Row], path: str, name: str
     ) -> None:
-        """The staged data rows of an xlsx batch (`rows` reads
-        `staged.path`) plus one marker row per file (sources/excel.py):
-        the counts come from the markers; keys are re-counted over the
-        staged rows only when two or more files hold rows."""
+        """The staged data rows of an xlsx batch (`rows` reads `path`)
+        plus one marker row per file (sources/excel.py): the counts come
+        from the markers; keys are re-counted over the staged rows only
+        when two or more files hold rows. `name` names the batch's
+        published files (operators.ingest.publish_staged)."""
         from datawarehouse1_spark.operators import ingest
         from datawarehouse1_spark.operators.warehouse import duplicate_keys
         from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, NULL_ROWS
@@ -261,8 +269,7 @@ class IngestSink:
             self.business_key,
             self.not_null_cols,
             source_file=", ".join(sorted(m.source_file for m in files)),
-            counts=counts,
-            staged=staged,
+            staged=ingest.Staged(path, name, counts),
         )
 
 

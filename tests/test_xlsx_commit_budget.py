@@ -227,3 +227,50 @@ def test_replayed_batch_publishes_once_and_restart_clears_staging(
     assert spark.read.parquet(str(table)).count() == ROWS
     assert spark.read.parquet(str(status)).count() == 1
     assert not (ckpt / "_staging" / "batch-7").exists()
+
+
+def test_stream_on_a_recreated_checkpoint_publishes_its_batches(spark, tmp_path, xlsx_bytes):
+    """A checkpoint lost and recreated at the same path restarts the
+    batch numbering at 0. The new stream's batch 0, here even a file of
+    the same name, must reach the table rather than be taken for a
+    replay of the old stream's batch 0."""
+    import shutil
+
+    watch, root = tmp_path / "watch", tmp_path / "tables"
+    watch.mkdir()
+    drop = watch / "ventes_a.xlsx"
+    drop.write_bytes(xlsx_bytes(HEADER, _ventes("A")))
+    args = _service_args(watch, root)
+    table = root / "ventes"
+    _run_once(spark, args)
+    assert spark.read.parquet(str(table)).count() == ROWS
+
+    shutil.rmtree(root / "_checkpoints" / "ventes")
+    drop.unlink()
+    drop.write_bytes(xlsx_bytes(HEADER, _ventes("B")))
+    _run_once(spark, args)
+    ids = sorted(r.vente_id for r in spark.read.parquet(str(table)).collect())
+    assert ids == sorted(f"{p}-{i}" for p in "AB" for i in range(ROWS))
+
+
+@pytest.mark.parametrize("target", ["table", "status"])
+def test_publish_target_on_another_file_system_is_refused(spark, tmp_path, target):
+    """Staged files are published by rename, which cannot cross file
+    systems: stream_ingest refuses a table or status directory that is
+    not on the checkpoint's file system before it starts the query."""
+    from datawarehouse1_spark.streaming.file_ingest import IngestSink, stream_ingest
+
+    other = "otherfs:///warehouse/ventes"
+    sink = IngestSink(other if target == "table" else str(tmp_path / "ventes"), "vente_id", [])
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="file system"):
+        stream_ingest(
+            spark,
+            str(tmp_path / "watch"),
+            VENTES,
+            sink,
+            str(tmp_path / "ckpt"),
+            fmt="xlsx",
+            status_dir=other if target == "status" else None,
+        )
+    assert len(spark.streams.active) == n_active

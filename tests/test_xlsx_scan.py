@@ -101,7 +101,7 @@ FIXTURES = {
         _book(_sheet(
             HEAD + '<row r="2"><c r="A2" t="inlineStr"><is><r><t/></r><r><t>z</t></r></is></c></row>'
         )),
-        {}, "etree",
+        {}, "scan",
     ),
     "amp_entity": (
         _book(_sheet(HEAD + f'<row r="2">{_inline("A2", "R&amp;D")}</row>')),
@@ -325,10 +325,35 @@ def test_scan_equals_etree_on_every_ingest_drop_kind(xlsx_bytes):
         assert len(parse_xlsx_bytes(case[0])) == 50, name
 
 
-def test_malformed_sheet_raises_as_the_reference_does():
+ROWS_2 = '<row r="2"><c r="A2"><v>1</v></c></row>'
+
+MALFORMED = {
+    "row_never_closed": _sheet(HEAD + '<row r="2"><c r="A2"><v>1</v></c>'),
+    "unclosed_element_before_sheet_data": (
+        f'<worksheet xmlns="{NS}"><cols><col min="1" max="2">'
+        f"<sheetData>{HEAD}{ROWS_2}</sheetData></worksheet>"
+    ),
+    "mismatched_tag_after_sheet_data": (
+        f'<worksheet xmlns="{NS}"><sheetData>{HEAD}{ROWS_2}</sheetData>'
+        '<pageMargins left="0.7"></pageSetup></worksheet>'
+    ),
+    "truncated_after_sheet_data": f'<worksheet xmlns="{NS}"><sheetData>{HEAD}{ROWS_2}</sheetData>',
+    "rich_text_run_never_closed": _sheet(
+        HEAD + '<row r="2"><c r="A2" t="inlineStr"><is><r><t>a</t></is></c></row>'
+    ),
+    "rich_text_stray_close": _sheet(
+        HEAD + '<row r="2"><c r="A2" t="inlineStr"><is><t>a</t></r><t>b</t></is></c></row>'
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(MALFORMED))
+def test_malformed_sheet_raises_as_the_reference_does(name):
+    """A worksheet that is not well-formed XML, inside <sheetData> or
+    out of it, is declined by the scan, and the walk raises on it."""
     from xml.etree.ElementTree import ParseError
 
-    data = _book(_sheet(HEAD + '<row r="2"><c r="A2"><v>1</v></c>'))  # row never closed
+    data = _book(MALFORMED[name])
     assert _scanned(data, {}) is None
     with pytest.raises(ParseError):
         parse_xlsx_bytes(data)
