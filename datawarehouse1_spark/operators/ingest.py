@@ -17,16 +17,15 @@ publishing runs no Spark job, and a rejected batch's staging is deleted
 without the table ever listing it. Published part files are named after
 the batch (`Staged.name`), which makes publishing idempotent: a batch
 replayed after a crash between the publish and the stream's commit log
-finds its files in place and adds nothing. The name also carries the
-stream's run id (`stream_run_id`), which is new whenever the checkpoint
-is recreated, so a stream whose batch numbering restarted at 0 after a
-lost checkpoint publishes its batches instead of taking them for
-replays.
+finds its files in place and adds nothing. The streaming caller puts
+the query id in the name: Spark keeps it in the checkpoint, so it is new
+whenever the checkpoint is recreated, and a stream whose batch
+numbering restarted at 0 after a lost checkpoint publishes its batches
+instead of taking them for replays.
 """
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -79,12 +78,6 @@ def _fs_path(spark, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def qualified_path(spark, path: str) -> str:
-    """`path` with its file system's scheme, relative paths resolved."""
-    fs, hpath = _fs_path(spark, path)
-    return fs.makeQualified(hpath).toString()
-
-
 def delete_path(spark, path: str) -> None:
     """Remove `path` and everything below it, if it exists."""
     fs, hpath = _fs_path(spark, path)
@@ -106,27 +99,6 @@ def check_same_file_system(spark, staging: str, *targets: str) -> None:
                 f"{target} is not on the file system of {staging} ({fs.getUri()}); "
                 "a staged batch is published by rename, so both must share one"
             ) from e
-
-
-def stream_run_id(spark, checkpoint_dir: str) -> str:
-    """The id of the stream checkpointed in `checkpoint_dir`, kept in
-    `<checkpoint_dir>/_run_id`: drawn at random on the first start and
-    read back on every restart, so it is new exactly when the
-    checkpoint is."""
-    fs, hpath = _fs_path(spark, f"{checkpoint_dir}/_run_id")
-    if not fs.exists(hpath):
-        run_id = uuid.uuid4().hex
-        out = fs.create(hpath, False)
-        try:
-            out.write(run_id.encode())
-        finally:
-            out.close()
-        return run_id
-    stream = fs.open(hpath)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
 
 
 def publish_staged(spark, staged_path: str, name: str, table_path: str) -> None:

@@ -32,13 +32,12 @@ status row is written:
 published by renaming its staged part files into the table (no Spark
 job); a rejected batch's staging is deleted. Readers of the table never
 see unvalidated rows: the checks run before publish. Published files
-are named after the stream's run id (`operators.ingest.stream_run_id`,
-kept in the checkpoint) and the batch id, so a batch that Spark replays
-after a crash between the publish and its commit log finds its files in
-place and appends nothing twice; status rows are published the same
-way. A stream on a recreated checkpoint has a new run id, so its batch
-numbering, restarted at 0, does not collide with the batches it
-published before. Publishing is a rename, so the
+are named after the query id (which Spark keeps in the checkpoint) and
+the batch id, so a batch that Spark replays after a crash between the
+publish and its commit log finds its files in place and appends nothing
+twice; status rows are published the same way. A stream on a recreated
+checkpoint has a new query id, so its batch numbering, restarted at 0,
+does not collide with the batches it published before. Publishing is a rename, so the
 table and status directories must be on the checkpoint's file system;
 `stream_ingest` checks that, and clears the staging root, when it
 starts.
@@ -96,16 +95,10 @@ def stream_ingest(
     `status_dir` or IngestSink table on another file system than the
     checkpoint raises ValueError here."""
     if fmt == "xlsx":
-        from datawarehouse1_spark.operators.ingest import (
-            check_same_file_system,
-            delete_path,
-            qualified_path,
-            stream_run_id,
-        )
+        from datawarehouse1_spark.operators.ingest import check_same_file_system, delete_path
         from datawarehouse1_spark.sources.excel import xlsx_stream
 
-        ckpt = qualified_path(spark, checkpoint_dir)
-        staging = f"{ckpt}/_staging"
+        staging = f"{checkpoint_dir.rstrip('/')}/_staging"
         status_dir = status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
         checks = sink if isinstance(sink, IngestSink) else None
         targets = (status_dir, checks.table_path) if checks else (status_dir,)
@@ -121,7 +114,7 @@ def stream_ingest(
             business_key=checks.business_key if checks else None,
             not_null_cols=checks.not_null_cols if checks else (),
         )
-        sink = _with_status_sink(sink, staging, status_dir, stream_run_id(spark, ckpt))
+        sink = _with_status_sink(sink, staging, status_dir)
     else:
         stream = (
             spark.readStream.schema(schema)
@@ -145,7 +138,6 @@ def _with_status_sink(
     inner: Callable[[DataFrame, int], None],
     staging_root: str,
     status_dir: str,
-    run_id: str,
 ) -> Callable[[DataFrame, int], None]:
     """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output.
     One write stages the data rows (parse_error and marker columns
@@ -157,8 +149,8 @@ def _with_status_sink(
     the staged rows read back with their known schema (no inference
     job), valid only during the call, with the markers and the staging
     directory when it is an IngestSink. The staging is deleted after
-    the call, published or not. Published file names carry `run_id`
-    and the batch id (operators.ingest.publish_staged)."""
+    the call, published or not. Published file names carry the query
+    id and the batch id (operators.ingest.publish_staged)."""
     from pyspark.sql import Observation
 
     from datawarehouse1_spark.operators.ingest import delete_path, publish_staged
@@ -169,7 +161,9 @@ def _with_status_sink(
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         stage = f"{staging_root}/batch-{batch_id}"
-        name = f"{run_id}-{batch_id:010d}"
+        # the id Spark stores in the checkpoint, set on the stream's thread
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        name = f"{query_id}-{batch_id:010d}"
         is_marker = F.col(FILE_ROWS).isNotNull()
         obs = Observation()
         rows = (
@@ -213,8 +207,8 @@ class IngestSink:
 
     An xlsx batch arrives staged (`commit`): it is checked before it is
     published, and publishing renames its staged files into the table
-    under names taken from the stream's run id and the batch id, so a
-    batch replayed after a crash between the publish and the stream's commit
+    under names taken from the query id and the batch id, so a batch
+    replayed after a crash between the publish and the stream's commit
     log appends nothing twice, while a stream on a recreated checkpoint
     publishes its renumbered batches. A native-format batch (`__call__`)
     is appended by a Spark write after the checks; a replay of it
