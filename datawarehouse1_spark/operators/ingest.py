@@ -1,5 +1,5 @@
 """Batch ingest pipeline: the reference's E2 dataflow (etl/app.py:235-289)
-as validate-then-write over Spark tables.
+as validate-then-publish over Spark tables.
 
 Transaction-per-file semantics (etl/app.py:162,191,220: one to_sql per
 file, constraint violation rolls back the whole file) cannot lean on
@@ -8,32 +8,34 @@ batch reaches the table only if every constraint check passes; otherwise
 the whole batch is rejected and recorded status=error. Never
 write-then-clean: readers of the table never see unvalidated rows.
 
-A batch reaches the table in one of two ways. `append_if_valid` appends
-it with a Spark write after the checks. A batch already written to a
-staging directory outside the table (`Staged`, the streaming xlsx
-commit in streaming/file_ingest.py) is published instead: its part
-files are renamed into the table through the Hadoop FileSystem API, so
-publishing runs no Spark job, and a rejected batch's staging is deleted
-without the table ever listing it. Published part files are named after
-the batch (`Staged.name`), which makes publishing idempotent: a batch
-replayed after a crash between the publish and the stream's commit log
-finds its files in place and adds nothing. The streaming caller puts
-the query id in the name: Spark keeps it in the checkpoint, so it is new
-whenever the checkpoint is recreated, and a stream whose batch
-numbering restarted at 0 after a lost checkpoint publishes its batches
-instead of taking them for replays.
+A batch reaches the table one way. `stage_batch` writes it to a staging
+directory outside the table in one Spark job whose `observe()` counts
+its rows and NOT NULL violations. `append_if_valid` decides from those
+counts and publishes an accepted batch: its part files are renamed into
+the table through the Hadoop FileSystem API, so publishing runs no Spark
+job, and a rejected batch's staging is deleted without the table ever
+listing it. Published part files are named after the batch
+(`Staged.name`), which makes publishing idempotent: a batch replayed
+after a crash between the publish and the stream's commit log finds its
+files in place and adds nothing. The streaming caller
+(streaming/file_ingest.py) puts the query id in the name: Spark keeps
+it in the checkpoint, so it is new whenever the checkpoint is
+recreated, and a stream whose batch numbering restarted at 0 after a
+lost checkpoint publishes its batches instead of taking them for
+replays.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.operators.warehouse import (
     duplicate_keys,
     fk_orphans,
+    null_predicate,
     null_violations,
 )
 
@@ -49,16 +51,16 @@ class IngestResult:
 
 @dataclass(frozen=True)
 class BatchCounts:
-    """Constraint counts for a batch, computed where its rows already sit
-    (the xlsx parse task, streaming/file_ingest.py) instead of by Spark
-    jobs over the batch. `n_null` counts rows violating NOT NULL; `n_dup`
-    counts business keys occurring more than once in the batch, the
-    figures `null_violations(...).count()` and
-    `duplicate_keys(...).count()` return."""
+    """Constraint counts for a batch, observed while it was staged
+    instead of counted by Spark jobs over it. `n_null` counts rows
+    violating NOT NULL; `n_dup` counts business keys occurring more than
+    once in the batch, the figures `null_violations(...).count()` and
+    `duplicate_keys(...).count()` return. `n_dup` is None when nothing
+    counted it on the way (validate_batch counts it then)."""
 
     n_rows: int
     n_null: int
-    n_dup: int
+    n_dup: int | None = None
 
 
 @dataclass(frozen=True)
@@ -101,6 +103,33 @@ def check_same_file_system(spark, staging: str, *targets: str) -> None:
             ) from e
 
 
+def staging_counts(not_null_cols: list[str]) -> tuple[Column, Column]:
+    """The metrics stage_batch observes: the row count and the rows
+    violating NOT NULL on `not_null_cols`. A stream builds them once,
+    not per batch: each Column is a few py4j round trips, and a stream
+    rebuilding its metric Columns for every batch spent ~30 ms more per
+    xlsx commit (4-core x86 box)."""
+    return (
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(null_predicate(not_null_cols), 1)).alias("n_null"),
+    )
+
+
+def stage_batch(
+    rows: DataFrame, path: str, name: str, metrics: tuple[Column, Column]
+) -> tuple[DataFrame, Staged]:
+    """Write `rows` to the staging directory `path` in one Spark job
+    whose observe() computes `metrics` (staging_counts). Returns the
+    staged rows, read back with their known schema (no inference job),
+    and the `Staged` batch to hand to append_if_valid under `name`."""
+    obs = Observation()
+    rows.observe(obs, *metrics).write.mode("overwrite").parquet(path)
+    observed = obs.get
+    counts = BatchCounts(observed["n_rows"], observed["n_null"])
+    staged = rows.sparkSession.read.schema(rows.schema).parquet(path)
+    return staged, Staged(path, name, counts)
+
+
 def publish_staged(spark, staged_path: str, name: str, table_path: str) -> None:
     """Rename the part files under `staged_path` into `table_path` as
     `part-<name>-<n>` (n in the staged files' name order, which is
@@ -132,15 +161,15 @@ def validate_batch(
 ) -> list[str]:
     """All constraint checks the reference delegates to Postgres, computed
     in one pass where possible. Returns [] when the batch is appendable.
-    With `counts`, the NOT NULL and in-batch UNIQUE checks read those
-    figures instead of running two counting jobs each."""
+    With `counts`, the NOT NULL check (and the in-batch UNIQUE check,
+    when `counts.n_dup` is set) reads those figures instead of running
+    counting jobs."""
     errors: list[str] = []
 
-    if counts is None:
-        n_null = null_violations(batch, not_null_cols).count()
+    n_null = counts.n_null if counts else null_violations(batch, not_null_cols).count()
+    n_dup = counts.n_dup if counts else None
+    if n_dup is None:
         n_dup = duplicate_keys(batch, [business_key]).count()
-    else:
-        n_null, n_dup = counts.n_null, counts.n_dup
     if n_null:
         errors.append(f"{n_null} rows violate NOT NULL on {not_null_cols}")
 
@@ -172,46 +201,25 @@ def append_if_valid(
     business_key: str,
     not_null_cols: list[str],
     source_file: str,
+    staged: Staged,
     table_name: str = "",
     existing: DataFrame | None = None,
     fk_checks: list[tuple[DataFrame, str, str]] | None = None,
-    partition_by: list[str] | None = None,
-    staged: Staged | None = None,
 ) -> IngestResult:
-    """Fail-the-file atomicity: validate everything, then one append.
+    """Fail-the-file atomicity: validate everything, then publish.
 
-    partition_by is the physical analog of the reference's date index
-    (init-db/init.sql:67): facts partition by month(date) so date-range
-    queries prune files instead of scanning. With `staged` (which
-    `batch` reads), the staged counts replace the NOT NULL / UNIQUE
-    counting jobs and the row count, the accept/reject decision is the
-    same, and an accepted batch is published by renaming its staged
-    files (publish_staged) instead of being written again; a rejected
-    one is left in staging for the caller to delete."""
-    if staged is not None and partition_by:
-        raise ValueError("a staged batch cannot be partitioned")
+    `batch` reads the staged rows (stage_batch). The staged counts stand
+    in for the NOT NULL / UNIQUE counting jobs and the row count; an
+    accepted batch is published by renaming its staged files
+    (publish_staged), a rejected one is left in staging for the caller
+    to delete."""
     errors = validate_batch(
-        batch, business_key, not_null_cols, existing, fk_checks,
-        staged.counts if staged is not None else None,
+        batch, business_key, not_null_cols, existing, fk_checks, staged.counts
     )
     if errors:
         return IngestResult(table_name, source_file, "error", 0, errors)
-
-    if staged is not None:
-        publish_staged(batch.sparkSession, staged.path, staged.name, table_path)
-        return IngestResult(table_name, source_file, "success", staged.counts.n_rows, [])
-    # Row count via observe(): the metric rides the write job itself
-    # (the reference logs per-file row counts, etl/app.py; a post-write
-    # .count() would re-scan the batch — a second job for a number the
-    # write already saw).
-    from pyspark.sql import Observation
-
-    obs = Observation(f"ingest-{source_file}")
-    writer = batch.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(table_path)
-    return IngestResult(table_name, source_file, "success", int(obs.get["n_rows"]), [])
+    publish_staged(batch.sparkSession, staged.path, staged.name, table_path)
+    return IngestResult(table_name, source_file, "success", staged.counts.n_rows, [])
 
 
 def with_month_partition(df: DataFrame, ts_col: str, out: str = "month") -> DataFrame:

@@ -65,13 +65,17 @@ def dedup_keep_latest(
     )
 
 
+def null_predicate(not_null_cols: Sequence[str]) -> Column:
+    """True on a row that violates NOT NULL on any of `not_null_cols`."""
+    cond = F.lit(False)
+    for c in not_null_cols:
+        cond = cond | F.col(c).isNull()
+    return cond
+
+
 def null_violations(df: DataFrame, not_null_cols: Sequence[str]) -> DataFrame:
     """NOT NULL constraint report (init-db/init.sql:23-25,40-41,50-55)."""
-    cond = None
-    for c in not_null_cols:
-        cur = F.col(c).isNull()
-        cond = cur if cond is None else (cond | cur)
-    return df.filter(cond) if cond is not None else df.limit(0)
+    return df.filter(null_predicate(not_null_cols))
 
 
 def fk_orphans(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str) -> DataFrame:

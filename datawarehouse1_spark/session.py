@@ -46,14 +46,4 @@ def get_spark(app_name: str = "datawarehouse1-spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _register_datasources(spark)
     return spark
-
-
-def _register_datasources(spark: SparkSession) -> None:
-    """Register the repo's Python DataSources so `format("xlsx")` works
-    on any session from this factory (re-registration is a no-op
-    replace, so getOrCreate reuse is safe)."""
-    from datawarehouse1_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)

@@ -14,18 +14,17 @@ Spark has no built-in xlsx reader, so the distributed shape is:
 parsing each file's bytes inside the task. Parsing is per-file parallel,
 bytes never hit the driver.
 
-The parse itself uses openpyxl when installed, else the vendored
-pure-stdlib reader (sources/xlsx_mini.py) — the path runs for real in
-any environment; tests drive it end-to-end on the reference's own
+The parse itself uses the vendored pure-stdlib reader
+(sources/xlsx_mini.py), so the same bytes give the same values in every
+environment; tests drive it end-to-end on the reference's own
 data/excel/*.xlsx bytes.
 
-On the streaming ingest path (xlsx_stream(with_status=True)) the parse
-task is also where the per-file constraint checks run: each file's row
-count, NOT NULL violations and in-file duplicate business keys are
-counted on the pandas frame the task already holds and emitted as one
-marker row per file. The sink gathers the markers with observe() on the
-same write that stages the rows, and commits a single-file trigger in 1
-Spark job (2 with a status row); see streaming/file_ingest.py. The
+On the streaming ingest path (xlsx_stream) the parse task also emits one
+marker row per file: its parse error, its row count and its in-file
+duplicate business keys, counted on the pandas frame the task already
+holds. The sink gathers the markers with observe() on the same write
+that stages the rows, and commits a single-file trigger in 1 Spark job
+(2 with a status row); see streaming/file_ingest.py. The
 worksheet XML is read by one regex scan (sources/xlsx_mini.py), and the
 common column shapes coerce column-wise: on a 4-core x86 box the task
 body for a 2,000-row ventes file (parse, coerce, counts, Arrow batch)
@@ -41,7 +40,6 @@ fix and ~40 ms with it.
 from __future__ import annotations
 
 import datetime
-import io
 import os
 from collections.abc import Iterator, Sequence
 
@@ -60,40 +58,25 @@ class MissingColumnsError(ValueError):
 
 
 def default_xlsx_parser(name: str, data: bytes) -> pd.DataFrame:
-    """Parse xlsx bytes with the vendored stdlib reader (xlsx_mini).
-
-    Always the stdlib reader — NOT openpyxl-when-available — so the same
-    bytes produce the same values in every environment: pd.read_excel
-    converts date-formatted cells to Timestamps where xlsx_mini keeps
-    the raw serial floats the pipeline contract expects
-    (q_excel_serial_date), and renders empty cells NaN vs None. An
-    environment that wants pandas/openpyxl semantics opts in explicitly
-    via read_xlsx_dir(..., parser=openpyxl_xlsx_parser)."""
+    """Parse xlsx bytes with the vendored stdlib reader (xlsx_mini): it
+    keeps date-formatted cells as the raw serial floats the pipeline
+    contract expects (q_excel_serial_date)."""
     from datawarehouse1_spark.sources.xlsx_mini import parse_xlsx_bytes
 
     return parse_xlsx_bytes(data)
 
 
-def openpyxl_xlsx_parser(name: str, data: bytes) -> pd.DataFrame:
-    """Opt-in pandas+openpyxl parser (full xlsx format coverage; value
-    conventions differ from the stdlib reader — see default_xlsx_parser).
-    Raises if openpyxl is absent."""
-    import openpyxl  # noqa: F401  # pragma: no cover - env-dependent
-
-    return pd.read_excel(io.BytesIO(data), engine="openpyxl")
+# The streaming parse emits ONE marker row per file (data columns null)
+# carrying its row count and its in-file duplicate business keys; data
+# rows hold NULL in both, and in `parse_error`.
+FILE_ROWS, DUP_KEYS = "file_rows", "file_dup_keys"
+MARKER_COLS = (FILE_ROWS, DUP_KEYS)
 
 
-# with_status=True: every file also emits ONE marker row (data columns
-# null) carrying its row count, its NOT NULL-violating rows and its
-# in-file duplicate business keys; data rows hold NULL in all three.
-FILE_ROWS, NULL_ROWS, DUP_KEYS = "file_rows", "file_null_rows", "file_dup_keys"
-MARKER_COLS = (FILE_ROWS, NULL_ROWS, DUP_KEYS)
-
-
-def _xlsx_out_schema(schema: StructType, with_status: bool = False) -> StructType:
+def _xlsx_out_schema(schema: StructType, streaming: bool = False) -> StructType:
     # Every data field is declared NULLABLE here even when the warehouse
-    # schema says NOT NULL: status rows (with_status=True) legitimately
-    # carry all-null data columns for a failed file, and a nullable=False
+    # schema says NOT NULL: marker rows (streaming=True)
+    # carry all-null data columns, and a nullable=False
     # field receiving one NPEs deep in UnsafeProjection the moment the
     # batch is persisted — killing the stream instead of quarantining the
     # file. NOT NULL is a SINK constraint (validate_batch, mirroring the
@@ -104,7 +87,7 @@ def _xlsx_out_schema(schema: StructType, with_status: bool = False) -> StructTyp
         [StructField(f.name, f.dataType, True) for f in schema.fields]
     )
     out = out.add("source_file", "string").add("imported_at", "timestamp")
-    if with_status:
+    if streaming:
         out = out.add("parse_error", "string")
         for c in MARKER_COLS:
             out = out.add(c, "long")
@@ -245,59 +228,41 @@ def _coerce_to_fields(out: pd.DataFrame, fields) -> pd.DataFrame:
     return out
 
 
-def _file_counts(
-    parsed: pd.DataFrame, business_key: str | None, not_null_cols: Sequence[str]
-) -> tuple[int, int]:
-    """(NOT NULL-violating rows, business keys occurring more than once) of
-    one coerced file: the per-file figures of warehouse.null_violations
-    and warehouse.duplicate_keys. NaN becomes SQL NULL on the way to
-    Spark, and NULL keys group together there, hence isna() and
-    dropna=False."""
-    n_null = int(parsed[list(not_null_cols)].isna().any(axis=1).sum()) if not_null_cols else 0
-    n_dup = 0
-    if business_key is not None:
-        n_dup = int((parsed[business_key].value_counts(dropna=False) > 1).sum())
-    return n_null, n_dup
-
-
 def _make_xlsx_parse_fn(
     parser,
-    col_order: list[str],
-    skip_invalid: bool = False,
-    with_status: bool = False,
-    fields=None,
+    fields,
+    streaming: bool = False,
     business_key: str | None = None,
-    not_null_cols: Sequence[str] = (),
 ):
     """The shared per-task parse body: file bytes -> validated rows
-    projected to the declared schema + lineage columns. Used by both the
-    batch scan (read_xlsx_dir) and the streaming source (xlsx_stream).
+    projected to the declared schema `fields` + lineage columns. Used by
+    both the batch scan (read_xlsx_dir) and the streaming source
+    (xlsx_stream).
 
-    skip_invalid=True is the streaming mode: a file that fails to parse
-    or validate must NOT raise — raising inside a streaming micro-batch
-    would terminate the query, and the checkpointed source would replay
-    the same bad file on every restart, wedging the stream forever.
-    Batch mode keeps raising: the caller sees the bad file immediately
-    and no checkpoint is involved.
-
-    with_status=True additionally emits ONE marker row per file (data
-    columns null, MARKER_COLS set). A failed file's marker carries
+    The batch scan raises on a file that fails to parse or validate: the
+    caller sees the bad file immediately and no checkpoint is involved.
+    The stream (streaming=True) must NOT raise — raising inside a
+    streaming micro-batch would terminate the query, and the
+    checkpointed source would replay the same bad file on every restart,
+    wedging the stream forever. It emits ONE marker row per file instead
+    (data columns null, MARKER_COLS set). A failed file's marker carries
     `parse_error` = path + exception and zero counts: that is the
     reference's durable status=error record per file (etl/app.py:271-275
     writes file_metadata rows) — a log line alone leaves operators with
     no queryable record of skipped uploads, so the streaming ingest sink
-    routes these rows to a quarantine/status table
-    (streaming/file_ingest.py). A parsed file's marker carries its row
-    count and, for `business_key` / `not_null_cols`, its constraint
-    counts (_file_counts): the task already holds the file as one pandas
-    frame, so the sink reads them instead of running counting jobs."""
+    routes these rows to a status table (streaming/file_ingest.py). A
+    parsed file's marker carries its row count and the keys of
+    `business_key` it holds more than once, counted on the pandas frame
+    the task already holds (NaN becomes SQL NULL on the way to Spark,
+    and NULL keys group together there, hence dropna=False)."""
+    col_order = [f.name for f in fields]
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import logging
 
         now = datetime.datetime.now()
 
-        def _marker(path, error, n_rows, n_null, n_dup) -> pd.DataFrame:
+        def _marker(path, error, n_rows, n_dup) -> pd.DataFrame:
             return pd.DataFrame(
                 {c: [None] for c in col_order}
                 | {
@@ -305,7 +270,6 @@ def _make_xlsx_parse_fn(
                     "imported_at": [now],
                     "parse_error": [error],
                     FILE_ROWS: [n_rows],
-                    NULL_ROWS: [n_null],
                     DUP_KEYS: [n_dup],
                 }
             )
@@ -315,30 +279,28 @@ def _make_xlsx_parse_fn(
                 try:
                     parsed = parser(row["path"], row["content"])
                     validate_required_columns(parsed, col_order, row["path"])
-                    parsed = parsed[col_order].copy()
-                    if fields is not None:
-                        parsed = _coerce_to_fields(parsed, fields)
+                    out = _coerce_to_fields(parsed[col_order].copy(), fields)
                 except Exception as exc:
-                    if not skip_invalid:
+                    if not streaming:
                         raise
                     logging.getLogger(__name__).exception(
                         "skipping invalid xlsx file %s", row["path"]
                     )
-                    if with_status:
-                        yield _marker(row["path"], f"{row['path']}: {exc!r}", 0, 0, 0)
+                    yield _marker(row["path"], f"{row['path']}: {exc!r}", 0, 0)
                     continue
-                out = parsed  # already projected to the declared schema
                 out["source_file"] = os.path.basename(row["path"])
                 out["imported_at"] = now
-                if with_status:
-                    n_null, n_dup = _file_counts(out, business_key, not_null_cols)
-                    out["parse_error"] = None
-                    for c in MARKER_COLS:
-                        out[c] = None
+                if not streaming:
                     yield out
-                    yield _marker(row["path"], None, len(out), n_null, n_dup)
-                else:
-                    yield out
+                    continue
+                n_dup = 0
+                if business_key is not None:
+                    n_dup = int((out[business_key].value_counts(dropna=False) > 1).sum())
+                out["parse_error"] = None
+                for c in MARKER_COLS:
+                    out[c] = None
+                yield out
+                yield _marker(row["path"], None, len(out), n_dup)
 
     return parse
 
@@ -359,12 +321,8 @@ def read_xlsx_dir(
         .load(directory)
         .select("path", "content")
     )
-    col_order = [f.name for f in schema.fields]
     return binary.mapInPandas(
-        _make_xlsx_parse_fn(
-            parser, col_order, skip_invalid=False, fields=schema.fields
-        ),
-        schema=_xlsx_out_schema(schema),
+        _make_xlsx_parse_fn(parser, schema.fields), schema=_xlsx_out_schema(schema)
     )
 
 
@@ -372,24 +330,18 @@ def xlsx_stream(
     spark: SparkSession,
     directory: str,
     schema: StructType,
-    parser=default_xlsx_parser,
     glob: str = LOCK_GLOB,
-    max_files_per_trigger: int = 100,
-    with_status: bool = False,
     business_key: str | None = None,
-    not_null_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Streaming form of read_xlsx_dir: the binaryFile source watches the
     directory (checkpointed exactly-once file tracking — the reference's
-    whole polling/file_metadata loop, etl/app.py:249-289), and each new
-    file's bytes parse inside the task with the same shared parse body.
-    The reference's actual input format, end-to-end on the streaming
-    path. Invalid files never wedge the checkpointed stream: with
-    with_status=True (the ingest pipeline's mode) every file emits a
-    marker row — for a failed file, the durable parse_error status row
-    for the quarantine sink; for a parsed file, its constraint counts
-    for `business_key` / `not_null_cols`. With False a failed file is
-    logged and skipped."""
+    whole polling/file_metadata loop, etl/app.py:249-289), up to 100 new
+    files per trigger, and each new file's bytes parse inside the task
+    with the same shared parse body. The reference's actual input
+    format, end-to-end on the streaming path. Invalid files never wedge
+    the checkpointed stream: every file emits a marker row — for a
+    failed file, the durable parse_error status row; for a parsed file,
+    its row count and in-file duplicate `business_key` count."""
     binary = (
         spark.readStream.format("binaryFile")
         # binaryFile's schema is fixed, but a streaming source requires
@@ -398,22 +350,15 @@ def xlsx_stream(
             "path string, modificationTime timestamp, length long, content binary"
         )
         .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 100)
         .load(directory)
         .select("path", "content")
     )
-    col_order = [f.name for f in schema.fields]
     return binary.mapInPandas(
         _make_xlsx_parse_fn(
-            parser,
-            col_order,
-            skip_invalid=True,
-            with_status=with_status,
-            fields=schema.fields,
-            business_key=business_key,
-            not_null_cols=not_null_cols,
+            default_xlsx_parser, schema.fields, streaming=True, business_key=business_key
         ),
-        schema=_xlsx_out_schema(schema, with_status=with_status),
+        schema=_xlsx_out_schema(schema, streaming=True),
     )
 
 

@@ -12,21 +12,27 @@ query restart from checkpoint replaces reconnect/backoff. foreachBatch
 runs validate-then-publish per micro-batch, preserving the reference's
 fail-the-file atomicity.
 
-The xlsx commit (`service.run_service` -> `stream_ingest(fmt="xlsx")` ->
-`sources/excel.py` parse task -> `IngestSink.commit` ->
-`append_if_valid`) runs 1 Spark job per single-file trigger, 2 when a
-status row is written:
+Every format commits the same way (`service.run_service` ->
+`stream_ingest` -> `IngestSink.commit` -> `append_if_valid`). An xlsx
+stream parses each file in a task (`sources/excel.py`), which emits one
+marker row per file beside its data rows; a native file stream (parquet,
+csv, json) carries the marker columns as NULLs. Each trigger then runs:
 
 1. one write of the batch's data rows to a staging directory under the
-   stream's checkpoint directory (never inside the table). It runs the
-   parse task, which already holds each file as one pandas frame and
-   counts the file's rows, NOT NULL violations and in-file duplicate
-   keys there. Each file's counts travel as a marker row that the same
-   plan gathers with `observe(collect_list(...))`, so they reach the
-   driver with that job;
-2. the `file_status` append, only when some file failed to parse (a
+   stream's checkpoint directory (never inside the table), by
+   `operators.ingest.stage_batch`. Its `observe()` counts the rows and
+   their NOT NULL violations; an upstream `observe(collect_list(...))`
+   in the same plan gathers the marker rows (each xlsx file's parse
+   error, row count and in-file duplicate keys), so both reach the
+   driver with that one job;
+2. the `file_status` append, only when some xlsx file failed to parse (a
    missing required column, an unreadable workbook), built on the
-   driver from the failed files' markers.
+   driver from the failed files' markers;
+3. the three jobs of `duplicate_keys` over the staged rows, unless
+   exactly one parsed xlsx file holds rows (its marker holds the
+   count): a native batch and an xlsx batch of two or more files count
+   their keys there. The result equals `validate_batch`'s batch-wide
+   count.
 
 `append_if_valid` decides from those counts. An accepted batch is
 published by renaming its staged part files into the table (no Spark
@@ -37,30 +43,30 @@ the batch id, so a batch that Spark replays after a crash between the
 publish and its commit log finds its files in place and appends nothing
 twice; status rows are published the same way. A stream on a recreated
 checkpoint has a new query id, so its batch numbering, restarted at 0,
-does not collide with the batches it published before. Publishing is a rename, so the
-table and status directories must be on the checkpoint's file system;
-`stream_ingest` checks that, and clears the staging root, when it
-starts.
+does not collide with the batches it published before. Publishing is a
+rename, so the table and status directories must be on the checkpoint's
+file system; `stream_ingest` checks that, and clears the staging root,
+when it starts.
 
-Keys duplicated across files are checked with `duplicate_keys` (3 more
-jobs) over the staged files, read with the known schema, only when a
-batch holds two or more parsed files; the result equals
-`validate_batch`'s batch-wide count. Non-xlsx formats keep
-`validate_batch`'s counting jobs and a Spark append. The parse task
-itself is cheap only in a worker where `zip_finders.install()` has run:
-without it, pyspark's per-task `importlib.invalidate_caches()` re-reads
-`pyspark.zip` ~16 times before the parse starts (~210-240 ms of worker
-CPU against ~40 ms, on a 4-core x86 box).
+The xlsx parse task is cheap only in a worker where
+`zip_finders.install()` has run: without it, pyspark's per-task
+`importlib.invalidate_caches()` re-reads `pyspark.zip` ~16 times before
+the parse starts (~210-240 ms of worker CPU against ~40 ms, on a 4-core
+x86 box).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    from datawarehouse1_spark.operators.ingest import Staged
 
 LOCK_GLOB = "[!~]*"  # `~$` Excel lock-file skip (etl/app.py:262-263)
 
@@ -76,45 +82,41 @@ def stream_ingest(
     glob: str = LOCK_GLOB,
     status_dir: str | None = None,
 ) -> StreamingQuery:
-    """Watch a directory, enrich with lineage columns, hand each
-    micro-batch to `sink` (typically an IngestSink below). fmt='xlsx'
-    routes through the binaryFile source + per-task parse
+    """Watch a directory, enrich with lineage columns, stage each
+    micro-batch and hand it to `sink` (typically an IngestSink below).
+    fmt='xlsx' routes through the binaryFile source + per-task parse
     (sources/excel.py::xlsx_stream) — the reference's actual input
     format on the streaming path; other formats use the native file
     sources.
 
-    On the xlsx path, files that fail to parse/validate are recorded as
-    durable status=error rows in `status_dir` (default:
-    `<checkpoint_dir>/file_status`, queryable parquet) — the reference's
-    per-file file_metadata status row (etl/app.py:271-275). A log-only
-    skip would leave operators with no record of dropped uploads. An
-    `IngestSink` also gets each file's counts from the parse task. Every
-    xlsx batch is staged under `<checkpoint_dir>/_staging`, which is
-    cleared here: a staging directory left by a crash holds no batch a
-    restart still needs. Staged files are published by rename, so a
-    `status_dir` or IngestSink table on another file system than the
-    checkpoint raises ValueError here."""
-    if fmt == "xlsx":
-        from datawarehouse1_spark.operators.ingest import check_same_file_system, delete_path
-        from datawarehouse1_spark.sources.excel import xlsx_stream
+    Files that fail to parse are recorded as durable status=error rows
+    in `status_dir` (default: `<checkpoint_dir>/file_status`, queryable
+    parquet) — the reference's per-file file_metadata status row
+    (etl/app.py:271-275). A log-only skip would leave operators with no
+    record of dropped uploads. Every batch is staged under
+    `<checkpoint_dir>/_staging`, which is cleared here: a staging
+    directory left by a crash holds no batch a restart still needs.
+    Staged files are published by rename, so a `status_dir` or
+    IngestSink table on another file system than the checkpoint raises
+    ValueError here."""
+    from datawarehouse1_spark.operators.ingest import check_same_file_system, delete_path
+    from datawarehouse1_spark.sources.excel import MARKER_COLS, xlsx_stream
 
-        staging = f"{checkpoint_dir.rstrip('/')}/_staging"
-        status_dir = status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
-        checks = sink if isinstance(sink, IngestSink) else None
-        targets = (status_dir, checks.table_path) if checks else (status_dir,)
-        check_same_file_system(spark, staging, *targets)
-        delete_path(spark, staging)
+    staging = f"{checkpoint_dir.rstrip('/')}/_staging"
+    status_dir = status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
+    checks = sink if isinstance(sink, IngestSink) else None
+    targets = (status_dir, checks.table_path) if checks else (status_dir,)
+    check_same_file_system(spark, staging, *targets)
+    delete_path(spark, staging)
+    if fmt == "xlsx":
         # lineage columns are added inside the parse body
         stream = xlsx_stream(
             spark,
             watch_dir,
             schema,
             glob=glob if glob != LOCK_GLOB else "[!~]*.xlsx",
-            with_status=True,
             business_key=checks.business_key if checks else None,
-            not_null_cols=checks.not_null_cols if checks else (),
         )
-        sink = _with_status_sink(sink, staging, status_dir)
     else:
         stream = (
             spark.readStream.schema(schema)
@@ -122,12 +124,18 @@ def stream_ingest(
             .option("pathGlobFilter", glob)
             .option("maxFilesPerTrigger", 100)
             .load(watch_dir)
-            # O5 enrichment (etl/app.py:158-159), the real nondeterministic form
-            .withColumn("source_file", F.input_file_name())
+            # O5 enrichment (etl/app.py:158-159): the file's basename
+            .withColumn("source_file", F.col("_metadata.file_name"))
             .withColumn("imported_at", F.current_timestamp())
+            # no per-file markers: every row is a data row
+            .select(
+                "*",
+                F.lit(None).cast("string").alias("parse_error"),
+                *(F.lit(None).cast("long").alias(c) for c in MARKER_COLS),
+            )
         )
     return (
-        stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(_with_status_sink(sink, staging, status_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
@@ -139,24 +147,36 @@ def _with_status_sink(
     staging_root: str,
     status_dir: str,
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink over xlsx_stream(with_status=True) output.
-    One write stages the data rows (parse_error and marker columns
-    dropped) under `staging_root` and gathers the marker rows with
-    observe(), so parsing, counting and staging are one Spark job.
-    Failed files' markers become durable quarantine rows in `status_dir`
-    (append-only parquet — one row per failed file: source_file,
-    parse_error, imported_at, batch_id, status). The wrapped sink gets
-    the staged rows read back with their known schema (no inference
-    job), valid only during the call, with the markers and the staging
-    directory when it is an IngestSink. The staging is deleted after
-    the call, published or not. Published file names carry the query
-    id and the batch id (operators.ingest.publish_staged)."""
+    """Wrap a foreachBatch sink over a stream with marker columns. One
+    write stages the data rows (parse_error and marker columns dropped)
+    under `staging_root` (operators.ingest.stage_batch), counting them
+    and gathering the marker rows with observe(), so parsing, counting
+    and staging are one Spark job. Failed files' markers become durable
+    quarantine rows in `status_dir` (append-only parquet — one row per
+    failed file: source_file, parse_error, imported_at, batch_id,
+    status). The wrapped sink gets the staged rows, valid only during
+    the call, with the staged batch, the markers and the names of the
+    files its rows come from when it is an IngestSink. The staging is
+    deleted after the call, published or not. Published file names
+    carry the query id and the batch id (operators.ingest.publish_staged)."""
     from pyspark.sql import Observation
 
-    from datawarehouse1_spark.operators.ingest import delete_path, publish_staged
-    from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, MARKER_COLS, NULL_ROWS
+    from datawarehouse1_spark.operators.ingest import (
+        delete_path,
+        publish_staged,
+        stage_batch,
+        staging_counts,
+    )
+    from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, MARKER_COLS
 
-    marker = F.struct("source_file", "parse_error", "imported_at", FILE_ROWS, NULL_ROWS, DUP_KEYS)
+    # Columns are built once, not per batch: each costs py4j calls
+    is_data = F.col(FILE_ROWS).isNull()
+    marker = F.struct("source_file", "parse_error", "imported_at", FILE_ROWS, DUP_KEYS)
+    per_file = (
+        F.collect_list(F.when(~is_data, marker)).alias("markers"),
+        F.collect_set(F.when(is_data, F.col("source_file"))).alias("files"),
+    )
+    counts = staging_counts(inner.not_null_cols if isinstance(inner, IngestSink) else [])
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -164,16 +184,12 @@ def _with_status_sink(
         # the id Spark stores in the checkpoint, set on the stream's thread
         query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         name = f"{query_id}-{batch_id:010d}"
-        is_marker = F.col(FILE_ROWS).isNotNull()
         obs = Observation()
-        rows = (
-            batch.observe(obs, F.collect_list(F.when(is_marker, marker)).alias("markers"))
-            .filter(~is_marker)
-            .drop("parse_error", *MARKER_COLS)
-        )
+        rows = batch.observe(obs, *per_file).filter(is_data).drop("parse_error", *MARKER_COLS)
         try:
-            rows.write.mode("overwrite").parquet(f"{stage}/rows")
-            markers = obs.get["markers"]
+            staged_rows, staged = stage_batch(rows, f"{stage}/rows", name, counts)
+            observed = obs.get
+            markers = observed["markers"]
             failed = [
                 (m.source_file, m.parse_error, m.imported_at)
                 for m in markers
@@ -186,11 +202,10 @@ def _with_status_sink(
                     "*", F.lit(batch_id).alias("batch_id"), F.lit("error").alias("status")
                 ).write.mode("overwrite").parquet(f"{stage}/status")
                 publish_staged(spark, f"{stage}/status", name, status_dir)
-            staged = spark.read.schema(rows.schema).parquet(f"{stage}/rows")
             if isinstance(inner, IngestSink):
-                inner.commit(staged, batch_id, markers, f"{stage}/rows", name)
+                inner.commit(staged_rows, staged, markers, observed["files"])
             else:
-                inner(staged, batch_id)
+                inner(staged_rows, batch_id)
         finally:
             delete_path(spark, stage)
 
@@ -198,72 +213,52 @@ def _with_status_sink(
 
 
 class IngestSink:
-    """foreachBatch body: validate-then-publish per micro-batch (the
-    transaction-per-file analog) into the parquet table at `table_path`.
-    Invalid batches are skipped whole — the streaming query keeps
-    running (per-file try/except semantics, etl/app.py:271-275). The
-    accept/reject decision is `operators.ingest.append_if_valid`, looked
-    up at call time.
+    """The ingest table a stream commits into: validate-then-publish per
+    micro-batch (the transaction-per-file analog) into the parquet table
+    at `table_path`. Invalid batches are skipped whole — the streaming
+    query keeps running (per-file try/except semantics,
+    etl/app.py:271-275). The accept/reject decision is
+    `operators.ingest.append_if_valid`, looked up at call time.
 
-    An xlsx batch arrives staged (`commit`): it is checked before it is
+    A batch arrives staged (`commit`): it is checked before it is
     published, and publishing renames its staged files into the table
     under names taken from the query id and the batch id, so a batch
     replayed after a crash between the publish and the stream's commit
     log appends nothing twice, while a stream on a recreated checkpoint
-    publishes its renumbered batches. A native-format batch (`__call__`)
-    is appended by a Spark write after the checks; a replay of it
-    appends again."""
+    publishes its renumbered batches."""
 
     def __init__(self, table_path: str, business_key: str, not_null_cols: list[str]):
         self.table_path = table_path
         self.business_key = business_key
         self.not_null_cols = list(not_null_cols)
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        """A batch from a native file source: validate_batch counts it."""
-        from datawarehouse1_spark.operators import ingest
-
-        if batch.isEmpty():
-            return
-        ingest.append_if_valid(
-            batch,
-            self.table_path,
-            self.business_key,
-            self.not_null_cols,
-            source_file=f"batch-{batch_id}",
-        )
-
     def commit(
-        self, rows: DataFrame, batch_id: int, markers: list[Row], path: str, name: str
+        self, rows: DataFrame, staged: Staged, markers: list[Row], files: list[str]
     ) -> None:
-        """The staged data rows of an xlsx batch (`rows` reads `path`)
-        plus one marker row per file (sources/excel.py): the counts come
-        from the markers; keys are re-counted over the staged rows only
-        when two or more files hold rows. `name` names the batch's
-        published files (operators.ingest.publish_staged)."""
-        from datawarehouse1_spark.operators import ingest
-        from datawarehouse1_spark.operators.warehouse import duplicate_keys
-        from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS, NULL_ROWS
+        """The staged data rows of a batch (`rows` reads `staged.path`)
+        from the source `files`, plus one marker row per xlsx file
+        (sources/excel.py). A batch without rows (every file failed to
+        parse) is not a commit. The in-file duplicate-key count of the
+        marker stands in for the batch's when exactly one parsed file
+        holds rows; otherwise validate_batch counts keys over the staged
+        rows."""
+        from dataclasses import replace
 
-        files = [m for m in markers if m.parse_error is None and m[FILE_ROWS]]
-        if not files:
+        from datawarehouse1_spark.operators import ingest
+        from datawarehouse1_spark.sources.excel import DUP_KEYS, FILE_ROWS
+
+        if not staged.counts.n_rows:
             return
-        if len(files) > 1:
-            n_dup = duplicate_keys(rows, [self.business_key]).count()
-        else:
-            n_dup = files[0][DUP_KEYS]
-        counts = ingest.BatchCounts(
-            n_rows=sum(m[FILE_ROWS] for m in files),
-            n_null=sum(m[NULL_ROWS] for m in files),
-            n_dup=n_dup,
-        )
+        parsed = [m for m in markers if m.parse_error is None and m[FILE_ROWS]]
+        if len(parsed) == 1:
+            staged = replace(staged, counts=replace(staged.counts, n_dup=parsed[0][DUP_KEYS]))
         ingest.append_if_valid(
             rows,
             self.table_path,
             self.business_key,
             self.not_null_cols,
-            source_file=", ".join(sorted(m.source_file for m in files)),
-            staged=ingest.Staged(path, name, counts),
+            source_file=", ".join(sorted(files)),
+            staged=staged,
         )
 
 

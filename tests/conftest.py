@@ -59,14 +59,14 @@ def spark():
 # split is maintained HERE, in one place, instead of 100 pytestmark
 # edits. Slow = whole categories whose per-test cost is dominated by
 # end-to-end machinery (micro-batch streaming restarts, JDBC serving,
-# codec round-trips, property-based replays, the 306-query oracle
-# sweep twins — the driver's own correctness gate re-runs every
-# DECLARED query against DuckDB anyway) plus the individually measured
-# top offenders in otherwise-fast files (>=8 s each on the r17 box).
+# codec round-trips, property-based replays) plus the individually
+# measured top offenders in otherwise-fast files (>=8 s each on the r17
+# box). The oracle contract — every declared query against DuckDB
+# (test_oracle_parity) and over an empty corpus — stays in the default
+# tier.
 # Full suite (builder's batch-end gate): -m "slow or not slow".
 
 SLOW_MODULES = {
-    "test_oracle_parity",       # 306 sweep twins; driver re-checks declared
     "test_sql_serving",         # Thrift/JDBC end-to-end (250+ s)
     "test_property_based",      # randomized replays (~90 s)
     "test_accuracy_metrics",    # recall/parity metric recomputation (~115 s)
@@ -102,7 +102,6 @@ SLOW_MODULES = {
 # Individually slow tests (>= ~8 s measured r17) in otherwise-fast files.
 SLOW_TESTS = {
     "test_declared_outputs_are_driver_safe_types",      # 122 s
-    "test_every_declared_query_survives_an_empty_corpus",  # 97 s
     "test_ohlc_bucket_stays_ntz",                       # 75 s
     "test_bf_equal_spread_small_wide_spread_large",     # 30 s
     "test_bf_declared_arms_sane",                       # 12 s

@@ -12,7 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.functions.excel_serial import excel_serial_to_timestamp
-from datawarehouse1_spark.operators.ingest import append_if_valid, ingest_with_quarantine
+from datawarehouse1_spark.operators.ingest import (
+    append_if_valid,
+    ingest_with_quarantine,
+    stage_batch,
+    staging_counts,
+)
 from datawarehouse1_spark.operators.warehouse import dedup_keep_latest
 
 
@@ -23,6 +28,12 @@ def warehouse(spark, tmp_path):
     an FK orphan)."""
     paths = {t: str(tmp_path / t) for t in ("clients", "produits", "ventes")}
 
+    def stage_and_append(batch, table, key, not_null, source_file):
+        rows, staged = stage_batch(
+            batch, str(tmp_path / "_staging" / table), table, staging_counts(not_null)
+        )
+        return append_if_valid(rows, paths[table], key, not_null, source_file, staged)
+
     clients = spark.createDataFrame(
         [
             ("CLI001", "Dupont", "Jean", " 1 rue de Paris, Paris"),
@@ -31,17 +42,15 @@ def warehouse(spark, tmp_path):
         ],
         "client_id string, nom string, prenom string, adresse string",
     )
-    res = append_if_valid(
-        clients, paths["clients"], "client_id", ["client_id", "nom"], "clients.xlsx"
-    )
+    res = stage_and_append(clients, "clients", "client_id", ["client_id", "nom"], "clients.xlsx")
     assert res.status == "success"
 
     produits = spark.createDataFrame(
         [("PRO001", "USB ", "10.50"), ("PRO002", "HDMI", "25.00")],
         "produit_id string, nom string, prix_unitaire string",
     )
-    res = append_if_valid(
-        produits, paths["produits"], "produit_id", ["produit_id", "nom"], "produits.xlsx"
+    res = stage_and_append(
+        produits, "produits", "produit_id", ["produit_id", "nom"], "produits.xlsx"
     )
     assert res.status == "success"
 

@@ -1,6 +1,6 @@
 """Ingest pipeline: fail-the-file atomicity (the reference's transaction-
-per-file, etl/app.py:162), routing, xlsx plumbing with an injected parser,
-and partitioned fact writes with pruning."""
+per-file, etl/app.py:162) over a staged batch, routing, xlsx plumbing
+with an injected parser, and partitioned fact writes with pruning."""
 
 from __future__ import annotations
 
@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.operators.ingest import (
     append_if_valid,
+    stage_batch,
+    staging_counts,
     validate_batch,
     with_month_partition,
 )
@@ -31,11 +33,20 @@ def good_batch(spark):
     )
 
 
-def test_valid_batch_appends(tmp_path, good_batch):
-    res = append_if_valid(
-        good_batch, str(tmp_path / "produits"), "produit_id", ["produit_id", "nom"], "produits.xlsx"
+def _stage_and_append(tmp_path, batch, path, key, not_null, source_file):
+    rows, staged = stage_batch(
+        batch, str(tmp_path / "_staging"), "batch-0", staging_counts(not_null)
+    )
+    return append_if_valid(rows, path, key, not_null, source_file, staged)
+
+
+def test_valid_batch_appends(tmp_path, spark, good_batch):
+    path = str(tmp_path / "produits")
+    res = _stage_and_append(
+        tmp_path, good_batch, path, "produit_id", ["produit_id", "nom"], "produits.xlsx"
     )
     assert res.status == "success" and res.n_rows == 2
+    assert sorted(r.produit_id for r in spark.read.parquet(path).collect()) == ["P1", "P2"]
 
 
 def test_invalid_batch_writes_nothing(tmp_path, spark, good_batch):
@@ -44,7 +55,9 @@ def test_invalid_batch_writes_nothing(tmp_path, spark, good_batch):
         spark.createDataFrame([("P1", "USB-C", 1)], "produit_id string, nom string, stock int")
     )
     path = str(tmp_path / "produits")
-    res = append_if_valid(bad, path, "produit_id", ["produit_id", "nom"], "produits_v2.xlsx")
+    res = _stage_and_append(
+        tmp_path, bad, path, "produit_id", ["produit_id", "nom"], "produits_v2.xlsx"
+    )
     assert res.status == "error" and "duplicate business keys" in res.errors[0]
     import os
 

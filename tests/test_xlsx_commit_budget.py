@@ -1,14 +1,17 @@
-"""One xlsx trigger through service.run_service: the commit's Spark-job
-budget and its accept/reject law.
+"""One trigger through service.run_service: the commit's Spark-job
+budget and its accept/reject law, for xlsx drops and for native
+(parquet, json) drops, which commit the same way.
 
 Every case places its files in the watched directory before the stream
 starts, so they all land in the stream's first trigger. Jobs are counted
 from the JVM status store (`sc._jsc.sc().statusStore()`): the jobs of
 that trigger are the ones started between the stream's start and
-`processAllAvailable()`. The budget per trigger: one write that parses
-the files, stages their rows and gathers the per-file marker rows, the
+`processAllAvailable()`. The budget per trigger: one write that stages
+the batch's rows (parsed in that job, for xlsx), counts them and
+gathers the per-file marker rows, the
 `file_status` append when a file failed to parse, and the three jobs of
-the batch-wide `duplicate_keys` count when two or more files parsed.
+the batch-wide `duplicate_keys` count when two or more xlsx files
+parsed, or for any native batch (no parse task counts its keys).
 Publishing an accepted batch renames files and runs no job. A rejected
 batch's errors must equal what `validate_batch` reports over the same
 parsed rows.
@@ -16,7 +19,12 @@ parsed rows.
 
 from __future__ import annotations
 
+import datetime
+import shutil
+from decimal import Decimal
+
 import pytest
+from pyspark.sql.types import StructField, StructType
 
 from datawarehouse1_spark.operators import ingest
 from datawarehouse1_spark.schemas import BUSINESS_KEYS, NOT_NULL, VENTES
@@ -78,7 +86,45 @@ CASES = {
 }
 
 
-def _service_args(watch, root):
+NATIVE_FORMATS = ["parquet", "json"]
+# A native file is one batch of rows with no parse task to count its
+# keys: one staging write plus the three jobs of `duplicate_keys`.
+CASES |= {
+    f"{fmt}_{case}": ({f"ventes_a.{fmt}": (HEADER, rows)}, n_rows, 0, result, 4)
+    for fmt in NATIVE_FORMATS
+    for case, (rows, n_rows, result) in {
+        "valid": (_ventes("A"), ROWS, "success"),
+        "null_key": (_null_key(_ventes("A")), 0, "error"),
+        "in_file_duplicate": (_in_file_dup(_ventes("A")), 0, "error"),
+    }.items()
+}
+
+
+def _fmt(name: str) -> str:
+    return name.rsplit(".", 1)[1]
+
+
+def _drop(spark, xlsx_bytes, watch, name: str, header: list[str], rows: list[list]) -> None:
+    """Place the file `name` in `watch`: an xlsx workbook, or for
+    another extension the one part file of a Spark write in that format
+    of the rows typed as VENTES (a day serial becomes its timestamp)."""
+    fmt = _fmt(name)
+    if fmt == "xlsx":
+        (watch / name).write_bytes(xlsx_bytes(header, rows))
+        return
+    epoch = datetime.datetime(1899, 12, 30)
+    typed = [
+        [v, c, p, q, Decimal(f"{t:.2f}"), epoch + datetime.timedelta(days=d)]
+        for v, c, p, q, t, d in rows
+    ]
+    nullable = StructType([StructField(f.name, f.dataType, True) for f in VENTES])
+    out = watch.parent / f"_{name}"
+    spark.createDataFrame(typed, nullable).coalesce(1).write.format(fmt).save(str(out))
+    (part,) = out.glob("part-*")
+    shutil.move(part, watch / name)
+
+
+def _service_args(watch, root, fmt="xlsx"):
     return build_parser().parse_args([
         "--watch-dir", str(watch),
         "--table-root", str(root),
@@ -86,7 +132,7 @@ def _service_args(watch, root):
         "--business-key", BUSINESS_KEYS["ventes"],
         "--not-null", ",".join(NOT_NULL["ventes"]),
         "--interval", "0",
-        "--format", "xlsx",
+        "--format", fmt,
     ])
 
 
@@ -104,10 +150,11 @@ def _job_ids(spark) -> set[int]:
 @pytest.mark.parametrize("case", list(CASES))
 def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
     files, want_rows, want_status, want_result, budget = CASES[case]
+    fmt = _fmt(next(iter(files)))
     watch, root = tmp_path / "watch", tmp_path / "tables"
     watch.mkdir()
     for name, (header, rows) in files.items():
-        (watch / name).write_bytes(xlsx_bytes(header, rows))
+        _drop(spark, xlsx_bytes, watch, name, header, rows)
 
     results = []
     append = ingest.append_if_valid
@@ -118,7 +165,7 @@ def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
 
     monkeypatch.setattr(ingest, "append_if_valid", recorded)
     before = _job_ids(spark)
-    query = run_service(_service_args(watch, root), spark=spark)
+    query = run_service(_service_args(watch, root, fmt), spark=spark)
     try:
         query.processAllAvailable()
         jobs = len(_job_ids(spark) - before)
@@ -126,9 +173,10 @@ def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
         query.stop()
 
     table, status = root / "ventes", root / "_checkpoints" / "ventes" / "file_status"
-    n_rows = spark.read.parquet(str(table)).count() if table.exists() else 0
+    got = spark.read.parquet(str(table)).collect() if table.exists() else []
     n_status = spark.read.parquet(str(status)).count() if status.exists() else 0
-    assert (n_rows, n_status) == (want_rows, want_status)
+    assert (len(got), n_status) == (want_rows, want_status)
+    assert {r.source_file for r in got} <= set(files)  # the file's basename
 
     assert len(results) == 1
     result = results[0]
@@ -138,7 +186,10 @@ def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
     if want_result == "success":
         assert result.n_rows == want_rows and not result.errors
     else:  # every file of a rejected case parses
-        batch = read_xlsx_dir(spark, str(watch), VENTES)
+        if fmt == "xlsx":
+            batch = read_xlsx_dir(spark, str(watch), VENTES)
+        else:
+            batch = spark.read.schema(VENTES).format(fmt).load(str(watch))
         assert result.errors == ingest.validate_batch(
             batch, BUSINESS_KEYS["ventes"], NOT_NULL["ventes"]
         )
@@ -184,27 +235,35 @@ def _run_once(spark, args) -> None:
         query.stop()
 
 
+@pytest.mark.parametrize("fmt", ["xlsx", *NATIVE_FORMATS])
 def test_replayed_batch_publishes_once_and_restart_clears_staging(
-    spark, tmp_path, monkeypatch, xlsx_bytes
+    spark, tmp_path, monkeypatch, xlsx_bytes, fmt
 ):
     """A crash after the publish but before the commit log: on restart
     Spark replays the batch under the same id. Its part files are
     already in the table under names taken from that id, so the replay
-    adds nothing. A staging directory left behind is not part of the
-    table, and the restart removes it."""
+    adds nothing, whatever the format. A staging directory left behind
+    is not part of the table, and the restart removes it."""
     watch, root = tmp_path / "watch", tmp_path / "tables"
     watch.mkdir()
-    (watch / "ventes_a.xlsx").write_bytes(xlsx_bytes(HEADER, _ventes("A")))
-    (watch / "ventes_b.xlsx").write_bytes(xlsx_bytes(*_without(HEADER, _ventes("B"), "quantite")))
-    args = _service_args(watch, root)
+    _drop(spark, xlsx_bytes, watch, f"ventes_a.{fmt}", HEADER, _ventes("A"))
+    n_status = 0
+    if fmt == "xlsx":  # a file that fails to parse leaves one status row
+        (watch / "ventes_b.xlsx").write_bytes(xlsx_bytes(*_without(HEADER, _ventes("B"), "quantite")))
+        n_status = 1
+    args = _service_args(watch, root, fmt)
     table = root / "ventes"
     ckpt = root / "_checkpoints" / "ventes"
     status = ckpt / "file_status"
+
+    def status_rows() -> int:
+        return spark.read.parquet(str(status)).count() if status.exists() else 0
+
     _run_once(spark, args)
     published = sorted(p.name for p in table.glob("part-*"))
     assert len(published) == 1
     assert spark.read.parquet(str(table)).count() == ROWS
-    assert spark.read.parquet(str(status)).count() == 1
+    assert status_rows() == n_status
 
     for entry in (ckpt / "commits").iterdir():  # batch 0 never committed
         entry.unlink()
@@ -225,7 +284,7 @@ def test_replayed_batch_publishes_once_and_restart_clears_staging(
     assert [r.status for r in results] == ["success"]  # batch 0 ran again
     assert sorted(p.name for p in table.glob("part-*")) == published
     assert spark.read.parquet(str(table)).count() == ROWS
-    assert spark.read.parquet(str(status)).count() == 1
+    assert status_rows() == n_status
     assert not (ckpt / "_staging" / "batch-7").exists()
 
 

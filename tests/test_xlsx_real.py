@@ -236,165 +236,3 @@ def test_streaming_xlsx_skips_invalid_file(tmp_path, spark):
         assert len(status) == 1
     finally:
         q.stop()
-
-
-# --- Python DataSource connector (spark.read.format("xlsx")) ---
-
-
-def test_xlsx_datasource_single_file(spark):
-    """format('xlsx') on one workbook == the stdlib parser's frame:
-    same rows, schema inferred from the header row."""
-    from datawarehouse1_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    df = spark.read.format("xlsx").load(str(REF_XLSX / "clients.xlsx"))
-    pdf = parse_xlsx_bytes(_bytes("clients.xlsx"))
-    assert df.count() == len(pdf)
-    assert [f.name for f in df.schema.fields] == [str(c) for c in pdf.columns]
-    # the CLI001/CLI003 full-content duplicate survives the connector
-    ids = [r.client_id for r in df.select("client_id").collect()]
-    assert ids.count("CLI001") >= 1 and ids.count("CLI003") >= 1
-
-
-def test_xlsx_datasource_partition_per_file_and_lock_skip(spark):
-    """A directory load creates one partition per real workbook; Excel
-    `~$` lock files are skipped at listing time (the reference's skip
-    rule, etl/app.py:262)."""
-    from datawarehouse1_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    df = spark.read.format("xlsx").load(str(REF_XLSX))
-    # 6 entries on disk, 3 real workbooks -> 3 partitions
-    assert df.rdd.getNumPartitions() == 3
-
-
-def test_xlsx_datasource_excel_serial_dates(spark):
-    """ventes.xlsx's date_vente column arrives as Excel serial numbers;
-    the connector preserves them for functions/excel_serial.py."""
-    from datawarehouse1_spark.functions.excel_serial import (
-        excel_serial_to_timestamp,
-    )
-    from datawarehouse1_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    df = spark.read.format("xlsx").load(str(REF_XLSX / "ventes.xlsx"))
-    assert "date_vente" in df.columns
-    dated = df.select(
-        excel_serial_to_timestamp(F.col("date_vente").cast("double")).alias("d")
-    ).collect()
-    years = {r.d.year for r in dated if r.d is not None}
-    assert years and all(2000 <= y <= 2100 for y in years)
-
-
-def test_xlsx_datasource_streaming_poll(spark, tmp_path):
-    """readStream.format('xlsx'): the reference's polling loop as a real
-    streaming source — files landed after the stream starts arrive in
-    the next micro-batch, each file exactly once (offset = processed
-    file list, persisted in the offset log)."""
-    import shutil
-
-    from datawarehouse1_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    watch = tmp_path / "watch"
-    watch.mkdir()
-    shutil.copy(REF_XLSX / "clients.xlsx", watch / "clients_1.xlsx")
-
-    stream = (
-        spark.readStream.format("xlsx")
-        .option("header", "true")
-        .load(str(watch))
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("xlsx_poll")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n1 = spark.sql("SELECT count(*) c FROM xlsx_poll").first().c
-        assert n1 == 3  # clients.xlsx has 3 rows
-        # second file lands (same schema); lock file must be ignored
-        shutil.copy(REF_XLSX / "clients.xlsx", watch / "clients_2.xlsx")
-        (watch / "~$clients_3.xlsx").write_bytes(b"lock")
-        q.processAllAvailable()
-        n2 = spark.sql("SELECT count(*) c FROM xlsx_poll").first().c
-        assert n2 == 6
-        # no redelivery on an idle poll
-        q.processAllAvailable()
-        assert spark.sql("SELECT count(*) c FROM xlsx_poll").first().c == 6
-    finally:
-        q.stop()
-
-
-# --- v2 streaming offset: modified-file re-ingest + bounded size ---
-
-
-def _drive_stream_reader(watch: Path):
-    """Build a _XlsxStreamReader over `watch` directly (no Spark session
-    needed — SimpleDataSourceStreamReader is plain Python), returning
-    (reader, initial offset)."""
-    from datawarehouse1_spark.sources.xlsx_datasource import (
-        _infer_schema,
-        _XlsxStreamReader,
-    )
-
-    files = sorted(watch.glob("*.xlsx"))
-    schema = _infer_schema(str(files[0]), sheet=0, header=True)
-    reader = _XlsxStreamReader(schema, {"path": str(watch)})
-    return reader, reader.initialOffset()
-
-
-def test_stream_offset_reingests_overwritten_workbook(tmp_path):
-    """The reference re-processes a file whose mtime moved past its
-    file_metadata row (etl/app.py:36-52); the v2 offset's (mtime,size)
-    signature reproduces that rule for an in-place overwrite, which the
-    old name-only offset missed."""
-    import os
-
-    watch = tmp_path / "watch"
-    watch.mkdir()
-    target = watch / "clients.xlsx"
-    shutil.copyfile(REF_XLSX / "clients.xlsx", target)
-
-    reader, off0 = _drive_stream_reader(watch)
-    rows1, off1 = reader.read(off0)
-    assert len(list(rows1)) == 3
-    # idle poll: nothing new
-    rows2, off2 = reader.read(off1)
-    assert list(rows2) == []
-    # overwrite in place with different bytes (and force a new mtime even
-    # on coarse-granularity filesystems)
-    shutil.copyfile(REF_XLSX / "clients.xlsx", target)
-    st = os.stat(target)
-    os.utime(target, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    rows3, off3 = reader.read(off2)
-    assert len(list(rows3)) == 3  # re-ingested
-    # replay of the committed (off2, off3) range is deterministic
-    assert len(list(reader.readBetweenOffsets(off2, off3))) == 3
-
-
-def test_stream_offset_compacts_to_live_files_and_reads_legacy(tmp_path):
-    """Offset size stays O(files on disk): entries for deleted workbooks
-    drop out at the next poll. Legacy v1 offsets (a bare name list) are
-    grandfathered without redelivery."""
-    watch = tmp_path / "watch"
-    watch.mkdir()
-    shutil.copyfile(REF_XLSX / "clients.xlsx", watch / "a.xlsx")
-    shutil.copyfile(REF_XLSX / "clients.xlsx", watch / "b.xlsx")
-
-    reader, off0 = _drive_stream_reader(watch)
-    _, off1 = reader.read(off0)
-    assert set(map(Path, off1["files"])) == {watch / "a.xlsx", watch / "b.xlsx"}
-    (watch / "b.xlsx").unlink()
-    rows, off2 = reader.read(off1)
-    assert list(rows) == []
-    assert set(map(Path, off2["files"])) == {watch / "a.xlsx"}  # compacted
-
-    # legacy v1 offset: names only -> no redelivery, sigs adopted
-    legacy = {"files": [str(watch / "a.xlsx")]}
-    rows_l, off_l = reader.read(legacy)
-    assert list(rows_l) == []
-    assert off_l["files"][str(watch / "a.xlsx")].count(":") == 1
