@@ -1,4 +1,9 @@
-"""BPE-ish pre-tokenization, JVM-side.
+"""Word and BPE-ish pre-tokenization, JVM-side.
+
+`word_tokens` is the corpus word tokenizer every word-level text query
+uses: lowercase, split on runs of anything but [a-z0-9], drop the empty
+tokens a leading or trailing separator leaves. `WORD_TOKENS_SQL` is its
+DuckDB twin; both engines give the same token lists.
 
 Real BPE needs a learned merge table; what a budget-accounting pipeline
 needs BEFORE that is the pre-tokenizer — the published GPT-2 splitting
@@ -16,6 +21,19 @@ Whole-stage-codegen JVM expression — no Python in the hot path; at
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+WORD_TOKENS_SQL = (
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
+)
+
+
+def word_tokens(col: str = "text") -> F.Column:
+    """Array of lowercase [a-z0-9]+ words of a text column (the Spark
+    twin of WORD_TOKENS_SQL)."""
+    return F.filter(
+        F.split(F.lower(F.col(col)), "[^a-z0-9]+"), lambda t: t != F.lit("")
+    )
+
 
 # RE2-safe GPT-2-style pre-tokenizer (contractions | " ?"+letters |
 # " ?"+digits | " ?"+punct-run | whitespace-run)

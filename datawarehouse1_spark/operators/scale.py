@@ -263,12 +263,38 @@ def compact_table(
     `__precompact`/`__compacting` dir but never lose the table. Recovery
     rule: if `path` is missing, promote `__precompact` (pre-compaction
     data, always complete).
+
+    Compaction must not run beside a writer that publishes into `path`
+    (a streaming IngestSink): the swap moves the whole directory, so a
+    part file published after the read would land in `__precompact` and
+    be deleted with it. Just before the swap the table's data files are
+    compared with the files the read saw; if they differ, `__compacting`
+    is deleted, the table is left untouched and RuntimeError names the
+    files. A publish between that check and the first rename is still
+    lost; only the sink itself can close that window.
     """
     import math
     import shutil
     from pathlib import Path
+    from urllib.parse import unquote, urlparse
+
+    def data_files() -> set[str]:
+        # the files a parquet read of `path` picks up: none hidden
+        root = Path(path)
+        return {
+            str(f.resolve())
+            for f in root.rglob("*")
+            if f.is_file()
+            and not any(
+                part.startswith(("_", "."))
+                for part in f.relative_to(root).parts
+            )
+        }
 
     df = spark.read.parquet(path)
+    read = {
+        str(Path(unquote(urlparse(f).path)).resolve()) for f in df.inputFiles()
+    }
     total_bytes = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
 
@@ -291,6 +317,14 @@ def compact_table(
         != "false"
     )
 
+    current = data_files()
+    if current != read:
+        shutil.rmtree(staging)
+        raise RuntimeError(
+            f"compaction of {path} aborted, the table changed after its"
+            f" read: new {sorted(current - read)},"
+            f" gone {sorted(read - current)}"
+        )
     backup = f"{path}__precompact"
     shutil.move(path, backup)
     try:

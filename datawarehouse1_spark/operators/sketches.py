@@ -33,12 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def money_cents(col: str) -> F.Column:
-    """Exact integer cents from a 2-decimal money double: through
-    DECIMAL(18,2) (exact for the generator's values), never rounding a
-    >2-decimal double."""
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
+from datawarehouse1_spark.functions.money import money_units_long
 
 
 def log2_histogram(
@@ -50,7 +45,7 @@ def log2_histogram(
     (n, min_cents, max_cents, sum_cents). The groupBy is the ONLY
     shuffle, and it carries one row per group x ~25 octaves regardless
     of input size (partial aggregation collapses rows map-side)."""
-    cents = money_cents(value_col)
+    cents = money_units_long(value_col)
     bin_col = F.when(cents <= 0, F.lit(-1)).otherwise(
         F.floor(F.log2(cents.cast("double")))
     )

@@ -23,8 +23,8 @@ Mann-Whitney U rank test.
 * **Mann-Whitney U** — the nonparametric two-sample test between
   urgent-priority and other orders over order value, computed exactly
   from per-value counts: U counts pairs (a > b) + ties/2, doubled to
-  stay integer, via the rule-22 two-level cumulative (bounded value
-  buckets -> bounded border cumsum -> within-bucket window).  The
+  stay integer, via the rule-22 running sum (queries/deciles.py::
+  running_sum over bounded value buckets).  The
   effect size AUC = U/(n_a·n_b) is the probability-of-superiority —
   the decision statistic survives in exact micro-units without any
   normal approximation (rule 20).
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.money import sql_cents
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 
 # exact revenue in 1e-4 dollars: price (2dp) x (1 - discount (2dp))
@@ -356,10 +357,8 @@ def q_stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability a random A order exceeds a random B order, in floored
     micro-units — the rank test's effect size with no normal
     approximation or transcendental anywhere (rule 20).  The strictly-
-    below counts come from the rule-22 two-level cumulative: bounded
-    value buckets (cents div 1e6 — bounded by the price domain)
-    cumulate in one tiny ordered window, per-bucket offsets broadcast
-    back, within-bucket cumsums run partition-local.  Law pinned:
+    below counts come from queries/deciles.py::running_sum (rule 22)
+    over $10k value buckets, bounded by the price domain.  Law pinned:
     u2_a + u2_b == 2·n_a·n_b.  u2 sums ride DECIMAL(38,0) (ADVICE
     r10): exact far past the BIGINT ~4.6e18 bound, and if the final
     long cast ever saturates it yields NULL — loud, never a silently
@@ -369,36 +368,20 @@ def q_stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(sql_cents("o_totalprice")).alias("cents"),
         F.expr(f"CAST({_IS_A} AS INT)").alias("is_a"),
     )
-    # the per-value count table feeds BOTH the bucket-border summary
-    # and the within-bucket cumulative: checkpoint it (rule 12) so the
-    # fact scan + value aggregate run once; its size is bounded by the
-    # VALUE DOMAIN (distinct cents), not the row count (rule 22)
+    # the per-value count table feeds BOTH levels of the running sum:
+    # checkpoint it (rule 12) so the fact scan + value aggregate run
+    # once; its size is bounded by the VALUE DOMAIN (distinct cents),
+    # not the row count (rule 22)
     pv = (
         vals.groupBy("cents")
         .agg(
             F.sum("is_a").alias("na"),
             F.sum(1 - F.col("is_a")).alias("nb"),
         )
-        .withColumn("bucket", F.expr("cents div 1000000"))
         .localCheckpoint(eager=True)
     )
-    # bounded border cumsum over buckets (rule 22)
-    borders = pv.groupBy("bucket").agg(F.sum("nb").alias("bnb"))
-    wb = Window.orderBy("bucket").rangeBetween(Window.unboundedPreceding, 0)
-    offsets = borders.select(
-        "bucket", (F.sum("bnb").over(wb) - F.col("bnb")).alias("boff")
-    )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy("cents")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        pv.join(F.broadcast(offsets), "bucket")
-        .withColumn(
-            "cumb_less",
-            F.col("boff") + F.sum("nb").over(win) - F.col("nb"),
-        )
+    cum = running_sum(pv, "cents", ["nb"], 1_000_000).withColumnRenamed(
+        "nb_before", "cumb_less"
     )
     # ADVICE r10: the u2 summand rides DECIMAL(38,0) (like auc_a_e6's
     # numerator) rather than BIGINT — past the ~4.6e18 n_a·n_b bound,

@@ -13,10 +13,10 @@ revenue classification.
   the minimal set of top-revenue parts covering >= 80% of revenue,
   B to 95%, C the tail.  Computed at VALUE granularity (equal-revenue
   parts share a class, so the classification is value-deterministic,
-  not row-order-dependent) with the rule-22 two-level cumulative:
-  ascending per-value mass cumsums run inside bounded revenue buckets,
-  only the bucket summary crosses an ordered window, and the
-  'mass above v' test is exact integer arithmetic end to end.
+  not row-order-dependent) with the rule-22 running sum
+  (queries/deciles.py::running_sum, descending over bounded revenue
+  buckets); the 'mass above v' test is exact integer arithmetic end
+  to end.
 
 Reference parity: the reference ETL (etl/app.py) has no analytics
 surface; SURVEY.md §2C/§2D extension inventory.
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.money import sql_cents
 from datawarehouse1_spark.queries.analytics_r10e import _REV_E4
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 
 # ---------------------------------------------------------------- 1.
@@ -184,11 +185,10 @@ def q_orders_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     extends it to 95%, C is the tail.  A value v is in A iff the mass
     STRICTLY ABOVE v is < 80% of total (so v is still needed to reach
     80%) — exact integer comparisons on DECIMAL/HUGEINT masses, no
-    percentage float anywhere.  The descending cumulative runs the
-    rule-22 two-level way: per-value masses cumulate within bounded
-    $10k revenue buckets, only the bucket summary crosses the ordered
-    window, and offsets broadcast back.  Plan: one partkey fact
-    exchange, then everything is per-value/bucket bounded.  mass_e4
+    percentage float anywhere.  The mass above v and the total come
+    from queries/deciles.py::running_sum (rule 22, descending) over
+    bounded $10k revenue buckets.  Plan: one partkey fact exchange,
+    then everything is per-value/bucket bounded.  mass_e4
     outputs saturate BIGINT only past ~$9e14 of revenue per class
     (docstring bound; share_e6 never does)."""
     li = table(spark, sf_dir, "lineitem")
@@ -201,37 +201,17 @@ def q_orders_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_parts"),
             F.expr("CAST(s AS DECIMAL(38,0)) * COUNT(*)").alias("mass"),
         )
-        .withColumn("bucket", F.expr(f"s div {_ABC_BUCKET}"))
         .localCheckpoint(eager=True)
     )
-    # bounded bucket summary: descending cumulative offsets (rule 22)
-    borders = per_value.groupBy("bucket").agg(F.sum("mass").alias("bmass"))
-    wd = (
-        Window.orderBy(F.col("bucket").desc())
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    offsets = borders.select(
-        "bucket", (F.sum("bmass").over(wd) - F.col("bmass")).alias("boff")
-    )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("s").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        per_value.join(F.broadcast(offsets), "bucket")
-        .withColumn("incl_desc", F.col("boff") + F.sum("mass").over(win))
-        .withColumn("above", F.col("incl_desc") - F.col("mass"))
-    )
-    total = per_value.agg(F.sum("mass").alias("total"))
-    classed = cum.crossJoin(F.broadcast(total)).select(
-        F.when(F.col("above") * 5 < F.col("total") * 4, "A")
-        .when(F.col("above") * 20 < F.col("total") * 19, "B")
+    cum = running_sum(per_value, "s", ["mass"], _ABC_BUCKET, descending=True)
+    classed = cum.select(
+        F.when(F.col("mass_before") * 5 < F.col("mass_total") * 4, "A")
+        .when(F.col("mass_before") * 20 < F.col("mass_total") * 19, "B")
         .otherwise("C")
         .alias("abc_class"),
         "n_parts",
         "mass",
-        "total",
+        F.col("mass_total").alias("total"),
     )
     return classed.groupBy("abc_class").agg(
         F.sum("n_parts").cast("long").alias("n_parts"),

@@ -5,7 +5,7 @@ robust trend.
   revenue (q_window_cume_dist draws the Lorenz curve; this is its
   area statistic).  Computed EXACTLY from the rank-sum identity
   G = (2·Σ rank_i·x_i) / (n·Σx) − (n+1)/n, where the rank sums come
-  from per-value counts and the rule-22 two-level cumulative — no
+  from per-value counts and the rule-22 running sum — no
   global sort of customers, no float until the final floored
   micro-division.  Ties contribute their rank-range sum in closed form
   (c·cum_less + c(c+1)/2 per distinct value), so the statistic is
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.money import sql_cents
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 
 # ---------------------------------------------------------------- 1.
@@ -73,10 +74,10 @@ def q_orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     form rank-range sum — value-deterministic), the rank-sum identity
     gives gini_e6 = floor((Σ 2·rank·x − (n+1)·Σx)·1e6 / (n·Σx)) — 0
     for perfect equality, →1e6 as one customer takes everything.  The
-    strictly-below counts ride the rule-22 two-level cumulative
-    (bounded spend buckets), so no customer-scale sort exists in the
-    plan; Spark carries the products in DECIMAL(38,0), the oracle in
-    HUGEINT.  Plan: one custkey fact exchange, then per-value/bucket
+    strictly-below counts come from queries/deciles.py::running_sum
+    (rule 22, bounded spend buckets), so no customer-scale sort exists
+    in the plan; Spark carries the products in DECIMAL(38,0), the
+    oracle in HUGEINT.  Plan: one custkey fact exchange, then per-value/bucket
     bounded stages."""
     o = table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
@@ -85,21 +86,10 @@ def q_orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = (
         cust.groupBy("x")
         .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("bucket", F.expr("x div 10000000"))
         .localCheckpoint(eager=True)
     )
-    borders = pv.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    wb = Window.orderBy("bucket").rangeBetween(Window.unboundedPreceding, 0)
-    offsets = borders.select(
-        "bucket", (F.sum("bc").over(wb) - F.col("bc")).alias("boff")
-    )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy("x")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    cum = pv.join(F.broadcast(offsets), "bucket").withColumn(
-        "cum_less", F.col("boff") + F.sum("c").over(win) - F.col("c")
+    cum = running_sum(pv, "x", ["c"], 10_000_000).withColumnRenamed(
+        "c_before", "cum_less"
     )
     x38 = "CAST(x AS DECIMAL(38,0))"
     c38 = "CAST(c AS DECIMAL(38,0))"

@@ -31,10 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
 from datawarehouse1_spark.registry import declared
-
-# exact integer demand units (quantity is 2dp-safe in the testdata)
-_QTY_E2 = "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 # ---------------------------------------------------------------- 1.
 
@@ -45,7 +43,7 @@ _QTY_E2 = "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)"
     WITH pm AS (
       SELECT l_partkey,
              year(l_shipdate) * 12 + month(l_shipdate) AS m,
-             SUM({_QTY_E2}) AS d
+             SUM({sql_cents("l_quantity")}) AS d
       FROM lineitem
       GROUP BY l_partkey, year(l_shipdate) * 12 + month(l_shipdate)
     ),
@@ -80,7 +78,7 @@ def q_orders_xyz_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pm = li.groupBy(
         "l_partkey",
         (F.year("l_shipdate") * 12 + F.month("l_shipdate")).alias("m"),
-    ).agg(F.expr(f"SUM({_QTY_E2})").alias("d"))
+    ).agg(F.sum(money_units_long("l_quantity")).alias("d"))
     d38 = "CAST(d AS DECIMAL(38,0))"
     per_part = pm.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n"),

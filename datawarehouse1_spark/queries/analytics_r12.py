@@ -8,9 +8,9 @@ r1-r11 surface covers:
   q_stats_corr_matrix's Pearson: monotone association on ranks, immune
   to the heavy-tailed money columns' leverage points.  Exact: average
   ranks carried as the INTEGER 2·rank (2r = 2·cnt_less + cnt_eq + 1),
-  Pearson assembled from exact DECIMAL(38,0) co-moments over the
-  per-(x,y) joint distribution — the fact is touched once per pair and
-  only (value-pair, count) rows ever shuffle.
+  Pearson assembled from exact DECIMAL(38,0) co-moments — only
+  per-value aggregates (the x marginal, the y marginal with its x
+  moments) ever shuffle.
 
 * **ROC-AUC by group** — evaluates a score column against a binary
   label per source via the rank-sum identity AUC = U/(n1·n0); the
@@ -37,9 +37,9 @@ Exactness discipline (SCALE.md rule 20/27): every statistic reduces to
 integer/DECIMAL(38,0) sums; floats appear only in one final IEEE
 cast-div-sqrt-round per output; every floored quotient has a
 non-negative numerator so Spark `div`-truncation == DuckDB `//`-floor.
-Rank cumsums follow rule 22: two-level (within fixed-width value
-bucket + tiny bucket-offset summary), never a global window over
-per-value rows.
+Rank cumsums go through queries/deciles.py::running_sum (rule 22:
+within fixed-width value buckets + a tiny bucket-offset summary), never
+a global window over per-value rows.
 
 Reference parity: the reference ETL (etl/app.py) has no analytics
 surface; SURVEY.md §2C/§2D extension inventory.
@@ -52,20 +52,13 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 from datawarehouse1_spark.state_memo import rotate_checkpoint
 
 _DEC = "decimal(38,0)"
-
-# exact integer cents for the 2-dec money/rate columns (the
-# q_stats_corr_matrix discipline)
-def _cents(col: str) -> F.Column:
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("long")
-
-
-def _cents_sql(col: str) -> str:
-    return f"CAST(CAST({col} AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
 
 # ---------------------------------------------------------------------------
 # 1. Spearman rank correlation (exact, tie-corrected via average ranks)
@@ -78,151 +71,12 @@ _SPEARMAN_PAIRS = (
 )
 
 
-def _rank2(marg: DataFrame, width: int) -> DataFrame:
-    """Per distinct value: 2·(average rank) as exact BIGINT.
-
-    2r(v) = 2·cnt_less(v) + cnt_eq(v) + 1 — an integer even when the
-    average rank is .5.  cnt_less comes from a rule-22 TWO-LEVEL
-    cumulative sum: within a fixed-width value bucket (parallel across
-    buckets) plus a bucket-offset summary whose size is bounded by the
-    value domain, never the row count — only that tiny summary crosses
-    an unbounded window, then broadcasts back."""
-    b = marg.withColumn(
-        "bucket", F.floor(F.col("v") / F.lit(width)).cast("long")
-    )
-    win_in = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_in = b.select(
-        "bucket",
-        "v",
-        "c",
-        F.coalesce(F.sum("c").over(win_in), F.lit(0)).alias("cin"),
-    )
-    prior = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        b.groupBy("bucket")
-        .agg(F.sum("c").alias("bt"))
-        .select(
-            "bucket",
-            F.coalesce(F.sum("bt").over(prior), F.lit(0)).alias("off"),
-        )
-    )
-    return cum_in.join(F.broadcast(offsets), "bucket").select(
-        "v",
-        (2 * (F.col("cin") + F.col("off")) + F.col("c") + 1)
-        .cast("long")
-        .alias("r2"),
-    )
-
-
-def _rank2_grouped(
-    marg: DataFrame, width_col: F.Column, payload: tuple[str, ...] = ()
-) -> DataFrame:
-    """_rank2 with a grouping column: per (pid, distinct value), the
-    exact 2·(average rank) WITHIN that pid. Same rule-22 two-level
-    construction, every window additionally partitioned by pid so all
-    pairs' rank tables come out of one plan; `width_col` lets each pid
-    carry its own bucket width (any positive width is correct — it only
-    shifts work between the two levels).
-
-    r17: `payload` columns of `marg` ride through the rank pass
-    unchanged and come back alongside r2 — the device that lets a
-    caller FOLD its former (pid, v)-grain join-back into the rank
-    construction itself (guide §2.4: the v domain can be fact-grain,
-    so that join was the scale-heavy step; the payloads only fatten
-    the already-required cum window input)."""
-    b = marg.withColumn(
-        "bucket", F.floor(F.col("v") / width_col).cast("long")
-    )
-    win_in = (
-        Window.partitionBy("pid", "bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_in = b.select(
-        "pid",
-        "bucket",
-        "v",
-        "c",
-        *payload,
-        F.coalesce(F.sum("c").over(win_in), F.lit(0)).alias("cin"),
-    )
-    prior = (
-        Window.partitionBy("pid")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        b.groupBy("pid", "bucket")
-        .agg(F.sum("c").alias("bt"))
-        .select(
-            "pid",
-            "bucket",
-            F.coalesce(F.sum("bt").over(prior), F.lit(0)).alias("off"),
-        )
-    )
-    return cum_in.join(F.broadcast(offsets), ["pid", "bucket"]).select(
-        "pid",
-        "v",
-        *payload,
-        (2 * (F.col("cin") + F.col("off")) + F.col("c") + 1)
-        .cast("long")
-        .alias("r2"),
-    )
-
-
-def _spearman_pair(
-    li: DataFrame, x: str, y: str, wx: int, wy: int
-) -> DataFrame:
-    joint = (
-        li.select(_cents(x).alias("xv"), _cents(y).alias("yv"))
-        .groupBy("xv", "yv")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    mx = joint.groupBy(F.col("xv").alias("v")).agg(F.sum("cnt").alias("c"))
-    my = joint.groupBy(F.col("yv").alias("v")).agg(F.sum("cnt").alias("c"))
-    rx = _rank2(mx, wx).withColumnRenamed("r2", "r2x")
-    ry = _rank2(my, wy).withColumnRenamed("r2", "r2y")
-    scored = joint.join(
-        rx.withColumnRenamed("v", "xv"), "xv"
-    ).join(ry.withColumnRenamed("v", "yv"), "yv")
-    c = F.col("cnt").cast(_DEC)
-    s = scored.agg(
-        F.sum(c).alias("n"),
-        F.sum(c * F.col("r2x")).alias("sx"),
-        F.sum(c * F.col("r2y")).alias("sy"),
-        F.sum(c * F.col("r2x") * F.col("r2x")).alias("sxx"),
-        F.sum(c * F.col("r2y") * F.col("r2y")).alias("syy"),
-        F.sum(c * F.col("r2x") * F.col("r2y")).alias("sxy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    # zero-variance arm (a constant column) => rho undefined => NULL,
-    # never a divide-by-zero (the r10 Mann-Whitney lesson)
-    dx = F.nullif(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double"),
-        F.lit(0.0),
-    )
-    dy = F.nullif(
-        (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double"),
-        F.lit(0.0),
-    )
-    return s.select(
-        F.lit(x).alias("col_x"),
-        F.lit(y).alias("col_y"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.round(num / F.sqrt(dx) / F.sqrt(dy), 6).alias("rho6"),
-    )
-
-
 def _spearman_ctes_sql(i: int, x: str, y: str) -> str:
     """One pair's CTE chain, name-suffixed so all pairs share a single
     top-level WITH (DuckDB rejects WITH inside UNION ALL arms)."""
     return f"""
     joint_{i} AS (
-      SELECT {_cents_sql(x)} AS xv, {_cents_sql(y)} AS yv,
+      SELECT {sql_cents(x)} AS xv, {sql_cents(y)} AS yv,
              COUNT(*) AS cnt
       FROM lineitem GROUP BY 1, 2
     ),
@@ -277,133 +131,85 @@ def q_stats_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt_eq + 1 (the ·2 cancels in Pearson's r), co-moments accumulate
     as exact DECIMAL(38,0), and the only float ops are the final
     cast/divide/sqrt/round — both engines emit the identical rho6.
-    Scale shape (r14, VERDICT r13 #3 — previously one independent
-    fact scan + joint exchange PER pair): lineitem is scanned ONCE,
-    each row posexplodes into one (pair-id, xv, yv) struct per declared
-    pair, and a single map-side-combined exchange reduces the union of
-    ALL pairs' joint distributions at once. Marginals, the pid-grouped
-    two-level rank cumsums (rule 22: only bounded per-pid bucket
-    summaries cross a window), and the moment reduction then run on
-    that one distinct-VALUE table — bounded by the value domains, not
-    the row count. Per-pair bucket widths ride a literal array indexed
-    by pair id. The oracle text is unchanged (per-pair CTE chains);
-    the hash match pins the rewrite.
-    r17 (VERDICT r16 #4): only the BOUNDED x-rank table is ever
-    broadcast; the y ranks are computed in place on the y-marginal
-    table with the x-moment partials folded into the same aggregation,
-    eliminating the former fact-grain ry broadcast + join (see the
-    inline comments — moments are value-identical by reassociation)."""
+    Scale shape: each lineitem row posexplodes into one (pair-id, xv,
+    yv) struct per declared pair, so every pair shares each pass and
+    each exchange (the r14 merge; it was one scan and exchange PER
+    pair). Two passes over the fact: a map-side-combined x marginal,
+    bounded by the x domains, and the (pid, yv) y marginal with the
+    x-moment partials folded in, which is checkpointed. Both ranks
+    come from queries/deciles.py::running_sum grouped by pid (rule 22:
+    only bounded per-pid bucket summaries cross a window), with the
+    per-pair bucket widths in a literal array indexed by pair id. Only
+    the BOUNDED x-rank table is ever broadcast (r17, VERDICT r16 #4).
+    The oracle text is unchanged (per-pair CTE chains); the hash match
+    pins the rewrite."""
     li = table(spark, sf_dir, "lineitem")
-    joint = (
-        li.select(
-            F.posexplode(
-                F.array(
-                    *[
-                        F.struct(
-                            _cents(x).alias("xv"), _cents(y).alias("yv")
-                        )
-                        for x, y, _, _ in _SPEARMAN_PAIRS
-                    ]
-                )
-            ).alias("pid", "s")
-        )
-        .groupBy("pid", F.col("s.xv").alias("xv"), F.col("s.yv").alias("yv"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # rule 12: three consumers (two marginals + the moment join)
-    # read this table; materializing it keeps the single fact scan
-    # SINGLE (measured at sf0.1: without it the physical plan
-    # re-scans lineitem five times — 6.9 s vs 4.5 s). NOTE the
-    # pair-0 joint is fact-grain here (extendedprice is near-
-    # unique), so the checkpoint is bounded by min(fact, |domain_x|
-    # × |domain_y|) — at 100 TB prefer persist(DISK_ONLY) semantics
-    # if executor storage is tight; the plan shape is unchanged.
-    # rotate_checkpoint (ADVICE r14): each re-invocation in a
-    # long-lived session unpersists the previous invocation's blocks.
-    joint = rotate_checkpoint(joint, "spearman_joint")
+    # one (pid, xv, yv) row per fact row and declared pair
+    pairs = li.select(
+        F.posexplode(
+            F.array(
+                *[
+                    F.struct(
+                        money_units_long(x).alias("xv"),
+                        money_units_long(y).alias("yv"),
+                    )
+                    for x, y, _, _ in _SPEARMAN_PAIRS
+                ]
+            )
+        ).alias("pid", "s")
+    ).select("pid", F.col("s.xv").alias("xv"), F.col("s.yv").alias("yv"))
     wx_arr = F.array(*[F.lit(wx) for _, _, wx, _ in _SPEARMAN_PAIRS])
     wy_arr = F.array(*[F.lit(wy) for _, _, _, wy in _SPEARMAN_PAIRS])
-    mx = joint.groupBy("pid", F.col("xv").alias("v")).agg(
-        F.sum("cnt").alias("c")
+    mx = pairs.groupBy("pid", F.col("xv").alias("v")).agg(
+        F.count(F.lit(1)).alias("c")
     )
     # x ranks: the x columns are DOMAIN-BOUNDED (l_quantity 1..50,
     # l_discount 0.00..0.10 → ≤ ~61 distinct cents values across all
     # pairs at ANY corpus scale), so the x-rank table broadcasts by
     # construction — made explicit so a production size estimate can
     # never flip it to a shuffle join (guide §3.1).
-    rx = _rank2_grouped(
-        mx, F.element_at(wx_arr, F.col("pid") + 1)
-    ).withColumnRenamed("r2", "r2x")
-    # r17 (guide §2.4, VERDICT r16 #4): the y side previously built a
-    # separate y marginal, ranked it, and BROADCAST the ranked marginal
-    # back onto the joint — but pair 0's y (l_extendedprice) is
-    # near-unique, so that broadcast + join were FACT-GRAIN (the
-    # documented scale risk) and the joint was scanned five times.
-    # Instead: attach the bounded x ranks first, then fold the x-moment
-    # partial sums INTO the y-marginal aggregation, so the y rank
-    # machinery runs directly on that one (pid, yv)-grain table and the
-    # unbounded ry broadcast + fact-grain join vanish (joint now
-    # scanned 3x: x marginal, y marginal+moments, y bucket offsets).
-    # Exactness is reassociation only: Σ_joint cnt·f(r2x)·g(r2y)
-    # = Σ_yv g(r2y)·(Σ_xv cnt·f(r2x)) with every sum still exact
+    rx = running_sum(
+        mx, "v", ["c"], F.element_at(wx_arr, F.col("pid") + 1), by=["pid"]
+    ).select(
+        "pid",
+        F.col("v").alias("xv"),
+        (2 * F.col("c_before") + F.col("c") + 1).cast("long").alias("r2x"),
+    )
+    # The y ranks run on the (pid, yv)-grain y marginal with the
+    # x-moment partial sums folded into the same aggregation: the
+    # unbounded y-rank table is never broadcast or joined back (pair
+    # 0's y, l_extendedprice, is near-unique, so that join would be
+    # FACT-GRAIN). Exactness is reassociation only: Σ_rows f(r2x)·g(r2y)
+    # = Σ_yv g(r2y)·(Σ_rows of yv f(r2x)) with every sum exact
     # DECIMAL(38,0) — the six moments are value-identical, so rho6 is
     # bit-identical (oracle hash-match pins it at 3 SFs).
-    c = F.col("cnt").cast(_DEC)
+    r2x = F.col("r2x").cast(_DEC)
     ty = (
-        joint.join(
-            F.broadcast(rx.withColumnRenamed("v", "xv")), ["pid", "xv"]
-        )
+        pairs.join(F.broadcast(rx), ["pid", "xv"])
         .groupBy("pid", "yv")
         .agg(
-            F.sum("cnt").alias("c"),
-            F.sum(c * F.col("r2x")).alias("sxc"),
-            F.sum(c * F.col("r2x") * F.col("r2x")).alias("sxxc"),
+            F.count(F.lit(1)).alias("c"),
+            F.sum(r2x).alias("sxc"),
+            F.sum(r2x * r2x).alias("sxxc"),
         )
     )
-    # y rank over ty = the _rank2_grouped two-level construction (rule
-    # 22) inlined so the per-(pid,yv) moment payloads ride along; the
-    # bucket offsets come straight off the checkpointed joint (same
-    # bucket totals, no second pass over ty's join+agg).
-    wy = F.element_at(wy_arr, F.col("pid") + 1)
-    b = ty.withColumn("bucket", F.floor(F.col("yv") / wy).cast("long"))
-    win_in = (
-        Window.partitionBy("pid", "bucket")
-        .orderBy("yv")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = b.select(
-        "pid",
-        "bucket",
-        "c",
-        "sxc",
-        "sxxc",
-        F.coalesce(F.sum("c").over(win_in), F.lit(0)).alias("cin"),
-    )
-    prior = (
-        Window.partitionBy("pid")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        joint.groupBy(
-            "pid",
-            F.floor(F.col("yv") / wy).cast("long").alias("bucket"),
-        )
-        .agg(F.sum("cnt").alias("bt"))
-        .select(
-            "pid",
-            "bucket",
-            F.coalesce(F.sum("bt").over(prior), F.lit(0)).alias("off"),
-        )
-    )
-    ranked = cum.join(F.broadcast(offsets), ["pid", "bucket"]).select(
+    # rule 12: both levels of the y running sum read ty; materializing
+    # it keeps the fact scan, the x-rank join and the (pid, yv)
+    # aggregate from running twice. NOTE pair 0's ty is fact-grain
+    # (extendedprice is near-unique), so the checkpoint is bounded by
+    # min(fact, |domain_y|) — at 100 TB prefer persist(DISK_ONLY)
+    # semantics if executor storage is tight; the plan shape is
+    # unchanged. rotate_checkpoint (ADVICE r14): each re-invocation in
+    # a long-lived session unpersists the previous invocation's blocks.
+    ty = rotate_checkpoint(ty, "spearman_ty")
+    ranked = running_sum(
+        ty, "yv", ["c"], F.element_at(wy_arr, F.col("pid") + 1), by=["pid"]
+    ).select(
         "pid",
         "c",
         "sxc",
         "sxxc",
-        (2 * (F.col("cin") + F.col("off")) + F.col("c") + 1)
-        .cast("long")
-        .alias("r2y"),
+        (2 * F.col("c_before") + F.col("c") + 1).cast("long").alias("r2y"),
     )
     cy = F.col("c").cast(_DEC)
     s = ranked.groupBy("pid").agg(
@@ -492,42 +298,17 @@ def q_quality_auc_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(is_en, 1)).alias("p"),
         F.count(F.when(~is_en, 1)).alias("q"),
     )
-    b = pv.withColumn(
-        "bucket", F.floor(F.col("n_chars") / F.lit(1024)).cast("long")
-    )
-    win_in = (
-        Window.partitionBy("source", "bucket")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_in = b.select(
+    ranked = running_sum(
+        pv.withColumn("pq", F.col("p") + F.col("q")),
+        "n_chars",
+        ["pq"],
+        1024,
+        by=["source"],
+    ).select(
         "source",
-        "bucket",
         "p",
         "q",
-        F.coalesce(F.sum(F.col("p") + F.col("q")).over(win_in), F.lit(0)).alias(
-            "cin"
-        ),
-    )
-    prior = (
-        Window.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        b.groupBy("source", "bucket")
-        .agg(F.sum(F.col("p") + F.col("q")).alias("bt"))
-        .select(
-            "source",
-            "bucket",
-            F.coalesce(F.sum("bt").over(prior), F.lit(0)).alias("off"),
-        )
-    )
-    r2 = (
-        2 * (F.col("cin") + F.col("off")) + (F.col("p") + F.col("q")) + 1
-    ).cast(_DEC)
-    ranked = cum_in.join(F.broadcast(offsets), ["source", "bucket"]).select(
-        "source", "p", "q", r2.alias("r2")
+        (2 * F.col("pq_before") + F.col("pq") + 1).cast(_DEC).alias("r2"),
     )
     s = ranked.groupBy("source").agg(
         F.sum("p").cast(_DEC).alias("n1"),
@@ -718,15 +499,7 @@ def q_profile_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 5. PMI collocations (exact integer lift ranking)
 # ---------------------------------------------------------------------------
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 _PMI_MIN_COUNT = 5
@@ -736,7 +509,7 @@ _PMI_MIN_COUNT = 5
     "q_text_collocations_pmi",
     oracle=f"""
     WITH toks AS (
-      SELECT {_TOKENIZE_SQL} AS t FROM documents
+      SELECT {WORD_TOKENS_SQL} AS t FROM documents
     ),
     uni AS (
       SELECT w, COUNT(*) AS c
@@ -784,7 +557,7 @@ def q_text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, and the top-20 resolves as TakeOrderedAndProject with
     a full (lift, bigram) tie-break (rule 29)."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select(_tokens().alias("t"))
+    toks = d.select(word_tokens().alias("t"))
     uni = (
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
@@ -260,15 +261,7 @@ def q_orders_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3. Simpson lexical diversity per source
 # ---------------------------------------------------------------------------
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 @declared(
@@ -276,7 +269,7 @@ def _tokens():
     oracle=f"""
     WITH tf AS (
       SELECT source, w, COUNT(*) AS c
-      FROM (SELECT source, unnest({_TOKENIZE_SQL}) AS w FROM documents)
+      FROM (SELECT source, unnest({WORD_TOKENS_SQL}) AS w FROM documents)
       GROUP BY source, w
     )
     SELECT source,
@@ -300,7 +293,7 @@ def q_text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-source reduction."""
     d = table(spark, sf_dir, "documents")
     tf = (
-        d.select("source", F.explode(_tokens()).alias("w"))
+        d.select("source", F.explode(word_tokens()).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )

@@ -42,19 +42,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +73,7 @@ def _rake_stop_sql() -> str:
     "q_text_keyphrases_rake",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t FROM documents
     ),
     pos AS (
       SELECT doc_id, pos, t[pos] AS w FROM (
@@ -143,7 +136,7 @@ def q_text_keyphrases_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     word phrases."""
     d = table(spark, sf_dir, "documents")
     pos = d.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos", "w")
+        "doc_id", F.posexplode(word_tokens()).alias("pos", "w")
     )
     is_stop = F.col("w").isin(*_RAKE_STOP)
     seg_w = (

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
@@ -276,15 +277,7 @@ def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3. Heaps'-law vocabulary growth fit
 # ---------------------------------------------------------------------------
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 # floor(log2(n)) for n >= 1 as exact integer arithmetic (the zipf device)
@@ -295,7 +288,7 @@ _FLOG2 = "(length(bin({n})) - 1)"
     "q_text_heaps_fit",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t FROM documents
     ),
     doc_buckets AS (
       SELECT {_FLOG2.format(n="doc_id + 1")} AS bk, SUM(len(t)) AS toks
@@ -352,7 +345,7 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     via length(bin(n))−1 — pure integer, no libm (the zipf device);
     OLS from exact integer co-moments, two final IEEE divisions."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens().alias("t"))
+    toks = d.select("doc_id", word_tokens().alias("t"))
     flog2 = lambda col: (F.length(F.bin(col)) - 1)  # noqa: E731
     doc_buckets = toks.groupBy(
         flog2(F.col("doc_id") + 1).alias("bk")
@@ -422,7 +415,7 @@ def q_text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tf AS (
       SELECT w, COUNT(*) AS c
-      FROM (SELECT unnest({_TOKENIZE_SQL}) AS w FROM documents)
+      FROM (SELECT unnest({WORD_TOKENS_SQL}) AS w FROM documents)
       GROUP BY w
     ),
     spectrum AS (
@@ -455,7 +448,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-bucket aggregate."""
     d = table(spark, sf_dir, "documents")
     tf = (
-        d.select(F.explode(_tokens()).alias("w"))
+        d.select(F.explode(word_tokens()).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )

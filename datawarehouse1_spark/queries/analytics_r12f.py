@@ -54,12 +54,8 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.vector import cosine, sql_cosine
-from datawarehouse1_spark.queries.analytics_r12 import (
-    _cents,
-    _cents_sql,
-    _rank2,
-    _rank2_grouped,
-)
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.queries.similarity import N_QUERY_VECTORS, TOP_K
 from datawarehouse1_spark.registry import declared
 
@@ -87,7 +83,7 @@ _KW_CASES = (
 
 
 def _kw_arm_sql(label: str, tbl: str, grp: str, num: str) -> str:
-    cents = _cents_sql(num)
+    cents = sql_cents(num)
     return f"""
     SELECT '{label}' AS case_name,
            CAST(n AS BIGINT) AS n_rows,
@@ -135,12 +131,14 @@ def _kw_arm(
 ) -> DataFrame:
     t = table(spark, sf_dir, tbl)
     joint = (
-        t.select(F.col(grp).alias("g"), _cents(num).alias("v"))
+        t.select(F.col(grp).alias("g"), money_units_long(num).alias("v"))
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     marg = joint.groupBy(F.col("v").alias("v")).agg(F.sum("cnt").alias("c"))
-    r2 = _rank2(marg, width)
+    r2 = running_sum(marg, "v", ["c"], width).select(
+        "v", (2 * F.col("c_before") + F.col("c") + 1).cast("long").alias("r2")
+    )
     grps = (
         joint.join(r2, "v")
         .groupBy("g")
@@ -226,9 +224,9 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     r16 (guide §2.4 shared-exchange consolidation — the same pid
     merge spearman got in r14): the arms' joints union into ONE
     pid-tagged table, so the marginal aggregate, the two-level rank
-    cumsums (_rank2_grouped, per-pid bucket widths riding a literal
-    array), the tie sum, and the moment reduction each run ONCE over
-    the union instead of once per arm — the per-arm downstream
+    cumsums (running_sum by pid, per-pid bucket widths riding a
+    literal array), the tie sum, and the moment reduction each run
+    ONCE over the union instead of once per arm — the per-arm downstream
     machinery (~12 small exchanges) collapses to ~7. The per-table
     scans are unchanged (the arms read different tables). Measured
     3.13→2.83 s min / 3.85→3.21 s median interleaved at sf0.1; the
@@ -238,7 +236,7 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r17 (VERDICT r16 #4's pattern, applied here too): the bounded
     group breakdown (≤5 groups per arm) rides the value marginal as a
-    collect_list payload through _rank2_grouped, so the rank table is
+    collect_list column through running_sum, so the rank table is
     never joined back onto the (pid, g, v) joint — see the inline
     comment; the moment sums are value-identical by reassociation.
 
@@ -256,7 +254,7 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             t.select(
                 F.lit(pid).alias("pid"),
                 F.col(grp).alias("g"),
-                _cents(num).alias("v"),
+                money_units_long(num).alias("v"),
             )
             .groupBy("pid", "g", "v")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -277,8 +275,12 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list(F.struct(F.col("g"), F.col("cnt"))).alias("gs"),
     )
     w_arr = F.array(*[F.lit(w) for _, _, _, _, w in _KW_CASES])
-    r2 = _rank2_grouped(
-        marg, F.element_at(w_arr, F.col("pid") + 1), payload=("gs",)
+    r2 = running_sum(
+        marg, "v", ["c"], F.element_at(w_arr, F.col("pid") + 1), by=["pid"]
+    ).select(
+        "pid",
+        "gs",
+        (2 * F.col("c_before") + F.col("c") + 1).cast("long").alias("r2"),
     )
     ge = F.explode("gs")
     grps = (

@@ -38,20 +38,18 @@ surface; SURVEY.md §2C/§2D extension inventory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
-from datawarehouse1_spark.queries.analytics_r12 import _cents, _cents_sql
-from datawarehouse1_spark.queries.analytics_r12b import (
-    _TOKENIZE_SQL,
-    _tokens,
-)
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.queries.analytics_r12f import _exact_floor_div
 from datawarehouse1_spark.queries.copurchase import (
     copurchase_edges,
     copurchase_edges_sql,
 )
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
@@ -69,7 +67,7 @@ _BF_CASES = (
 
 
 def _bf_arm_sql(label: str, tbl: str, grp: str, num: str) -> str:
-    cents = _cents_sql(num)
+    cents = sql_cents(num)
     return f"""
     SELECT '{label}' AS case_name,
            CAST(n AS BIGINT) AS n_rows,
@@ -121,49 +119,17 @@ def _bf_arm(
 ) -> DataFrame:
     t = table(spark, sf_dir, tbl)
     joint = (
-        t.select(F.col(grp).alias("g"), _cents(num).alias("v"))
+        t.select(F.col(grp).alias("g"), money_units_long(num).alias("v"))
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # rule-22 two-level per-group cumulative count over the VALUE
-    # marginal: within (g, bucket) windows run in parallel; only the
-    # per-group bucket summary (bounded by domain/width) crosses a
-    # per-group ordered window.
-    b = joint.withColumn(
-        "bucket", F.floor(F.col("v") / F.lit(width)).cast("long")
-    )
-    win_in = (
-        Window.partitionBy("g", "bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_in = b.select(
-        "g", "bucket", "v", "c",
-        F.coalesce(F.sum("c").over(win_in), F.lit(0)).alias("cin"),
-    )
-    prior = (
-        Window.partitionBy("g")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        b.groupBy("g", "bucket")
-        .agg(F.sum("c").alias("bt"))
-        .select(
-            "g", "bucket",
-            F.coalesce(F.sum("bt").over(prior), F.lit(0)).alias("off"),
-        )
-    )
-    gtot = joint.groupBy("g").agg(F.sum("c").alias("ng"))
-    w = (
-        cum_in.join(F.broadcast(offsets), ["g", "bucket"])
-        .join(F.broadcast(gtot), "g")
-        .select(
-            "g", "v", "c",
-            (F.col("cin") + F.col("off")).alias("prev"),
-            (F.col("cin") + F.col("off") + F.col("c")).alias("cum"),
-            "ng",
-        )
+    # per-group cumulative count over the VALUE marginal (rule 22)
+    w = running_sum(joint, "v", ["c"], width, by=["g"]).select(
+        "g",
+        "v",
+        F.col("c_before").alias("prev"),
+        (F.col("c_before") + F.col("c")).alias("cum"),
+        F.col("c_total").alias("ng"),
     )
     r1 = F.expr("(ng + 1) div 2")
     r2 = F.expr("ng div 2 + 1")
@@ -334,7 +300,7 @@ def q_graph_components_copurchase(
     oracle=f"""
     WITH tf AS (
       SELECT doc_id, w, COUNT(*) AS c
-      FROM (SELECT doc_id, unnest({_TOKENIZE_SQL}) AS w FROM documents)
+      FROM (SELECT doc_id, unnest({WORD_TOKENS_SQL}) AS w FROM documents)
       GROUP BY doc_id, w
     ),
     per_doc AS (
@@ -368,7 +334,7 @@ def q_text_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2 histogram."""
     d = table(spark, sf_dir, "documents")
     tf = (
-        d.select("doc_id", F.explode(_tokens()).alias("w"))
+        d.select("doc_id", F.explode(word_tokens()).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )

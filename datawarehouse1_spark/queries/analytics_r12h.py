@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
-from datawarehouse1_spark.queries.analytics_r12 import _cents, _cents_sql
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
@@ -209,8 +209,8 @@ def q_profile_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pts AS (
       SELECT p.p_brand,
-             {_cents_sql("l.l_discount")} AS x,
-             {_cents_sql("l.l_quantity")} AS y
+             {sql_cents("l.l_discount")} AS x,
+             {sql_cents("l.l_quantity")} AS y
       FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     ),
     m AS (
@@ -251,8 +251,8 @@ def q_orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-width ceiling appears at any SF."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        _cents("l_discount").alias("x"),
-        _cents("l_quantity").alias("y"),
+        money_units_long("l_discount").alias("x"),
+        money_units_long("l_quantity").alias("y"),
     )
     p = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     pts = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)

@@ -42,10 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
-from datawarehouse1_spark.queries.analytics_r12b import (
-    _TOKENIZE_SQL,
-    _tokens,
-)
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.queries.copurchase import (
     copurchase_edges,
     copurchase_edges_sql,
@@ -323,7 +320,7 @@ def q_events_transition_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(2 * pos <= len(t) AS INT) AS is_head
       FROM (
         SELECT source, t, unnest(generate_series(1, len(t))) AS pos
-        FROM (SELECT source, {_TOKENIZE_SQL} AS t FROM documents)
+        FROM (SELECT source, {WORD_TOKENS_SQL} AS t FROM documents)
       )
     ),
     tc AS (
@@ -363,10 +360,10 @@ def q_text_head_tail_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the token-grain table once."""
     d = table(spark, sf_dir, "documents")
     # materialize the token array ONCE behind a projection boundary —
-    # inlining _tokens() into both size() and posexplode() makes
+    # inlining word_tokens() into both size() and posexplode() makes
     # codegen run the regex split twice per document (measured 4.5 s →
     # 1.0 s at sf0.1)
-    arr = d.select("source", _tokens().alias("t"))
+    arr = d.select("source", word_tokens().alias("t"))
     tok = arr.select(
         "source",
         F.size("t").alias("n"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.money import money_units_long
 from datawarehouse1_spark.registry import declared
 
 # ---------------------------------------------------------------------------
@@ -150,9 +151,7 @@ def q_orders_basket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_order = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.countDistinct("l_partkey").alias("n_parts"),
-        F.sum(
-            (F.col("l_quantity").cast("decimal(18,2)") * 100).cast("long")
-        ).alias("qty_cents"),
+        F.sum(money_units_long("l_quantity")).alias("qty_cents"),
     )
     return per_order.groupBy("n_lines").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.operators.scale import widen_if_narrow
 from datawarehouse1_spark.registry import declared
 
@@ -129,15 +130,7 @@ def q_split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- 2.
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 # floor(log2(n)) for n >= 1 as EXACT integer arithmetic in both
@@ -150,7 +143,7 @@ _FLOG2 = "(length(bin({n})) - 1)"
     oracle=f"""
     WITH tf AS (
       SELECT lang, term, COUNT(*) AS cnt
-      FROM (SELECT lang, unnest({_TOKENIZE_SQL}) AS term FROM documents)
+      FROM (SELECT lang, unnest({WORD_TOKENS_SQL}) AS term FROM documents)
       GROUP BY lang, term
     ),
     ranked AS (
@@ -200,7 +193,7 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     tf = (
         widen_if_narrow(d.select("lang", "text"))
-        .select("lang", F.explode(_tokens()).alias("term"))
+        .select("lang", F.explode(word_tokens()).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -25,12 +25,9 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.queries.curation_r10 import _SPLIT_SQL
-from datawarehouse1_spark.queries.curation_r8 import (
-    _ES_TOKENIZE_SQL,
-    _ES_WIN,
-    _ES_WINDOW_SQL,
-)
+from datawarehouse1_spark.queries.curation_r8 import _ES_WIN, _ES_WINDOW_SQL
 from datawarehouse1_spark.registry import declared
 
 
@@ -44,7 +41,7 @@ from datawarehouse1_spark.registry import declared
       FROM documents WHERE doc_id % 2 = 0
     ),
     tagged AS (
-      SELECT doc_id, {_SPLIT_SQL} AS split, {_ES_TOKENIZE_SQL} AS t
+      SELECT doc_id, {_SPLIT_SQL} AS split, {WORD_TOKENS_SQL} AS t
       FROM base
     ),
     wins AS (
@@ -97,10 +94,7 @@ def q_split_ngram_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = base.select(
         "doc_id",
         split_col("doc_id").alias("split"),
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: t != F.lit(""),
-        ).alias("t"),
+        word_tokens().alias("t"),
     )
     wins = (
         tagged.select(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.registry import declared
 
 # Deterministic URL staging: every doc_id yields a URL whose canonical
@@ -302,9 +303,6 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ES_WIN = 10  # ExactSubstr window length in tokens
-_ES_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 # 10-token window strings at every start position (stride 1), DuckDB side
 _ES_WINDOW_SQL = (
     "list_transform(range(1, greatest(len(t) - {m}, 0) + 1), "
@@ -318,7 +316,7 @@ _ES_WINDOW_SQL = (
     "q_dedup_exact_substring",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_ES_TOKENIZE_SQL} AS t
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t
       FROM documents WHERE doc_id < 300
     ),
     wins AS (
@@ -359,10 +357,7 @@ def q_dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter("doc_id < 300")
     toks = d.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: t != F.lit(""),
-        ).alias("t"),
+        word_tokens().alias("t"),
     )
     wins = toks.select(
         "doc_id",

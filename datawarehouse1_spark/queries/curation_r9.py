@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.queries.curation_r8 import (
     _HOST_SQL,
     _URL_SQL,
@@ -116,9 +117,6 @@ def q_curation_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- 2.
 
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
 # Portable power-of-two bucket ladder (training context buckets). A
 # CASE ladder instead of log2(): identical integer answers in both
@@ -139,7 +137,7 @@ _BUCKET_SQL = """
     "q_curation_length_buckets",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, len({_TOKENIZE_SQL}) AS n_tokens FROM documents
+      SELECT doc_id, len({WORD_TOKENS_SQL}) AS n_tokens FROM documents
     ),
     bucketed AS (
       SELECT doc_id, n_tokens,
@@ -164,9 +162,7 @@ def q_curation_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder. ONE exchange: the narrow (doc, n_tokens, bucket) projection
     partial-aggregates map-side into <= 8 bucket rows."""
     d = table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+    toks = word_tokens()
     n_tokens = F.size(toks).cast("long").alias("n_tokens")
     staged = d.select(n_tokens).select(
         "n_tokens",
@@ -496,9 +492,9 @@ _MIXTURE_CASE = (
     ),
     quality AS (
       SELECT doc_id, lang,
-             len({_TOKENIZE_SQL}) AS n_tokens
+             len({WORD_TOKENS_SQL}) AS n_tokens
       FROM exact_dedup
-      WHERE len({_TOKENIZE_SQL}) BETWEEN 20 AND 1000
+      WHERE len({WORD_TOKENS_SQL}) BETWEEN 20 AND 1000
     ),
     mixture AS (
       SELECT doc_id, lang, n_tokens FROM quality
@@ -570,9 +566,7 @@ def q_curation_master_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("rn2 = 1")
         .select("doc_id", "lang", "text")
     )
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
+    toks = word_tokens()
     quality = exact_dedup.select(
         "doc_id", "lang", F.size(toks).cast("long").alias("n_tokens")
     ).filter(F.col("n_tokens").between(20, 1000))

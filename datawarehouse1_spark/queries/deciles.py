@@ -1,5 +1,7 @@
-"""Shared rule-22 decile construction (q_orders_value_deciles /
-q_quality_cumulative_gains).
+"""The rule-22 machinery (SCALE.md rule 22): `running_sum`, the one
+two-level running sum behind every global rank or CDF in queries/, and
+the shared decile construction (q_orders_value_deciles /
+q_quality_cumulative_gains / q_partition_boundaries) built on it.
 
 The nine decile boundaries are exact order statistics (percentile_disc
 semantics: the smallest actual data value whose cumulative count
@@ -13,12 +15,11 @@ call sites (review finding, r12).
 r13: the Spark side no longer evaluates nine `percentile_disc`
 aggregates — each of those buffers EVERY value in its own aggregation
 buffer (nine copies of the column in executor memory, a sort per
-buffer).  The boundaries now come from the repo's two-level rank
-construction (the _rank2 shape): one exchange to the distinct-value
-marginal, within-bucket cumulative counts (parallel across fixed-width
-value buckets; only the bounded bucket summary crosses a global
-window), then ONE reduction reads all nine order statistics off the
-cumulative table via the integer identity
+buffer).  The boundaries come from `running_sum` over the
+distinct-value marginal (one exchange to the marginal, then only the
+bounded bucket summary crosses a global window), then ONE reduction
+reads all nine order statistics off the cumulative table via the
+integer identity
 
     percentile_disc(k/10) = min{ v : 10 * cum(v) >= k * n }
 
@@ -30,8 +31,83 @@ matches pin the equivalence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def running_sum(
+    rows: DataFrame,
+    order: str,
+    weights: Sequence[str],
+    width: float | Column,
+    by: Sequence[str] = (),
+    descending: bool = False,
+) -> DataFrame:
+    """Running sums of the `weights` columns along `order`, per `by`
+    group, without a global window (rule 22).
+
+    `rows` holds one row per (`by`..., `order`) value. For each weight
+    `w` the result adds `<w>_before`, the sum of `w` over the rows of
+    the same group that come strictly earlier in the order (ascending,
+    or descending when `descending`), and `<w>_total`, the sum of `w`
+    over the whole group. Every input column passes through unchanged.
+    Callers derive the rest: the doubled average rank
+    2r = 2·before + c + 1, the inclusive sum before + w.
+
+    The rows split into buckets floor(order / width); `width` is a
+    number, or a Column when each group carries its own. Sums run
+    within each (group, bucket) window, parallel across buckets; only
+    the bucket summary, bounded by the value domain over the width and
+    not by the row count, crosses a window ordered by bucket, and its
+    offsets and group totals are broadcast back. Any positive width
+    gives the same result; it only shifts work between the two levels.
+    """
+    by = list(by)
+    step = (lambda c: F.col(c).desc()) if descending else F.col
+    w = width if isinstance(width, Column) else F.lit(width)
+    b = rows.withColumn("_bucket", F.floor(F.col(order) / w).cast("long"))
+    within = (
+        Window.partitionBy(*by, "_bucket")
+        .orderBy(step(order))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = b.select(
+        "*",
+        *[
+            F.coalesce(F.sum(x).over(within), F.lit(0)).alias(f"_in_{x}")
+            for x in weights
+        ],
+    )
+    across = Window.partitionBy(*by).orderBy(step("_bucket"))
+    prior = across.rowsBetween(Window.unboundedPreceding, -1)
+    whole = across.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    offsets = (
+        b.groupBy(*by, "_bucket")
+        .agg(*[F.sum(x).alias(f"_bt_{x}") for x in weights])
+        .select(
+            *by,
+            "_bucket",
+            *[
+                F.coalesce(F.sum(f"_bt_{x}").over(prior), F.lit(0)).alias(
+                    f"_off_{x}"
+                )
+                for x in weights
+            ],
+            *[F.sum(f"_bt_{x}").over(whole).alias(f"{x}_total") for x in weights],
+        )
+    )
+    return cum.join(F.broadcast(offsets), [*by, "_bucket"]).select(
+        *rows.columns,
+        *[
+            (F.col(f"_in_{x}") + F.col(f"_off_{x}")).alias(f"{x}_before")
+            for x in weights
+        ],
+        *[f"{x}_total" for x in weights],
+    )
 
 
 def decile_bounds_sql(col: str) -> str:
@@ -78,27 +154,10 @@ def order_stat_bounds(
         .groupBy(F.col(col).alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    b = marg.withColumn(
-        "bucket", F.floor(F.col("v") / F.lit(bucket_width)).cast("long")
-    )
-    borders = b.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    prior = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = borders.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(prior), F.lit(0)).alias("boff"),
-    )
-    total = borders.agg(F.sum("bc").alias("n"))
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        b.join(F.broadcast(offsets), "bucket")
-        .withColumn("cum", F.col("boff") + F.sum("c").over(win))
-        .join(F.broadcast(total))
+    cum = running_sum(marg, "v", ["c"], bucket_width).select(
+        "v",
+        (F.col("c_before") + F.col("c")).alias("cum"),
+        F.col("c_total").alias("n"),
     )
     bounds = cum.agg(
         *[

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.text_tokens import word_tokens
 from datawarehouse1_spark.registry import declared
 
 # ---------------------------------------------------------------- 1.
@@ -143,10 +144,7 @@ def q_text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus total broadcasts."""
     d = table(spark, sf_dir, "documents")
     word = F.explode(
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: t != "",
-        )
+        word_tokens()
     ).alias("word")
     sw = (
         d.select("source", word)

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
-from datawarehouse1_spark.functions.money import sql_cents
+from datawarehouse1_spark.functions.money import money_units_long, sql_cents
 from datawarehouse1_spark.registry import declared
 
 # Synthetic manifest granularity: one "file" per 512-key range of
@@ -216,7 +216,7 @@ def q_layout_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     total is SUM(mass_cents) over deletable=1 rows — left to the
     reader so the per-file plan stays the auditable artifact."""
     o = table(spark, sf_dir, "orders")
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    cents = money_units_long("o_totalprice")
     manifest = (
         o.select(
             F.expr(f"o_orderkey div {_FILE_DIV}").alias("file_id"),

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.money import money_units_long
+from datawarehouse1_spark.queries.deciles import running_sum
 from datawarehouse1_spark.registry import declared
 
 _DEC = "decimal(38,0)"
@@ -528,24 +530,22 @@ def q_drift_ks_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored micro-unit quotient — no transcendental to substitute.
 
     Scale shape (the reason this isn't one global window): the
-    empirical CDFs come from a TWO-LEVEL cumulative sum. Distinct
-    values pre-aggregate (one exchange), cumulate WITHIN a
-    fixed-width $25k price bucket (one exchange, parallel across
-    buckets), and only the <=40-row bucket-total summary crosses a
-    global window — then broadcasts back as per-bucket offsets. The
-    unbounded window never touches per-value rows, so the plan
+    empirical CDFs come from queries/deciles.py::running_sum, the
+    TWO-LEVEL cumulative sum of rule 22. Distinct values pre-aggregate
+    (one exchange), cumulate WITHIN a fixed-width $25k price bucket
+    (one exchange, parallel across buckets), and only the <=40-row
+    bucket-total summary crosses a global window — then broadcasts
+    back as per-bucket offsets and totals. The unbounded window never
+    touches per-value rows, so the plan
     survives a 100x scale-up where a naive
     `Window.orderBy(value)` cumsum would serialize the whole column
     through one task (SCALE.md rule 5). argmax resolves via
     TakeOrderedAndProject (d_num desc, value asc tie-break), never a
     full sort."""
     o = table(spark, sf_dir, "orders")
-    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-    bucket_width = 2_500_000  # $25k of cents; price domain is fixed, so
-    # the bucket count is bounded (~40) at ANY scale factor
     per_val = (
         o.select(
-            cents.alias("cents"),
+            money_units_long("o_totalprice").alias("cents"),
             (F.col("o_orderkey") % 2 == 0).alias("is_a"),
         )
         .groupBy("cents")
@@ -553,42 +553,15 @@ def q_drift_ks_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("is_a"), 1)).cast("long").alias("cnt_a"),
             F.count(F.when(~F.col("is_a"), 1)).cast("long").alias("cnt_b"),
         )
-        .withColumn(
-            "bucket", F.floor(F.col("cents") / F.lit(bucket_width)).cast("long")
-        )
     )
-
-    win_in = (
-        Window.partitionBy("bucket")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_in = per_val.select(
-        "bucket",
-        "cents",
-        F.sum("cnt_a").over(win_in).alias("cin_a"),
-        F.sum("cnt_b").over(win_in).alias("cin_b"),
-    )
-
-    bucket_tot = per_val.groupBy("bucket").agg(
-        F.sum("cnt_a").alias("ba"), F.sum("cnt_b").alias("bb")
-    )
-    prior = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bucket_tot.select(
-        "bucket",
-        F.coalesce(F.sum("ba").over(prior), F.lit(0)).alias("off_a"),
-        F.coalesce(F.sum("bb").over(prior), F.lit(0)).alias("off_b"),
-        F.sum("ba").over(Window.partitionBy()).alias("n_a"),
-        F.sum("bb").over(Window.partitionBy()).alias("n_b"),
-    )
-
-    c_a = (F.col("cin_a") + F.col("off_a")).cast(_DEC)
-    c_b = (F.col("cin_b") + F.col("off_b")).cast(_DEC)
+    # $25k buckets of cents: the price domain is fixed, so the bucket
+    # count is bounded (~40) at ANY scale factor
+    cum = running_sum(per_val, "cents", ["cnt_a", "cnt_b"], 2_500_000)
+    c_a = (F.col("cnt_a_before") + F.col("cnt_a")).cast(_DEC)
+    c_b = (F.col("cnt_b_before") + F.col("cnt_b")).cast(_DEC)
     d_num = F.abs(c_a * F.col("n_b") - c_b * F.col("n_a"))
     return (
-        cum_in.join(F.broadcast(offsets), "bucket")
+        cum.withColumnsRenamed({"cnt_a_total": "n_a", "cnt_b_total": "n_b"})
         .select(
             F.col("cents").alias("at_value_cents"),
             d_num.cast("long").alias("d_num"),

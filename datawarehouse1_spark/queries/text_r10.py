@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.text_tokens import word_tokens
 from datawarehouse1_spark.operators.scale import widen_if_narrow
 from datawarehouse1_spark.registry import declared
 
@@ -221,7 +222,7 @@ def q_text_successor_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     head roll-up counts pair ROWS so distinct-successor needs no
     second expand — and the top-50 is TakeOrderedAndProject."""
     d = widen_if_narrow(table(spark, sf_dir, "documents").select("text"))
-    toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != "")
+    toks = word_tokens()
     t = d.select(toks.alias("t")).filter(F.size("t") >= 2)
     bigrams = t.select(F.explode(word_ngrams(F.col("t"), 2)).alias("bigram"))
     pair = bigrams.groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))

@@ -17,25 +17,18 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.registry import declared
 
 # Shared tokenizer (Spark + DuckDB twins must stay in lockstep).
-_TOKENIZE_SQL = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
-
-def _tokens():
-    return F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != F.lit("")
-    )
 
 
 @declared(
     "q_text_bigram_topk",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t FROM documents
     ),
     bigrams AS (
       SELECT unnest(list_transform(generate_series(1, len(t) - 1),
@@ -54,7 +47,7 @@ def q_text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated count, and the top-20 is TakeOrderedAndProject —
     at 100 TB only (bigram, partial count) pairs shuffle."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select(_tokens().alias("t")).filter(F.size("t") >= 2)
+    toks = d.select(word_tokens().alias("t")).filter(F.size("t") >= 2)
     bigrams = toks.select(
         F.explode(word_ngrams(F.col("t"), 2)).alias("bigram")
     )
@@ -70,7 +63,7 @@ def q_text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_tfidf_topterms",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_TOKENIZE_SQL}) AS term FROM documents
+      SELECT doc_id, unnest({WORD_TOKENS_SQL}) AS term FROM documents
     ),
     tf AS (
       SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
@@ -99,7 +92,7 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded at 6 dp. Plan: explode → two chained aggregations (term
     grain ≪ token grain) → broadcast-joined idf → per-doc window."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("term"))
+    toks = d.select("doc_id", F.explode(word_tokens()).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -128,7 +121,7 @@ def q_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_contamination_overlap",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t FROM documents
     ),
     shingles AS (
       SELECT doc_id,
@@ -158,7 +151,7 @@ def q_text_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equi-join, never text; both sides dedupe (doc, shingle) before
     joining to bound fan-out."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 3)
+    toks = d.select("doc_id", word_tokens().alias("t")).filter(F.size("t") >= 3)
     shingles = toks.select(
         "doc_id",
         F.explode(
@@ -179,7 +172,7 @@ def q_text_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_token_histogram",
     oracle=f"""
     WITH counted AS (
-      SELECT len({_TOKENIZE_SQL}) AS n_tokens FROM documents
+      SELECT len({WORD_TOKENS_SQL}) AS n_tokens FROM documents
     )
     SELECT CAST(floor(n_tokens / 50.0) AS BIGINT) * 50 AS bucket_lo,
            COUNT(*) AS n_docs,
@@ -193,7 +186,7 @@ def q_text_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression + one partial agg; integers only."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.select(F.size(_tokens()).cast("long").alias("n_tokens"))
+        d.select(F.size(word_tokens()).cast("long").alias("n_tokens"))
         .groupBy((F.floor(F.col("n_tokens") / 50) * 50).alias("bucket_lo"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -208,7 +201,7 @@ def q_text_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, pos, t[pos] AS token FROM (
       SELECT doc_id, t,
              unnest(generate_series(1, len(t))) AS pos
-      FROM (SELECT doc_id, {_TOKENIZE_SQL} AS t
+      FROM (SELECT doc_id, {WORD_TOKENS_SQL} AS t
             FROM documents WHERE doc_id < 20)
     )
     """,
@@ -220,7 +213,7 @@ def q_text_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode is a generator inside whole-stage codegen, no join."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     return d.select(
-        "doc_id", F.posexplode(_tokens()).alias("pos0", "token")
+        "doc_id", F.posexplode(word_tokens()).alias("pos0", "token")
     ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "token")
 
 
@@ -254,7 +247,7 @@ def q_docs_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_repetition_score",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_TOKENIZE_SQL} AS t FROM documents
+      SELECT doc_id, {WORD_TOKENS_SQL} AS t FROM documents
     ),
     grams AS (
       SELECT doc_id, t,
@@ -280,7 +273,7 @@ def q_text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — no shuffle, no explode; fractions reported as floored
     integer micro-units so engines can't diverge on float rendering."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 2)
+    toks = d.select("doc_id", word_tokens().alias("t")).filter(F.size("t") >= 2)
     bg = word_ngrams(F.col("t"), 2)
     grams = toks.withColumn("bg", bg)
 
@@ -330,7 +323,7 @@ def q_docs_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_curation_pack_chunks",
     oracle=f"""
     WITH counted AS (
-      SELECT doc_id, lang, len({_TOKENIZE_SQL}) AS n_tokens FROM documents
+      SELECT doc_id, lang, len({WORD_TOKENS_SQL}) AS n_tokens FROM documents
     ),
     cum AS (
       SELECT doc_id, lang, n_tokens,
@@ -354,7 +347,7 @@ def q_curation_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering becomes a range-partitioned sort — same plan shape."""
     d = table(spark, sf_dir, "documents")
     counted = d.select(
-        "doc_id", "lang", F.size(_tokens()).cast("long").alias("n_tokens")
+        "doc_id", "lang", F.size(word_tokens()).cast("long").alias("n_tokens")
     )
     w = (
         Window.partitionBy("lang")

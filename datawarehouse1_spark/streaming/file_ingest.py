@@ -75,7 +75,7 @@ def stream_ingest(
     spark: SparkSession,
     watch_dir: str,
     schema: StructType,
-    sink: Callable[[DataFrame, int], None],
+    sink: IngestSink,
     checkpoint_dir: str,
     fmt: str = "parquet",
     trigger_seconds: int = 60,  # deployed POLLING_INTERVAL (docker-compose.yml:35)
@@ -83,7 +83,7 @@ def stream_ingest(
     status_dir: str | None = None,
 ) -> StreamingQuery:
     """Watch a directory, enrich with lineage columns, stage each
-    micro-batch and hand it to `sink` (typically an IngestSink below).
+    micro-batch and commit it into `sink`, an IngestSink below.
     fmt='xlsx' routes through the binaryFile source + per-task parse
     (sources/excel.py::xlsx_stream) — the reference's actual input
     format on the streaming path; other formats use the native file
@@ -96,17 +96,15 @@ def stream_ingest(
     record of dropped uploads. Every batch is staged under
     `<checkpoint_dir>/_staging`, which is cleared here: a staging
     directory left by a crash holds no batch a restart still needs.
-    Staged files are published by rename, so a `status_dir` or
-    IngestSink table on another file system than the checkpoint raises
-    ValueError here."""
+    Staged files are published by rename, so a `status_dir` or sink
+    table on another file system than the checkpoint raises ValueError
+    here."""
     from datawarehouse1_spark.operators.ingest import check_same_file_system, delete_path
     from datawarehouse1_spark.sources.excel import MARKER_COLS, xlsx_stream
 
     staging = f"{checkpoint_dir.rstrip('/')}/_staging"
     status_dir = status_dir or f"{checkpoint_dir.rstrip('/')}/file_status"
-    checks = sink if isinstance(sink, IngestSink) else None
-    targets = (status_dir, checks.table_path) if checks else (status_dir,)
-    check_same_file_system(spark, staging, *targets)
+    check_same_file_system(spark, staging, status_dir, sink.table_path)
     delete_path(spark, staging)
     if fmt == "xlsx":
         # lineage columns are added inside the parse body
@@ -115,7 +113,7 @@ def stream_ingest(
             watch_dir,
             schema,
             glob=glob if glob != LOCK_GLOB else "[!~]*.xlsx",
-            business_key=checks.business_key if checks else None,
+            business_key=sink.business_key,
         )
     else:
         stream = (
@@ -143,7 +141,7 @@ def stream_ingest(
 
 
 def _with_status_sink(
-    inner: Callable[[DataFrame, int], None],
+    inner: IngestSink,
     staging_root: str,
     status_dir: str,
 ) -> Callable[[DataFrame, int], None]:
@@ -154,9 +152,9 @@ def _with_status_sink(
     and staging are one Spark job. Failed files' markers become durable
     quarantine rows in `status_dir` (append-only parquet — one row per
     failed file: source_file, parse_error, imported_at, batch_id,
-    status). The wrapped sink gets the staged rows, valid only during
-    the call, with the staged batch, the markers and the names of the
-    files its rows come from when it is an IngestSink. The staging is
+    status). `inner.commit` gets the staged rows, valid only during the
+    call, with the staged batch, the markers and the names of the files
+    its rows come from. The staging is
     deleted after the call, published or not. Published file names
     carry the query id and the batch id (operators.ingest.publish_staged)."""
     from pyspark.sql import Observation
@@ -176,7 +174,7 @@ def _with_status_sink(
         F.collect_list(F.when(~is_data, marker)).alias("markers"),
         F.collect_set(F.when(is_data, F.col("source_file"))).alias("files"),
     )
-    counts = staging_counts(inner.not_null_cols if isinstance(inner, IngestSink) else [])
+    counts = staging_counts(inner.not_null_cols)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -202,10 +200,7 @@ def _with_status_sink(
                     "*", F.lit(batch_id).alias("batch_id"), F.lit("error").alias("status")
                 ).write.mode("overwrite").parquet(f"{stage}/status")
                 publish_staged(spark, f"{stage}/status", name, status_dir)
-            if isinstance(inner, IngestSink):
-                inner.commit(staged_rows, staged, markers, observed["files"])
-            else:
-                inner(staged_rows, batch_id)
+            inner.commit(staged_rows, staged, markers, observed["files"])
         finally:
             delete_path(spark, stage)
 

@@ -37,7 +37,7 @@ from datawarehouse1_spark.operators.ingest import validate_batch
 from datawarehouse1_spark.operators.warehouse import upsert_small_table
 from datawarehouse1_spark.schemas import CLIENTS, NOT_NULL
 from datawarehouse1_spark.sources.excel import route_table
-from datawarehouse1_spark.streaming.file_ingest import stream_ingest
+from datawarehouse1_spark.streaming.file_ingest import IngestSink, stream_ingest
 from datawarehouse1_spark.streaming.snapshot_store import (
     latest_version,
     read_snapshot,
@@ -109,6 +109,19 @@ def _make_lifecycle_sink(spark, dim_store: str, meta_store: str):
     return sink
 
 
+class _LifecycleSink(IngestSink):
+    """stream_ingest commits into an IngestSink; this one's commit runs
+    the composed lifecycle body instead of the table append."""
+
+    def __init__(self, spark, dim_store: str, meta_store: str):
+        super().__init__(dim_store, "client_id", NOT_NULL["clients"])
+        self.body = _make_lifecycle_sink(spark, dim_store, meta_store)
+
+    def commit(self, rows, staged, markers, files) -> None:
+        # the staged batch is named `<query id>-<batch id>`
+        self.body(rows, int(staged.name.rsplit("-", 1)[1]))
+
+
 def test_reference_excel_lifecycle_certification(spark, tmp_path):
     watch = tmp_path / "landing"
     watch.mkdir()
@@ -121,7 +134,7 @@ def test_reference_excel_lifecycle_certification(spark, tmp_path):
     shutil.copyfile(REF_XLSX / "clients.xlsx", watch / "clients.xlsx")
     shutil.copyfile(REF_XLSX / "~$clients.xlsx", watch / "~$clients.xlsx")
 
-    sink = _make_lifecycle_sink(spark, dim_store, meta_store)
+    sink = _LifecycleSink(spark, dim_store, meta_store)
     q = stream_ingest(
         spark,
         str(watch) + "/*",  # glob: re-drops land in subdirectories
@@ -198,7 +211,7 @@ def test_reference_excel_lifecycle_certification(spark, tmp_path):
         spark,
         str(watch) + "/*",
         CLIENTS,
-        _make_lifecycle_sink(spark, dim_store, meta_store),
+        _LifecycleSink(spark, dim_store, meta_store),
         ckpt,
         fmt="xlsx",
         trigger_seconds=1,

@@ -132,3 +132,44 @@ def test_month_partitioned_fact_prunes(tmp_path, spark):
         (F.col("o_orderdate") >= "1997-03-01") & (F.col("o_orderdate") < "1997-04-01")
     ).count()
     assert n == expected > 0
+
+
+def test_compact_table_refuses_a_file_published_during_it(
+    spark, tmp_path, monkeypatch
+):
+    """A part file published into the table after compaction read it
+    (a streaming sink's commit) is not in the compacted copy; the swap
+    would delete it. Compaction must refuse loudly instead: the table
+    keeps every row, and no staging directory is left behind."""
+    import shutil as _shutil
+    from pathlib import Path
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from datawarehouse1_spark.operators.scale import compact_table
+
+    path = str(tmp_path / "frag_live")
+    for i in range(3):
+        spark.createDataFrame(
+            [(10 * i + j, f"v{j}") for j in range(10)], "k long, v string"
+        ).coalesce(1).write.mode("append").parquet(path)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def write_then_publish(self, target, *args, **kwargs):
+        real_parquet(self, target, *args, **kwargs)
+        if target.endswith("__compacting"):
+            batch = str(tmp_path / "batch")
+            spark.createDataFrame(
+                [(30 + j, f"v{j}") for j in range(10)], "k long, v string"
+            ).coalesce(1).write.parquet(batch)
+            part = next(Path(batch).glob("part-*.parquet"))
+            _shutil.move(str(part), f"{path}/published-0000000003.parquet")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_publish)
+    with pytest.raises(RuntimeError, match="published-0000000003.parquet"):
+        compact_table(spark, path, target_file_bytes=10 * 1024 * 1024)
+    monkeypatch.undo()
+
+    assert spark.read.parquet(path).count() == 40
+    assert not Path(f"{path}__compacting").exists()

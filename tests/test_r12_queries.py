@@ -7,19 +7,17 @@ pins for the rules they must obey."""
 from __future__ import annotations
 
 import math
+import random
 import re
 from collections import Counter, defaultdict
 
+import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark import registry
-from datawarehouse1_spark.queries.analytics_r12 import (
-    _FD_CASES,
-    _PMI_MIN_COUNT,
-    _rank2,
-    _spearman_pair,
-)
+from datawarehouse1_spark.queries.analytics_r12 import _FD_CASES, _PMI_MIN_COUNT
+from datawarehouse1_spark.queries.deciles import running_sum
 from tests.conftest import SF_DIR
 
 registry.load_all()
@@ -40,16 +38,54 @@ def _read(name: str):
 
 
 def test_rank2_average_ranks(spark):
-    """2r = 2·avg_rank on a hand-checked tied multiset, invariant to
-    the bucket width (the two-level cumsum must agree with the naive
-    single-pass ranks whatever the bucket split)."""
+    """running_sum: 2r = 2·before + c + 1 is 2·avg_rank on a
+    hand-checked tied multiset, invariant to the bucket width (the
+    two-level cumsum must agree with the naive single-pass ranks
+    whatever the bucket split); and on random grouped frames every
+    `_before` / `_total` equals a pandas brute force, in both
+    directions, for int widths, a per-group width Column, one bucket,
+    negative values and empty input."""
     marg = spark.createDataFrame(
         [(10, 2), (20, 3), (30, 1), (45, 4)], "v long, c long"
     )
     expected = {10: 3, 20: 8, 30: 12, 45: 17}  # 2*cnt_less + cnt_eq + 1
     for width in (1, 7, 1000):
-        got = {r["v"]: r["r2"] for r in _rank2(marg, width).collect()}
+        got = {
+            r["v"]: 2 * r["c_before"] + r["c"] + 1
+            for r in running_sum(marg, "v", ["c"], width).collect()
+        }
         assert got == expected, f"width={width}: {got}"
+
+    schema = "g long, v long, w1 long, w2 long"
+    cols = ["g", "v", "w1", "w2", "w1_before", "w2_before", "w1_total", "w2_total"]
+    rng = random.Random(12)
+    mixed = [  # the same v values recur across groups
+        (g, v, rng.randint(0, 9), rng.randint(1, 5))
+        for g in range(4)
+        for v in rng.sample(range(-60, 60), 25)
+    ]
+    negative = [r for r in mixed if r[1] < 0]  # width 1e9: one bucket
+    widths = F.array(*[F.lit(w) for w in (1, 7, 1000, 3)])
+    per_group = F.element_at(widths, (F.col("g") + 1).cast("int"))
+    for rows in (mixed, negative):
+        pdf = pd.DataFrame(rows, columns=["g", "v", "w1", "w2"])
+        df = spark.createDataFrame(rows, schema)
+        for descending in (False, True):
+            want = pdf.sort_values(["g", "v"], ascending=[True, not descending])
+            for w in ("w1", "w2"):
+                want[f"{w}_before"] = want.groupby("g")[w].cumsum() - want[w]
+                want[f"{w}_total"] = want.groupby("g")[w].transform("sum")
+            want_rows = sorted(map(tuple, want[cols].values.tolist()))
+            for width in (1, 7, 10**9, per_group):
+                out = running_sum(
+                    df, "v", ["w1", "w2"], width, by=["g"], descending=descending
+                )
+                assert out.columns == cols
+                got = sorted(tuple(r) for r in out.collect())
+                assert got == want_rows, (descending, width)
+
+    empty = spark.createDataFrame([], schema)
+    assert running_sum(empty, "v", ["w1"], 7, by=["g"]).collect() == []
 
 
 def _stage_li(spark, tmp_path, rows):
@@ -112,15 +148,15 @@ def test_spearman_ties_match_reference_formula(spark):
 
 
 def test_spearman_pair_helper_self_correlation(spark, tmp_path):
-    """rho(x, x) through the full joint-distribution machinery is
-    exactly 1 even with heavy ties."""
+    """rho(x, x) through the full joint-distribution machinery of
+    q_stats_spearman_rho is exactly 1 even with heavy ties."""
     rows = [(q % 5 + 1, q % 5 + 1) for q in range(40)]
     sf = _stage_li(spark, tmp_path, rows)
-    from datawarehouse1_spark.catalog import table
-
-    li = table(spark, sf, "lineitem")
-    out = _spearman_pair(li, "l_quantity", "l_extendedprice", 1, 1).collect()
-    assert out[0]["rho6"] == 1.0
+    got = {
+        (r["col_x"], r["col_y"]): r["rho6"]
+        for r in registry.QUERIES["q_stats_spearman_rho"](spark, sf).collect()
+    }
+    assert got[("l_quantity", "l_extendedprice")] == 1.0
 
 
 # ------------------------------------------------------------ ROC-AUC

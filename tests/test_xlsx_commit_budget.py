@@ -197,20 +197,21 @@ def test_one_trigger_commit(spark, tmp_path, monkeypatch, xlsx_bytes, case):
 
 
 def test_plain_sink_gets_data_rows_only(spark, tmp_path, xlsx_bytes):
-    """A foreachBatch sink that is not an IngestSink sees the parsed rows
-    with the lineage columns and none of the status/marker columns."""
-    from datawarehouse1_spark.streaming.file_ingest import stream_ingest
+    """stream_ingest commits into an IngestSink: the table gets the
+    parsed rows with the lineage columns and none of the status/marker
+    columns, and a file that fails to parse leaves one status row."""
+    from datawarehouse1_spark.streaming.file_ingest import IngestSink, stream_ingest
 
     watch = tmp_path / "watch"
     watch.mkdir()
     (watch / "ventes_a.xlsx").write_bytes(xlsx_bytes(HEADER, _ventes("A")))
     (watch / "ventes_b.xlsx").write_bytes(xlsx_bytes(*_without(HEADER, _ventes("B"), "quantite")))
-    seen = []
+    table = tmp_path / "ventes"
     query = stream_ingest(
         spark,
         str(watch),
         VENTES,
-        lambda batch, batch_id: seen.append((batch.columns, batch.collect())),
+        IngestSink(str(table), BUSINESS_KEYS["ventes"], NOT_NULL["ventes"]),
         str(tmp_path / "ckpt"),
         fmt="xlsx",
         trigger_seconds=0,
@@ -219,10 +220,9 @@ def test_plain_sink_gets_data_rows_only(spark, tmp_path, xlsx_bytes):
         query.processAllAvailable()
     finally:
         query.stop()
-    assert len(seen) == 1
-    columns, rows = seen[0]
-    assert columns == [*HEADER, "source_file", "imported_at"]
-    assert sorted(r.vente_id for r in rows) == [f"A-{i}" for i in range(ROWS)]
+    committed = spark.read.parquet(str(table))
+    assert committed.columns == [*HEADER, "source_file", "imported_at"]
+    assert sorted(r.vente_id for r in committed.collect()) == [f"A-{i}" for i in range(ROWS)]
     status = spark.read.parquet(str(tmp_path / "ckpt" / "file_status")).collect()
     assert [r.source_file for r in status] == ["ventes_b.xlsx"]
 
