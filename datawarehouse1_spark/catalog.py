@@ -30,13 +30,6 @@ TABLES = (
 # reference's schema implies (region/nation are fixed-cardinality).
 BROADCAST_DIMS = ("region", "nation")
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 # Timestamp columns per table: every one is normalized to TIMESTAMP_NTZ
 # (UTC wall clock) at load, whatever parquet encoding the generator used.
 # The events table drifted once already (TIMESTAMP(NANOS) → timestamp[us],
@@ -70,7 +63,7 @@ TS_COLUMNS: dict[str, tuple[str, ...]] = {
 # every entry of another applicationId: those plans belong to a
 # stopped context and would otherwise pin its JVM objects.
 # Missing/unstat-able paths and nested-directory tables bypass the
-# memo. SPARK_GRAFT_TABLE_MEMO=0 disables.
+# memo; every other table goes through it.
 _TABLE_MEMO: dict[tuple, tuple[object, DataFrame]] = {}
 
 
@@ -268,9 +261,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     fp = _path_fingerprint(path)
-    memo_on = (
-        os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0" and fp is not None
-    )
+    memo_on = fp is not None
     app_id = spark.sparkContext.applicationId
     key = (id(spark), app_id, path)
     if memo_on:

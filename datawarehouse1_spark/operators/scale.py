@@ -228,14 +228,6 @@ def write_zordered(
     )
 
 
-def explain_has_pruning(df: DataFrame) -> bool:
-    """True if the physical plan shows parquet filter pushdown — a cheap
-    assertion hook for tests that layout decisions actually reached the
-    scan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
 def compact_table(
     spark: SparkSession,
     path: str,

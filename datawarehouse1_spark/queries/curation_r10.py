@@ -40,32 +40,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.splits import SPLIT_SQL, split_col
 from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
 from datawarehouse1_spark.operators.scale import widen_if_narrow
 from datawarehouse1_spark.registry import declared
 
 # ---------------------------------------------------------------- 1.
 
-# md5(doc_id) hex-prefix split thresholds. Lexicographic compare on the
-# first 8 lowercase hex chars = compare on the top 32 bits of the
-# digest: 'e6666666'/16^8 ≈ 0.90, 'f3333333'/16^8 ≈ 0.95. A pure
-# function of doc_id: re-partitioning, re-ordering, or re-ingesting the
-# corpus never moves a document across splits.
-_SPLIT_SQL = """
-    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666'
-              THEN 'train'
-         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'f3333333'
-              THEN 'val'
-         ELSE 'test' END
-"""
-
-
 @declared(
     "q_split_train_holdout",
     oracle=f"""
     WITH tagged AS (
       SELECT doc_id, lang, n_chars, md5(text) AS th,
-             {_SPLIT_SQL} AS split
+             {SPLIT_SQL} AS split
       FROM documents
     ),
     train_h AS (
@@ -100,14 +87,8 @@ def q_split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter (operators/scale.py) to drop non-leaking holdout rows
     before the exchange."""
     d = table(spark, sf_dir, "documents")
-    prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-    split = (
-        F.when(prefix < "e6666666", "train")
-        .when(prefix < "f3333333", "val")
-        .otherwise("test")
-    )
     tagged = d.select(
-        split.alias("split"),
+        split_col("doc_id").alias("split"),
         F.md5("text").alias("th"),
         "lang",
         "n_chars",

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
 from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.splits import SPLIT_SQL, split_col
 from datawarehouse1_spark.functions.text_tokens import WORD_TOKENS_SQL, word_tokens
-from datawarehouse1_spark.queries.curation_r10 import _SPLIT_SQL
 from datawarehouse1_spark.queries.curation_r8 import _ES_WIN, _ES_WINDOW_SQL
 from datawarehouse1_spark.registry import declared
 
@@ -41,7 +41,7 @@ from datawarehouse1_spark.registry import declared
       FROM documents WHERE doc_id % 2 = 0
     ),
     tagged AS (
-      SELECT doc_id, {_SPLIT_SQL} AS split, {WORD_TOKENS_SQL} AS t
+      SELECT doc_id, {SPLIT_SQL} AS split, {WORD_TOKENS_SQL} AS t
       FROM base
     ),
     wins AS (
@@ -89,8 +89,6 @@ def q_split_ngram_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    from datawarehouse1_spark.streaming.leakage_guard import split_col
-
     tagged = base.select(
         "doc_id",
         split_col("doc_id").alias("split"),

@@ -467,7 +467,7 @@ def q_curation_url_decontaminate(
     left-semi equi-join on it — bodies and full URLs never shuffle.
     """
     from datawarehouse1_spark.queries.curation_r8 import _URL_SQL, host_expr
-    from datawarehouse1_spark.streaming.leakage_guard import split_col
+    from datawarehouse1_spark.functions.splits import split_col
 
     d = table(spark, sf_dir, "documents").select("doc_id")
     url = F.expr(_URL_SQL.format(S="STRING"))

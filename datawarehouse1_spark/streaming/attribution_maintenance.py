@@ -46,7 +46,8 @@ reads the same artifact the write appends to, there is no second
 index a crash could leave out of step: a crash after the log write
 simply re-runs the batch, finds its purchases already logged, and
 appends nothing. The log dir key is a sha256 of the batch's NEW
-purchase ids; the state fold is a latest-wins max and its snapshot
+purchase ids; the state fold is a latest-wins max, published through
+the idempotent form of snapshot_store.snapshot_sink, so its snapshot
 version stays monotonic across a rebase.
 
 Law (pinned in tests/test_streaming_attribution.py): the per-touch
@@ -63,12 +64,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
+    content_key,
+    snapshot_sink,
 )
 
 _STATE_COLS = ("user_id", "touch_type", "ts", "event_id")
@@ -131,15 +130,11 @@ def make_attribution_sink(
     attribution log. Batch columns: event_id, ts, user_id, event_type,
     value."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(state_path)
+    def fold(batch, state, version, replay):
         b = batch.select(
             "event_id", "ts", "user_id", "event_type", "value"
         ).localCheckpoint(eager=True)
 
-        state = read_snapshot(spark, state_path)
         if state is None:
             state = (
                 b.select(
@@ -182,15 +177,8 @@ def make_attribution_sink(
         # already-logged) collapses to one constant-key empty dir;
         # only new credits are ever appended, so the log never
         # rewrites
-        fp_rows = attributions.agg(
-            F.sha2(
-                F.concat_ws(
-                    ",", F.sort_array(F.collect_list("purchase_id"))
-                ),
-                256,
-            ).alias("key")
-        ).collect()
-        fp = fp_rows[0]["key"][:16]
+        key = content_key("purchase_id").alias("key")
+        fp = attributions.agg(key).collect()[0]["key"][:16]
         attributions.coalesce(1).write.mode("overwrite").parquet(
             f"{log_path}/batch={fp}"
         )
@@ -214,8 +202,7 @@ def make_attribution_sink(
             .where(F.col("rn") == 1)
             .select(*_STATE_COLS)
         )
-        maybe_replay = applied is not None and applied >= batch_id
-        if maybe_replay:
+        if replay:
             newer = (
                 touches.alias("t")
                 .join(state.alias("s"), "user_id", "left_outer")
@@ -231,32 +218,8 @@ def make_attribution_sink(
                 .collect()
             )
             if not newer:
-                return  # log overwrote idempotently; state unchanged
-        version = (
-            batch_id
-            if applied is None or batch_id > applied
-            else applied + 1
-        )
-        publish_snapshot(new_state, state_path, version=version)
+                return None  # log overwrote idempotently; state unchanged
+        return new_state
 
-    return sink
+    return snapshot_sink(spark, state_path, fold, idempotent=True)
 
-
-def stream_maintain_attribution(
-    spark: SparkSession,
-    source: DataFrame,
-    state_path: str,
-    log_path: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the attribution sink to a streaming DataFrame of events
-    (event_id, ts, user_id, event_type, value)."""
-    return (
-        source.writeStream.foreachBatch(
-            make_attribution_sink(spark, state_path, log_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )

@@ -20,7 +20,9 @@ complete snapshot readable (old or new, never partial), which is what
 the pre-r7 delete-then-overwrite swap could not guarantee. The rewrite
 per batch is still O(snapshot), documented as the Parquet small-table
 trade-off (a real deployment points this at a format with row-level
-merge; the OPERATOR is the engine-portable part).
+merge; the OPERATOR is the engine-portable part). The sink is the
+strict form of snapshot_store.snapshot_sink; attach it with
+`changes.writeStream.foreachBatch(make_cdc_sink(...))`.
 """
 
 from __future__ import annotations
@@ -28,14 +30,9 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.operators.warehouse import apply_cdc
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 
 def make_cdc_sink(
@@ -51,41 +48,13 @@ def make_cdc_sink(
     empty base, so a stream can bootstrap from an insert-only prefix.
 
     apply_cdc is idempotent for a fixed change set, so a replayed batch
-    converges even without a guard; the version check below still skips
-    it outright (the published version IS the last-applied batch id),
-    saving the redundant rewrite."""
+    converges even without a guard; the strict version guard still
+    skips it outright (the published version IS the last-applied batch
+    id), saving the redundant rewrite."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(snapshot_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay of an already-published batch
-        base = read_snapshot(spark, snapshot_path)
+    def fold(batch, base, version, replay):
         if base is None:
             base = batch.drop(op_col, seq_col).limit(0)
-        merged = apply_cdc(base, batch, keys, seq_col=seq_col, op_col=op_col)
-        publish_snapshot(merged, snapshot_path, version=batch_id)
+        return apply_cdc(base, batch, keys, seq_col=seq_col, op_col=op_col)
 
-    return sink
-
-
-def stream_apply_cdc(
-    spark: SparkSession,
-    changes: DataFrame,
-    snapshot_path: str,
-    checkpoint_dir: str,
-    keys: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the CDC-apply sink to any streaming DataFrame of changes."""
-    return (
-        changes.writeStream.foreachBatch(
-            make_cdc_sink(spark, snapshot_path, keys, seq_col=seq_col, op_col=op_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, snapshot_path, fold)

@@ -14,9 +14,9 @@ SCALE.md rule 10).
 
 Exactly-once: same versioned-snapshot discipline as
 rollup_maintenance.py — the drift log is a snapshot table whose
-published version IS the producing batch_id; a checkpoint replay
-observes latest_version >= batch_id and skips, so a batch can never
-append two report rows. The log is keyed by batch_id; the merge is
+published version IS the producing batch_id; the strict guard of
+snapshot_store.snapshot_sink skips a checkpoint replay, so a batch can
+never append two report rows. The log is keyed by batch_id; the merge is
 old-log UNION one new row (report cardinality = number of batches,
 small by construction).
 
@@ -36,13 +36,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 _DEC = "decimal(38,0)"
 
@@ -121,18 +116,13 @@ def make_drift_sink(
     the reference profile, append ONE report row (batch_id, n_rows,
     chisq_total_e6, worst_bin, alerted) to the versioned drift log."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(report_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay — row already in the log
+    def fold(batch, old, version, replay):
         counts = batch.groupBy(bin_fn(batch).alias("bin")).agg(
             F.count(F.lit(1)).cast("long").alias("cnt_batch")
         )
         per_bin = chisq_vs_reference(counts, reference)
         report = per_bin.agg(
-            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.lit(version).cast("long").alias("batch_id"),
             F.sum("cnt_batch").cast("long").alias("n_rows"),
             F.sum("chisq_e6").cast("long").alias("chisq_total_e6"),
             F.min(
@@ -143,31 +133,6 @@ def make_drift_sink(
         ).withColumn(
             "alerted", F.col("chisq_total_e6") > F.lit(alert_threshold_e6)
         )
-        old = read_snapshot(spark, report_path)
-        merged = report if old is None else old.unionByName(report)
-        publish_snapshot(merged, report_path, version=batch_id)
+        return report if old is None else old.unionByName(report)
 
-    return sink
-
-
-def stream_monitor_drift(
-    spark: SparkSession,
-    source: DataFrame,
-    reference: DataFrame,
-    report_path: str,
-    checkpoint_dir: str,
-    bin_fn: Callable[[DataFrame], F.Column],
-    alert_threshold_e6: int = 500_000,
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the drift-monitor sink to any streaming DataFrame."""
-    return (
-        source.writeStream.foreachBatch(
-            make_drift_sink(
-                spark, reference, report_path, bin_fn, alert_threshold_e6
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, report_path, fold)

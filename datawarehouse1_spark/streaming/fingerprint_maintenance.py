@@ -22,7 +22,8 @@ emitted pairs equal a full hash64_band_pairs run over the corpus.
 
 Exactly-once: same discipline as the minhash maintainer — foreachBatch
 is at-least-once and both effects are non-idempotent, so the snapshot
-version (the producing batch id) guards both. Pairs land in a
+version (the producing batch id) guards both, through the strict form
+of snapshot_store.snapshot_sink. Pairs land in a
 per-batch subdirectory (pairs/batch=<id>) BEFORE the index publishes;
 a crash between the two leaves the index version behind, and the
 replay overwrites the same pair dir then publishes.
@@ -33,14 +34,9 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.operators.dedup import hash64_band_pairs_incremental
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 
 def make_fingerprint_sink(
@@ -58,14 +54,8 @@ def make_fingerprint_sink(
     batches; `max_hamming` is fixed for the life of the index (the
     banding derives from it)."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(index_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay: pairs + index already landed
+    def fold(batch, history, version, replay):
         new_index = fingerprint_fn(batch).localCheckpoint(eager=True)
-        history = read_snapshot(spark, index_path)
         if history is None:
             history = new_index.limit(0)  # bootstrap: new×new only
         else:
@@ -77,40 +67,14 @@ def make_fingerprint_sink(
             )
             if dup:
                 raise ValueError(
-                    f"fingerprint sink: batch {batch_id} re-delivers asset "
+                    f"fingerprint sink: batch {version} re-delivers asset "
                     f"id {dup[0][id_col]} already in the index — ids must "
                     "be globally unique across batches"
                 )
         pairs = hash64_band_pairs_incremental(
             history, new_index, id_col, hi_col, lo_col, max_hamming
         )
-        pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-        publish_snapshot(
-            history.unionByName(new_index), index_path, version=batch_id
-        )
+        pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={version}")
+        return history.unionByName(new_index)
 
-    return sink
-
-
-def stream_maintain_fingerprint_index(
-    spark: SparkSession,
-    source: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    checkpoint_dir: str,
-    fingerprint_fn: Callable[[DataFrame], DataFrame],
-    trigger_seconds: int = 60,
-    **fp_kwargs,
-) -> StreamingQuery:
-    """Attach the fingerprint maintenance sink to a streaming DataFrame
-    of (asset_id, payload) assets."""
-    return (
-        source.writeStream.foreachBatch(
-            make_fingerprint_sink(
-                spark, index_path, pairs_path, fingerprint_fn, **fp_kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, index_path, fold)

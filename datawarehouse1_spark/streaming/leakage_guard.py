@@ -2,8 +2,9 @@
 face of q_split_train_holdout's leakage audit (queries/curation_r10.py).
 
 Documents arrive as a STREAM of (doc_id, text). Each document belongs
-to a split — a pure function of doc_id (the same md5 hex-prefix
-thresholds as the batch query) — and the guard maintains:
+to a split — a pure function of doc_id (functions/splits.py, the
+same md5 hex-prefix rule as the batch query) — and the guard
+maintains:
 
   * the persisted TRAIN text-hash index (distinct md5(text) of every
     train document ingested so far — 32 hex chars per distinct text,
@@ -26,12 +27,13 @@ Steady state at 100 TB: per batch the work is one hash equi-join of
 the batch's holdout hashes (small) against the index — the index side
 never rewrites rows that survive, and the corpus text never shuffles.
 
-Exactly-once — CONTENT-guarded (SCALE.md rule 24): the index fold is a
-set UNION (idempotent by algebra), so the sink always recomputes both
-effects; the flag dir is keyed by a sha256 of the batch's doc ids, so
-a checkpoint replay or a post-rebase redelivery overwrites the same
-dir instead of duplicating flags, and the published index version
-stays monotonic across a rebase. A crash between flags and index
+Exactly-once — CONTENT-guarded (SCALE.md rule 24, the idempotent form
+of snapshot_store.snapshot_sink): the index fold is a set UNION
+(idempotent by algebra), so the sink always recomputes both effects;
+the flag dir is keyed by a sha256 of the batch's doc ids, so a
+checkpoint replay or a post-rebase redelivery overwrites the same dir
+instead of duplicating flags, and the published index version stays
+monotonic across a rebase. A crash between flags and index
 publish re-applies both on redelivery (flags overwrite, union no-ops).
 
 Law (pinned in tests/test_streaming_leakage.py): the union of all
@@ -44,26 +46,14 @@ SURVEY.md §2D extension inventory (LLM-pipeline tier).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
+from datawarehouse1_spark.functions.splits import split_col
 from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
+    content_key,
+    snapshot_sink,
 )
-
-
-def split_col(id_col: str = "doc_id") -> F.Column:
-    """The split rule shared with q_split_train_holdout: a pure
-    function of the document id (md5 hex-prefix thresholds ~90/5/5)."""
-    prefix = F.substring(F.md5(F.col(id_col).cast("string")), 1, 8)
-    return (
-        F.when(prefix < "e6666666", "train")
-        .when(prefix < "f3333333", "val")
-        .otherwise("test")
-    )
 
 
 def make_leakage_sink(
@@ -76,10 +66,7 @@ def make_leakage_sink(
     """foreachBatch body maintaining the train-hash index and the
     contamination flag log."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(index_path)
+    def fold(batch, history, version, replay):
         tagged = (
             batch.select(
                 F.col(id_col).alias("doc_id"),
@@ -89,7 +76,6 @@ def make_leakage_sink(
             .localCheckpoint(eager=True)
         )
         new_train = tagged.filter(F.col("split") == "train").select("th")
-        history = read_snapshot(spark, index_path)
         if history is None:
             history = new_train.limit(0)
         known = history.unionByName(new_train).distinct()
@@ -100,58 +86,23 @@ def make_leakage_sink(
         # content-keyed flag dir: replays and rebased redeliveries of
         # the same document batch overwrite the same dir (idempotent),
         # and never collide with a different batch's flags
-        fp = tagged.agg(
-            F.sha2(
-                F.concat_ws(
-                    ",", F.sort_array(F.collect_list("doc_id"))
-                ),
-                256,
-            ).alias("key")
-        ).collect()[0]["key"][:16]
+        key = content_key("doc_id").alias("key")
+        fp = tagged.agg(key).collect()[0]["key"][:16]
         flags.coalesce(1).write.mode("overwrite").parquet(
             f"{flags_path}/batch={fp}"
         )
-        # index fold: a set union — idempotent by algebra, so the
-        # replay guard is CONTENT-based (SCALE.md rule 24): skip the
-        # republish only when the version says replay AND the batch
-        # adds no new train hash (a bounded limit(1) probe); a rebased
-        # batch with real new content still publishes, at a version
-        # that stays monotonic (applied+1)
-        maybe_replay = applied is not None and applied >= batch_id
-        if maybe_replay:
+        # index fold: a set union — idempotent by algebra, so on a
+        # replay the republish is skipped only when the batch adds no
+        # new train hash (a bounded limit(1) probe); a rebased batch
+        # with real new content still publishes
+        if replay:
             added = (
                 new_train.join(history, "th", "left_anti")
                 .limit(1)
                 .collect()
             )
             if not added:
-                return  # flags overwrote idempotently; index unchanged
-        version = (
-            batch_id
-            if applied is None or batch_id > applied
-            else applied + 1
-        )
-        publish_snapshot(known, index_path, version=version)
+                return None  # flags overwrote idempotently; index unchanged
+        return known
 
-    return sink
-
-
-def stream_maintain_leakage_guard(
-    spark: SparkSession,
-    source: DataFrame,
-    index_path: str,
-    flags_path: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 60,
-    **kwargs,
-) -> StreamingQuery:
-    """Attach the leakage-guard sink to a streaming DataFrame of
-    (doc_id, text) documents."""
-    return (
-        source.writeStream.foreachBatch(
-            make_leakage_sink(spark, index_path, flags_path, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, index_path, fold, idempotent=True)

@@ -18,7 +18,8 @@ pairs equal a full LSH run over the whole corpus.
 
 Exactly-once: foreachBatch is at-least-once, and BOTH effects (pair
 append, index grow) are non-idempotent, so the snapshot version — the
-producing batch id — guards both: a replayed batch is skipped outright.
+producing batch id — guards both: the strict guard of
+snapshot_store.snapshot_sink skips a replayed batch outright.
 Pair output is written to a per-batch subdirectory (pairs/batch=<id>)
 BEFORE the index publishes; a crash between the two leaves the pair
 dir present but the index version behind, and the replay overwrites
@@ -31,17 +32,12 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.operators.dedup import (
     build_minhash_index,
     minhash_lsh_incremental_pairs,
 )
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 
 def make_neardup_sink(
@@ -59,16 +55,10 @@ def make_neardup_sink(
     (the operator contract); banding parameters are fixed for the life
     of the index — changing them invalidates it."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(index_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay: pairs + index already landed
+    def fold(batch, history, version, replay):
         new_index = build_minhash_index(
             batch, text_col, id_col, num_hashes, bands, shingle_n
         ).localCheckpoint(eager=True)
-        history = read_snapshot(spark, index_path)
         if history is None:
             # bootstrap: no cross pairs possible; new×new only
             history = new_index.limit(0)
@@ -84,7 +74,7 @@ def make_neardup_sink(
             )
             if dup:
                 raise ValueError(
-                    f"neardup sink: batch {batch_id} re-delivers doc id "
+                    f"neardup sink: batch {version} re-delivers doc id "
                     f"{dup[0]._id} already in the index — ids must be "
                     "globally unique across batches"
                 )
@@ -101,32 +91,7 @@ def make_neardup_sink(
         )
         # per-batch pair dir: overwrite-idempotent under replay, and
         # written BEFORE the index version commits (see module doc)
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_path}/batch={batch_id}"
-        )
-        publish_snapshot(
-            history.unionByName(new_index), index_path, version=batch_id
-        )
+        pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={version}")
+        return history.unionByName(new_index)
 
-    return sink
-
-
-def stream_maintain_neardup_index(
-    spark: SparkSession,
-    source: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 60,
-    **lsh_kwargs,
-) -> StreamingQuery:
-    """Attach the near-dup maintenance sink to a streaming DataFrame of
-    (doc_id, text) documents."""
-    return (
-        source.writeStream.foreachBatch(
-            make_neardup_sink(spark, index_path, pairs_path, **lsh_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, index_path, fold)

@@ -21,7 +21,9 @@ one atomic pointer swap and can never disagree, the serving schema
 stays pure (no metadata column for SELECT * consumers — the pre-r7
 `_last_batch` column is gone), and the guard check is a filesystem
 stat, not a Spark job. Replayed batches are skipped, not
-double-counted.
+double-counted: the sink is the strict form of
+snapshot_store.snapshot_sink. Attach it with
+`source.writeStream.foreachBatch(make_rollup_sink(...))`.
 """
 
 from __future__ import annotations
@@ -29,14 +31,9 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.operators.warehouse import merge_rollup
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 
 def make_rollup_sink(
@@ -50,48 +47,20 @@ def make_rollup_sink(
     persistent rollup, publish atomically (versioned dir + pointer
     swap; the version doubles as the replay guard)."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(rollup_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay — already folded in, skip
+    def fold(batch, old, version, replay):
         delta = batch_agg(batch)
-        old = read_snapshot(spark, rollup_path)
         if old is not None and "_last_batch" in old.columns:
             # Grandfather pre-r7 rollups that carried the in-table guard
-            # column. For these, latest_version() is None (legacy real
-            # dir, no version suffix), so the filesystem guard above is
-            # vacuous — the replay check MUST come from the column
-            # itself before it is dropped, or a checkpoint replay right
-            # after the upgrade (sink committed, checkpoint didn't)
-            # would double-count the delta.
+            # column. A legacy real dir has no version suffix, so the
+            # store's version guard is vacuous — the replay check MUST
+            # come from the column itself before it is dropped, or a
+            # checkpoint replay right after the upgrade (sink
+            # committed, checkpoint didn't) would double-count the
+            # delta.
             row = old.selectExpr("max(_last_batch) AS b").collect()[0]
-            if row["b"] is not None and row["b"] >= batch_id:
-                return  # replayed batch already folded into the legacy rollup
+            if row["b"] is not None and row["b"] >= version:
+                return None  # replayed batch already in the legacy rollup
             old = old.drop("_last_batch")
-        merged = merge_rollup(old, delta, keys, additive_cols)
-        publish_snapshot(merged, rollup_path, version=batch_id)
+        return merge_rollup(old, delta, keys, additive_cols)
 
-    return sink
-
-
-def stream_maintain_rollup(
-    spark: SparkSession,
-    source: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-    batch_agg: Callable[[DataFrame], DataFrame],
-    keys: Sequence[str],
-    additive_cols: Sequence[str],
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the rollup maintenance sink to any streaming DataFrame."""
-    return (
-        source.writeStream.foreachBatch(
-            make_rollup_sink(spark, rollup_path, batch_agg, keys, additive_cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, rollup_path, fold)

@@ -20,9 +20,10 @@ any log-ordered CDC source; within-batch duplicates raise loudly).
 
 Durability/exactly-once: the history republishes through
 streaming/snapshot_store.py — atomic pointer swap, version == batch
-id, replayed batches skipped. O(history) rewrite per batch, same
-small-table trade-off as the other maintainers (a real deployment
-points this at a row-merge format; the OPERATOR is the portable part).
+id, replayed batches skipped by the strict guard of snapshot_sink.
+O(history) rewrite per batch, same small-table trade-off as the other
+maintainers (a real deployment points this at a row-merge format; the
+OPERATOR is the portable part).
 """
 
 from __future__ import annotations
@@ -31,14 +32,9 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.operators.warehouse import scd2_from_changes
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 
 def make_scd2_sink(
@@ -51,19 +47,12 @@ def make_scd2_sink(
     """foreachBatch body: extend the SCD2 history with the micro-batch."""
     keys = list(keys)
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(history_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay of an already-published batch
+    def fold(batch, history, version, replay):
         new_versions = scd2_from_changes(
             batch, keys, seq_col=seq_col, op_col=op_col
         )
-        history = read_snapshot(spark, history_path)
         if history is None:
-            publish_snapshot(new_versions, history_path, version=batch_id)
-            return
+            return new_versions
         # close each touched key's open version at the batch's first seq
         first_seq = batch.groupBy(*keys).agg(
             F.min(seq_col).cast("long").alias("_close_at")
@@ -94,7 +83,7 @@ def make_scd2_sink(
         )
         if stale:
             raise ValueError(
-                f"scd2 sink: batch {batch_id} delivers seq <= an existing "
+                f"scd2 sink: batch {version} delivers seq <= an existing "
                 f"version's start for key {stale[0]} — the change stream "
                 "violated the globally-increasing-seq contract"
             )
@@ -114,29 +103,7 @@ def make_scd2_sink(
             )
             .drop("_close_at")
         )
-        publish_snapshot(
-            closed.unionByName(new_versions), history_path, version=batch_id
-        )
+        return closed.unionByName(new_versions)
 
-    return sink
+    return snapshot_sink(spark, history_path, fold)
 
-
-def stream_maintain_scd2(
-    spark: SparkSession,
-    changes: DataFrame,
-    history_path: str,
-    checkpoint_dir: str,
-    keys: Sequence[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the SCD2 maintenance sink to a streaming change feed."""
-    return (
-        changes.writeStream.foreachBatch(
-            make_scd2_sink(spark, history_path, keys, seq_col=seq_col, op_col=op_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )

@@ -27,6 +27,9 @@ at-least-once, and the version a snapshot was published under IS the
 batch id that produced it, so "has batch N already been folded in?" is
 ``latest_version(path) >= N`` — no metadata column in the serving
 schema, no extra Spark job per batch (both flagged by r6 ADVICE).
+``snapshot_sink`` is the one foreachBatch body built on it: every
+streaming maintainer passes it a fold (old snapshot + batch -> new
+snapshot) and it runs the guard, the read and the publish.
 
 Zero-d versions sort lexically == numerically, so "newest" needs no
 parsing. Single-node filesystem semantics (os.symlink/os.replace) match
@@ -47,11 +50,13 @@ checkpoint that numbered them. If the checkpoint is lost and the
 stream restarts with rebased batch ids while the store survives, the
 guard reads every early batch as "already applied". For sinks whose
 application is idempotent by algebra, a content-based guard removes
-the hazard (takedown_maintenance.py does this — it always applies and
-skips only no-op replays). For the NON-idempotent sinks (rollup
-merge, CDC apply, SCD2, near-dup/fingerprint indexes, drift log),
-re-applying would corrupt state, so no automatic recovery is correct:
-on checkpoint loss, restart those pipelines against a fresh store (or
+the hazard: ``snapshot_sink(..., idempotent=True)`` runs their fold on
+a replay too, and the fold publishes only when the batch changes
+something (takedown, leakage guard, attribution). For the
+NON-idempotent sinks (``idempotent=False``: rollup merge, CDC apply,
+SCD2, near-dup/fingerprint indexes, zone maps, drift log), re-applying
+would corrupt state, so no automatic recovery is correct: on
+checkpoint loss, restart those pipelines against a fresh store (or
 re-bootstrap from batch sources) — deleting the checkpoint but
 keeping the store is an operator error for them, documented here
 rather than guessed around.
@@ -62,9 +67,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from collections.abc import Callable
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _WIDTH = 20  # zero-pad so lexical sort == numeric sort for any int64
 
@@ -146,3 +153,46 @@ def _prune(path: str, keep: str) -> None:
         doomed.append(legacy)
     for d in doomed:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def snapshot_sink(
+    spark: SparkSession,
+    path: str,
+    fold: Callable[[DataFrame, Optional[DataFrame], int, bool], Optional[DataFrame]],
+    idempotent: bool = False,
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch body that folds each micro-batch into the snapshot
+    at `path` — both replay guards of SCALE.md rule 24 in one place.
+
+    Per non-empty batch, `replay` is "the published version already
+    covers this batch id". A strict sink (`idempotent=False`) skips a
+    replay without calling `fold`. An idempotent sink calls
+    `fold(batch, old, version, replay)` on a replay too, so the fold
+    can probe the batch's content; there `version` is one past the
+    published version, which stays monotonic across a batch-id
+    rebase. Otherwise `version` is the batch id. `old` is the current
+    snapshot (None before the first publish); the fold returns the new
+    snapshot, or None to publish nothing. Side outputs the fold writes
+    land before the publish, so a crash between them is healed by the
+    redelivery."""
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        applied = latest_version(path)
+        replay = applied is not None and applied >= batch_id
+        if replay and not idempotent:
+            return  # checkpoint replay — already folded in
+        version = applied + 1 if replay else batch_id
+        new = fold(batch, read_snapshot(spark, path), version, replay)
+        if new is not None:
+            publish_snapshot(new, path, version)
+
+    return sink
+
+
+def content_key(col: str) -> Column:
+    """sha256 hex of the sorted, comma-joined values of `col` in the
+    group: an order-independent key of a batch's id set, naming the
+    content-keyed side directories of the idempotent sinks."""
+    return F.sha2(F.concat_ws(",", F.sort_array(F.collect_list(col))), 256)

@@ -27,8 +27,9 @@ batch numbering REBASED below the published version; for a compliance
 sink the second case must still apply (an id-guard would silently
 drop real takedowns forever). Takedown application is idempotent by
 algebra — anti-joining an already-removed id removes nothing — so the
-sink always computes the anti join and skips the effects only when
-the batch removes nothing AND the version says replay. The published
+sink is the idempotent form of snapshot_store.snapshot_sink: it always
+computes the anti join and skips the effects only when the batch
+removes nothing AND the version says replay. The published
 version stays monotonic across a rebase (a rebased batch lands at
 applied+1), and the audit key is the published version. The audit row
 lands in its overwrite-idempotent dir BEFORE the corpus publishes; a
@@ -54,12 +55,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
+    content_key,
+    snapshot_sink,
 )
 
 
@@ -74,35 +73,25 @@ def make_takedown_sink(
     first time the sink ever runs (version None); afterwards the
     maintained snapshot is authoritative."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        applied = latest_version(corpus_path)
-        # `applied >= batch_id` is AMBIGUOUS: a checkpoint replay of an
-        # already-landed batch, OR a stream whose checkpoint was lost
-        # and whose batch numbering REBASED below the published version
-        # (a routine ops event). A compliance sink must never let the
-        # replay guard silently drop real takedowns in the second case,
-        # so the guard here is CONTENT-based, exploiting that takedown
-        # application is idempotent by algebra (anti-joining an
-        # already-removed id removes nothing): always compute the anti
-        # join, and skip the effects only when this batch removes
-        # nothing AND the version says it could be a replay. The only
-        # loss after a checkpoint rebase is the audit row of a batch
-        # whose tombstones were all already absent — the corpus itself
-        # is correct in every scenario.
-        maybe_replay = applied is not None and applied >= batch_id
+    def fold(batch, corpus, version, replay):
+        # On a replay (`applied >= batch_id`) the batch may be a
+        # checkpoint redelivery OR real takedowns of a stream whose
+        # checkpoint was lost and whose numbering rebased (a routine
+        # ops event); a compliance sink must not drop the second, so it
+        # always computes the anti join and skips only when nothing is
+        # removed. The only loss after a rebase is the audit row of a
+        # batch whose tombstones were all already absent — the corpus
+        # itself is correct in every scenario.
         tombstones = (
             batch.select(id_col).distinct().localCheckpoint(eager=True)
         )
-        corpus = read_snapshot(spark, corpus_path)
         if corpus is None:
             corpus = bootstrap
         n_before = corpus.count()
         kept = corpus.join(F.broadcast(tombstones), id_col, "left_anti")
         kept = kept.localCheckpoint(eager=True)
         n_after = kept.count()
-        if maybe_replay and n_before == n_after:
+        if replay and n_before == n_after:
             # ADVICE r9: a (redelivered or rebased) batch whose
             # tombstones are all already absent still leaves DURABLE
             # proof it was processed — the audit trail is the artifact
@@ -114,13 +103,7 @@ def make_takedown_sink(
             # The hash aggregate is a 1-row collect bounded by the
             # tombstone batch (small by contract — it broadcasts).
             fp = tombstones.agg(
-                F.count("*").alias("n"),
-                F.sha2(
-                    F.concat_ws(
-                        ",", F.sort_array(F.collect_list(id_col))
-                    ),
-                    256,
-                ).alias("key"),
+                F.count("*").alias("n"), content_key(id_col).alias("key")
             ).collect()[0]
             noop = spark.createDataFrame(
                 [(-1, fp["n"], 0, n_after)],
@@ -130,11 +113,10 @@ def make_takedown_sink(
             noop.coalesce(1).write.mode("overwrite").parquet(
                 f"{audit_path}/batch=noop-{fp['key'][:16]}"
             )
-            return
-        # audit + snapshot version: monotonic even across a rebase —
-        # the audit key is the published version, so a rebased batch 0
-        # lands at applied+1 and never collides with history
-        version = batch_id if applied is None or batch_id > applied else applied + 1
+            return None
+        # the audit key is the published version: monotonic even across
+        # a rebase (a rebased batch 0 lands at applied+1), so it never
+        # collides with history
         audit = spark.createDataFrame(
             [
                 (
@@ -149,28 +131,6 @@ def make_takedown_sink(
         audit.coalesce(1).write.mode("overwrite").parquet(
             f"{audit_path}/batch={version}"
         )
-        publish_snapshot(kept, corpus_path, version=version)
+        return kept
 
-    return sink
-
-
-def stream_maintain_takedown(
-    spark: SparkSession,
-    source: DataFrame,
-    corpus_path: str,
-    audit_path: str,
-    checkpoint_dir: str,
-    bootstrap: DataFrame,
-    id_col: str = "doc_id",
-    trigger_seconds: int = 60,
-) -> StreamingQuery:
-    """Attach the takedown sink to a streaming DataFrame of tombstone
-    ids."""
-    return (
-        source.writeStream.foreachBatch(
-            make_takedown_sink(spark, corpus_path, audit_path, bootstrap, id_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return snapshot_sink(spark, corpus_path, fold, idempotent=True)

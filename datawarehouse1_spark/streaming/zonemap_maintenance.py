@@ -24,11 +24,13 @@ Exactly-once — id-guarded with the LOUD checkpoint-coupling contract
 (SCALE.md rule 24, the non-idempotent branch): the fold is a per-file
 stats MERGE (min-of-mins / max-of-maxes / sum-of-counts), and the
 n_rows sum makes re-folding the same batch WRONG, so (a) a batch whose
-id the published version already covers is skipped (the
-rollup_maintenance guard — Spark redelivers only the last uncommitted
-batch under an intact checkpoint), and (b) a batch whose CONTENT
-matches the key stored with the last publish is skipped even when its
-id advanced (a defense-in-depth shield the id alone cannot give).
+id the published version already covers is skipped before any work
+(the strict guard of snapshot_store.snapshot_sink — Spark redelivers
+only the last uncommitted batch under an intact checkpoint), and (b) a
+batch whose CONTENT matches the key stored with the last publish is
+skipped even when its id advanced (a defense-in-depth shield the id
+alone cannot give). The key file lives inside the published version
+directory, so it is written right after the pointer swap.
 Like the rollup and CDC maintainers, the index is COUPLED to its
 checkpoint: on checkpoint loss, restart against a fresh index store —
 no automatic recovery of a non-idempotent fold is correct
@@ -51,13 +53,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from datawarehouse1_spark.streaming.snapshot_store import (
-    latest_version,
-    publish_snapshot,
-    read_snapshot,
-)
+from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
 _STATS = (
     "file_id",
@@ -191,54 +188,33 @@ def make_zonemap_sink(
     date_col: str = "o_orderdate",
 ) -> "callable":
     """foreachBatch body maintaining the per-file zone-map index."""
+    kp = _key_path(index_path)
+    published = {}  # content key of the batch the fold just handed over
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def fold(batch, index, version, replay):
         # one pass over the batch computes stats AND the content-guard
         # digest moments (ADVICE r11: previously two separate groupBys)
         delta_dig = batch_zonemap(
             batch, key_col, date_col, with_digest=True
         ).localCheckpoint(eager=True)
         delta = delta_dig.select(*_STATS)
-        # id-guard first (the rollup_maintenance contract: n_rows
-        # summing is NOT idempotent, so a replayed batch must skip;
-        # checkpoint loss => restart against a fresh index store)
-        applied = latest_version(index_path)
-        if applied is not None and applied >= batch_id:
-            return  # checkpoint replay — already folded in, skip
         # defense-in-depth: a redelivery whose id advanced anyway is
         # still recognized by its CONTENT matching the stored key
         ckey = _content_key(delta_dig)
-        kp = _key_path(index_path)
-        if applied is not None and os.path.exists(kp):
+        if index is not None and os.path.exists(kp):
             with open(kp) as fh:
                 if json.load(fh).get("key") == ckey:
-                    return
-        index = read_snapshot(spark, index_path)
-        merged = delta if index is None else merge_zonemaps(index, delta)
-        publish_snapshot(merged, index_path, version=batch_id)
-        with open(kp, "w") as fh:
-            json.dump({"key": ckey, "version": batch_id}, fh)
+                    return None
+        published.update(key=ckey, version=version)
+        return delta if index is None else merge_zonemaps(index, delta)
+
+    apply = snapshot_sink(spark, index_path, fold)
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        published.clear()
+        apply(batch, batch_id)
+        if published:  # the key file sits in the version dir just published
+            with open(kp, "w") as fh:
+                json.dump(published, fh)
 
     return sink
-
-
-def stream_maintain_zonemap(
-    spark: SparkSession,
-    source: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 60,
-    **kwargs,
-) -> StreamingQuery:
-    """Attach the zone-map sink to a streaming DataFrame of rows
-    tagged with file_id."""
-    return (
-        source.writeStream.foreachBatch(
-            make_zonemap_sink(spark, index_path, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )

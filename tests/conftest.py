@@ -63,7 +63,9 @@ def spark():
 # measured top offenders in otherwise-fast files (>=8 s each on the r17
 # box). The oracle contract — every declared query against DuckDB
 # (test_oracle_parity) and over an empty corpus — stays in the default
-# tier.
+# tier, and so does the versioned-snapshot maintainer contract
+# (test_snapshot_store, test_snapshot_sink, test_drift_monitor and the
+# test_streaming_<maintainer> modules).
 # Full suite (builder's batch-end gate): -m "slow or not slow".
 
 SLOW_MODULES = {
@@ -78,17 +80,6 @@ SLOW_MODULES = {
     "test_statestore_reader",
     "test_stream_batch_parity",
     "test_streaming",
-    "test_streaming_attribution",
-    "test_streaming_cdc",
-    "test_streaming_fingerprint",
-    "test_streaming_leakage",
-    "test_streaming_neardup",
-    "test_streaming_rollup",
-    "test_streaming_scd2",
-    "test_streaming_takedown",
-    "test_streaming_zonemap",
-    "test_drift_monitor",
-    "test_snapshot_store",
     "test_flac_codec",          # codec round-trips: pure-python en/decode
     "test_gif_codec",
     "test_jpeg_codec",

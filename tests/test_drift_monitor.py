@@ -14,7 +14,6 @@ from datawarehouse1_spark.streaming.drift_monitor import (
     chisq_vs_reference,
     make_drift_sink,
     reference_profile,
-    stream_monitor_drift,
 )
 from datawarehouse1_spark.streaming.snapshot_store import read_snapshot
 
@@ -118,15 +117,14 @@ def test_stream_end_to_end_with_restart(spark, tmp_path):
 
     def start():
         source = spark.readStream.schema(src_schema).parquet(str(watch) + "/*")
-        return stream_monitor_drift(
-            spark,
-            source,
-            ref,
-            report_path,
-            ckpt,
-            lambda df: F.col("bin_val"),
-            alert_threshold_e6=500_000,
-            trigger_seconds=1,
+        sink = make_drift_sink(
+            spark, ref, report_path, lambda df: F.col("bin_val"), 500_000
+        )
+        return (
+            source.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
         )
 
     q = start()

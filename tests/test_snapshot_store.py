@@ -128,7 +128,7 @@ def test_rollup_sink_crash_mid_publish_recovers(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
-    from datawarehouse1_spark.streaming import rollup_maintenance, snapshot_store
+    from datawarehouse1_spark.streaming import snapshot_store
     from datawarehouse1_spark.streaming.rollup_maintenance import make_rollup_sink
 
     rollup = str(tmp_path / "rollup")
@@ -153,9 +153,7 @@ def test_rollup_sink_crash_mid_publish_recovers(spark, tmp_path, monkeypatch):
         df.write.mode("overwrite").parquet(vdir)
         raise RuntimeError("simulated crash before pointer swap")
 
-    monkeypatch.setattr(
-        rollup_maintenance, "publish_snapshot", dying_publish
-    )
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", dying_publish)
     try:
         sink(batch([("a", 5), ("b", 7)]), 1)
     except RuntimeError:
@@ -166,7 +164,7 @@ def test_rollup_sink_crash_mid_publish_recovers(spark, tmp_path, monkeypatch):
 
     # restart: the streaming engine replays batch 1; it must fold in
     # exactly once through the repaired publish
-    monkeypatch.setattr(rollup_maintenance, "publish_snapshot", real_publish)
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", real_publish)
     sink(batch([("a", 5), ("b", 7)]), 1)
     rows = {r.k: r.total for r in spark.read.parquet(rollup).collect()}
     assert rows == {"a": Decimal("15.00"), "b": Decimal("7.00")}
@@ -184,7 +182,7 @@ def test_cdc_sink_crash_mid_publish_recovers(spark, tmp_path, monkeypatch):
     r6 ADVICE failure mode this store exists to prevent)."""
     from pyspark.sql import functions as F  # noqa: F401
 
-    from datawarehouse1_spark.streaming import cdc_apply, snapshot_store
+    from datawarehouse1_spark.streaming import snapshot_store
     from datawarehouse1_spark.streaming.cdc_apply import make_cdc_sink
 
     snap = str(tmp_path / "snap")
@@ -201,16 +199,15 @@ def test_cdc_sink_crash_mid_publish_recovers(spark, tmp_path, monkeypatch):
         )
         raise RuntimeError("simulated crash before pointer swap")
 
-    monkeypatch.setattr(cdc_apply, "publish_snapshot", dying_publish)
+    real_publish = snapshot_store.publish_snapshot
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", dying_publish)
     try:
         sink(batch([(1, "a2", "U", 3), (2, None, "D", 4)]), 1)
     except RuntimeError:
         pass
     assert _rows(spark, snap) == {(1, "a"), (2, "b")}  # history intact
 
-    monkeypatch.setattr(
-        cdc_apply, "publish_snapshot", snapshot_store.publish_snapshot
-    )
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", real_publish)
     sink(batch([(1, "a2", "U", 3), (2, None, "D", 4)]), 1)
     assert _rows(spark, snap) == {(1, "a2")}
     sink(batch([(1, "a2", "U", 3), (2, None, "D", 4)]), 1)  # replay: no-op

@@ -222,8 +222,13 @@ def test_attribution_stream_end_to_end_with_restart(spark, tmp_path):
 
     def start():
         source = spark.readStream.schema(_SCHEMA).parquet(str(watch) + "/*")
-        return am.stream_maintain_attribution(
-            spark, source, state_path, log_path, ckpt, trigger_seconds=1
+        return (
+            source.writeStream.foreachBatch(
+                am.make_attribution_sink(spark, state_path, log_path)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
         )
 
     q = start()

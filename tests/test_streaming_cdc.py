@@ -13,7 +13,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datawarehouse1_spark.streaming.cdc_apply import make_cdc_sink, stream_apply_cdc
+from datawarehouse1_spark.streaming.cdc_apply import make_cdc_sink
 
 SCHEMA = StructType(
     [
@@ -45,8 +45,11 @@ def test_streaming_cdc_matches_sequential_replay(spark, tmp_path):
         [(1, "a", "I", 1), (2, "b", "I", 2), (3, "c", "I", 3)],
     )
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = stream_apply_cdc(
-        spark, stream, snap, ckpt, keys=("k",), trigger_seconds=1
+    q = (
+        stream.writeStream.foreachBatch(make_cdc_sink(spark, snap, keys=("k",)))
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="1 seconds")
+        .start()
     )
     try:
         q.processAllAvailable()

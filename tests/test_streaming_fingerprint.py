@@ -22,6 +22,7 @@ from datawarehouse1_spark.multimodal.binary_columns import (
 )
 from datawarehouse1_spark.operators.dedup import hash64_band_pairs
 from datawarehouse1_spark.streaming import fingerprint_maintenance as fpm
+from datawarehouse1_spark.streaming import snapshot_store
 from datawarehouse1_spark.streaming.snapshot_store import (
     latest_version,
     read_snapshot,
@@ -117,19 +118,19 @@ def test_fingerprint_sink_crash_between_effects_recovers(
     )
     sink(_assets(spark, [10, 11]), 0)
 
-    real_publish = fpm.publish_snapshot
+    real_publish = snapshot_store.publish_snapshot
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before index publish")
 
-    monkeypatch.setattr(fpm, "publish_snapshot", boom)
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", boom)
     with pytest.raises(RuntimeError, match="injected"):
         sink(_assets(spark, [12, 13]), 1)
     # pairs landed, index did not
     assert glob.glob(f"{pairs_path}/batch=1")
     assert latest_version(index_path) == 0
 
-    monkeypatch.setattr(fpm, "publish_snapshot", real_publish)
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", real_publish)
     sink(_assets(spark, [12, 13]), 1)  # at-least-once redelivery
     assert latest_version(index_path) == 1
     assert read_snapshot(spark, index_path).count() == 4

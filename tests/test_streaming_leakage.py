@@ -174,8 +174,13 @@ def test_leakage_guard_stream_end_to_end_with_restart(spark, tmp_path):
         source = spark.readStream.schema("doc_id long, text string").parquet(
             str(watch) + "/*"
         )
-        return lg.stream_maintain_leakage_guard(
-            spark, source, index_path, flags_path, ckpt, trigger_seconds=1
+        return (
+            source.writeStream.foreachBatch(
+                lg.make_leakage_sink(spark, index_path, flags_path)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
         )
 
     q = start()

@@ -13,7 +13,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from datawarehouse1_spark.streaming.rollup_maintenance import stream_maintain_rollup
+from datawarehouse1_spark.streaming.rollup_maintenance import make_rollup_sink
 
 SCHEMA = StructType(
     [
@@ -40,6 +40,17 @@ def _feed(spark, src, rows):
     spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode("append").parquet(src)
 
 
+def _start(spark, stream, rollup, ckpt):
+    return (
+        stream.writeStream.foreachBatch(
+            make_rollup_sink(spark, rollup, _agg, ["month"], ["n_orders", "total"])
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="1 seconds")
+        .start()
+    )
+
+
 def test_streaming_rollup_matches_full_recompute(spark, tmp_path):
     src = str(tmp_path / "src")
     rollup = str(tmp_path / "rollup")
@@ -50,10 +61,7 @@ def test_streaming_rollup_matches_full_recompute(spark, tmp_path):
     _feed(spark, src, batch1)
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = stream_maintain_rollup(
-        spark, stream, rollup, ckpt, _agg, ["month"], ["n_orders", "total"],
-        trigger_seconds=1,
-    )
+    q = _start(spark, stream, rollup, ckpt)
     try:
         q.processAllAvailable()
         _feed(spark, src, batch2)
@@ -73,10 +81,7 @@ def test_streaming_rollup_matches_full_recompute(spark, tmp_path):
     # restart from checkpoint: a third batch merges, earlier ones not re-read
     _feed(spark, src, [("O5", "2025-02-10T12:00:00", 0.01)])
     stream2 = spark.readStream.schema(SCHEMA).parquet(src)
-    q2 = stream_maintain_rollup(
-        spark, stream2, rollup, ckpt, _agg, ["month"], ["n_orders", "total"],
-        trigger_seconds=1,
-    )
+    q2 = _start(spark, stream2, rollup, ckpt)
     try:
         q2.processAllAvailable()
     finally:

@@ -16,6 +16,7 @@ import time
 
 import pytest
 
+from datawarehouse1_spark.streaming import snapshot_store
 from datawarehouse1_spark.streaming import takedown_maintenance as tdm
 from datawarehouse1_spark.streaming.snapshot_store import (
     latest_version,
@@ -123,12 +124,12 @@ def test_takedown_crash_between_effects_recovers(spark, tmp_path, monkeypatch):
     )
     sink(_tombstones(spark, [0]), 0)
 
-    real_publish = tdm.publish_snapshot
+    real_publish = snapshot_store.publish_snapshot
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before corpus publish")
 
-    monkeypatch.setattr(tdm, "publish_snapshot", boom)
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", boom)
     with pytest.raises(RuntimeError, match="injected"):
         sink(_tombstones(spark, [1, 2]), 1)
     assert glob.glob(f"{audit_path}/batch=1")
@@ -136,7 +137,7 @@ def test_takedown_crash_between_effects_recovers(spark, tmp_path, monkeypatch):
     # the SERVED corpus is still the complete pre-crash snapshot
     assert read_snapshot(spark, corpus_path).count() == 39
 
-    monkeypatch.setattr(tdm, "publish_snapshot", real_publish)
+    monkeypatch.setattr(snapshot_store, "publish_snapshot", real_publish)
     sink(_tombstones(spark, [1, 2]), 1)  # at-least-once redelivery
     assert latest_version(corpus_path) == 1
     snap = read_snapshot(spark, corpus_path)
@@ -164,14 +165,14 @@ def test_takedown_stream_end_to_end_with_restart(spark, tmp_path):
         source = spark.readStream.schema("doc_id long").parquet(
             str(watch) + "/*"
         )
-        return tdm.stream_maintain_takedown(
-            spark,
-            source,
-            corpus_path,
-            audit_path,
-            ckpt,
-            bootstrap=_corpus(spark),
-            trigger_seconds=1,
+        sink = tdm.make_takedown_sink(
+            spark, corpus_path, audit_path, _corpus(spark)
+        )
+        return (
+            source.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
         )
 
     q = start()

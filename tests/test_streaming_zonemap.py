@@ -239,8 +239,11 @@ def test_zonemap_stream_end_to_end_with_restart(spark, tmp_path):
 
     def start():
         source = spark.readStream.schema(_SCHEMA).parquet(str(watch) + "/*")
-        return zm.stream_maintain_zonemap(
-            spark, source, path, ckpt, trigger_seconds=1
+        return (
+            source.writeStream.foreachBatch(zm.make_zonemap_sink(spark, path))
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
         )
 
     q = start()

@@ -16,7 +16,11 @@ Env:
 
 Methodology: one SparkSession (HEAD's get_spark), both sides warmed
 once, then reps alternate A,B,A,B,... followed by B,A,B,A,... so a
-monotone box drift cancels; min + median per side per order printed.
+monotone box drift cancels. Per order, each side's median and IQR are
+printed with a verdict: is the new side slower than the old one by
+more than the old side's IQR? A regression is one that is "slower" in
+both orders. The last line per side pools both orders (min, median,
+every timing with the new-first half first).
 """
 
 from __future__ import annotations
@@ -42,6 +46,13 @@ def timed(spark, fn) -> float:
     return time.perf_counter() - t0
 
 
+def _iqr(xs: list[float]) -> float:
+    if len(xs) < 2:
+        return 0.0
+    q1, _, q3 = statistics.quantiles(xs, n=4)
+    return q3 - q1
+
+
 def main() -> None:
     sys.path.insert(0, TWIN_PATH)
     twin_registry = importlib.import_module(f"{TWIN_PKG}.registry")
@@ -59,11 +70,24 @@ def main() -> None:
         timed(spark, old_fn)
         results: dict[str, list[float]] = {"new": [], "old": []}
         for order in (("new", "old"), ("old", "new")):
+            run: dict[str, list[float]] = {"new": [], "old": []}
             for _ in range(REPS):
                 for side in order:
                     fn = new_fn if side == "new" else old_fn
                     spark.sparkContext.setJobDescription(f"{name} {side}")
-                    results[side].append(timed(spark, fn))
+                    run[side].append(timed(spark, fn))
+            old_med, new_med = (statistics.median(run[s]) for s in ("old", "new"))
+            old_iqr = _iqr(run["old"])
+            slower = "yes" if new_med - old_med > old_iqr else "no"
+            print(
+                f"{name} {order[0]}-first: "
+                f"old median {old_med:.3f}s IQR {old_iqr:.3f}s, "
+                f"new median {new_med:.3f}s IQR {_iqr(run['new']):.3f}s; "
+                f"new slower by more than old IQR: {slower}",
+                flush=True,
+            )
+            for side in order:
+                results[side].extend(run[side])
         for side in ("old", "new"):
             xs = results[side]
             print(
