@@ -7,7 +7,9 @@ that, per arriving micro-batch of documents,
      were emitted when those batches arrived), and
   2. folds the batch's signatures into the persisted LSH index
      (build_minhash_index output), republished atomically through
-     streaming/snapshot_store.py.
+     streaming/snapshot_store.py. A document shorter than the shingle
+     size is kept with empty shingles and bands: it pairs with nothing,
+     but its id stays guarded against reuse.
 
 This is the steady-state shape of a continuously-ingesting corpus at
 100 TB: per batch, signature compute scales with the batch, the band
@@ -32,10 +34,12 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from datawarehouse1_spark.operators.dedup import (
     build_minhash_index,
     minhash_lsh_incremental_pairs,
+    tokens,
 )
 from datawarehouse1_spark.streaming.snapshot_store import snapshot_sink
 
@@ -63,11 +67,11 @@ def make_neardup_sink(
             # bootstrap: no cross pairs possible; new×new only
             history = new_index.limit(0)
         else:
-            # id-disjointness enforcement: a doc id reused across
-            # batches would pair with ITSELF at jaccard 1.0 and be
+            # id-disjointness over ALL the batch's ids: a doc id reused
+            # across batches would pair with ITSELF at jaccard 1.0 and be
             # indexed twice — fail loudly before any effect lands
             dup = (
-                new_index.select("_id")
+                batch.select(F.col(id_col).alias("_id"))
                 .join(history.select("_id"), "_id", "left_semi")
                 .limit(1)
                 .collect()
@@ -92,6 +96,18 @@ def make_neardup_sink(
         # per-batch pair dir: overwrite-idempotent under replay, and
         # written BEFORE the index version commits (see module doc)
         pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={version}")
-        return history.unionByName(new_index)
+        # a doc with fewer than shingle_n tokens (or no text) has no
+        # shingles, so the index build drops it; keep its id with empty
+        # _sh/_bands (no band rows, so no candidates) so that a later
+        # reuse of it is caught too. A row filter, not a join: no job.
+        indexed = F.coalesce(F.size(tokens(text_col)) >= shingle_n, F.lit(False))
+        short = batch.filter(~indexed).select(
+            F.col(id_col).alias("_id"),
+            *(
+                F.array().cast(new_index.schema[c].dataType).alias(c)
+                for c in ("_sh", "_bands")
+            ),
+        )
+        return history.unionByName(new_index).unionByName(short)
 
     return snapshot_sink(spark, index_path, fold)

@@ -73,6 +73,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datawarehouse1_spark.catalog import footer_schema
+
 _WIDTH = 20  # zero-pad so lexical sort == numeric sort for any int64
 
 
@@ -119,8 +121,16 @@ def latest_version(path: str) -> Optional[int]:
 
 
 def read_snapshot(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """The served snapshot, or None if nothing published. Its schema
+    comes from one part file's footer (catalog.footer_schema), so the
+    read runs no Spark job; Spark infers only where the footer cannot
+    say."""
     d = resolve(path)
-    return spark.read.parquet(d) if d is not None else None
+    if d is None:
+        return None
+    schema = footer_schema(spark, d)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(d)
 
 
 def publish_snapshot(df: DataFrame, path: str, version: int) -> None:

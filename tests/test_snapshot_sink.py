@@ -2,7 +2,8 @@
 foreachBatch body every streaming maintainer runs, driven directly with
 small frames and batch ids (no stream): the empty-batch skip, the strict
 and the content (idempotent) replay guards of SCALE.md rule 24, the
-version after a batch-id rebase, and a fold that publishes nothing."""
+version after a batch-id rebase, a fold that publishes nothing, and a
+snapshot read that runs no Spark job."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pytest
 from datawarehouse1_spark.streaming.snapshot_store import (
     content_key,
     latest_version,
+    publish_snapshot,
     read_snapshot,
     snapshot_sink,
 )
@@ -141,3 +143,21 @@ def test_content_key_ignores_row_order(spark):
 
     assert key(["b", "a", "c"]) == key(["c", "b", "a"])
     assert key(["a", "b"]) != key(["a", "b", "c"])
+
+
+def test_read_snapshot_runs_no_job(spark, tmp_path):
+    """The snapshot's schema comes from its footer, so a sink's read of
+    the published snapshot runs no schema-inference job."""
+    path = str(tmp_path / "snap")
+    publish_snapshot(_frame(spark, range(10)), path, 0)
+    sc = spark.sparkContext
+    group = f"read_snapshot-{tmp_path.name}"
+    sc.setJobGroup(group, "read_snapshot")
+    try:
+        df = read_snapshot(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.schema == spark.read.parquet(path).schema
+    assert _values(spark, path) == list(range(10))

@@ -112,3 +112,24 @@ def test_neardup_sink_duplicate_id_across_batches_raises(spark, tmp_path):
     assert _pairs(spark, pairs_path) == before_pairs
     assert read_snapshot(spark, index_path).count() == n_index
     assert latest_version(index_path) == 0
+
+
+def test_neardup_sink_short_doc_id_stays_guarded(spark, tmp_path):
+    """A doc with fewer tokens than shingle_n has no shingles and pairs
+    with nothing, but its id is still in the index: a later batch that
+    re-delivers it raises like any other reused id."""
+    import pytest
+
+    index_path = str(tmp_path / "index")
+    pairs_path = str(tmp_path / "pairs")
+    sink = make_neardup_sink(spark, index_path, pairs_path, **LSH)
+    sink(_batch(spark, [(1, "one two"), (2, TEXTS[2])]), 0)
+    index = {r._id: r for r in read_snapshot(spark, index_path).collect()}
+    assert set(index) == {1, 2}
+    assert index[1]._sh == [] and index[1]._bands == []
+    assert _pairs(spark, pairs_path) == set()
+
+    for text in ("one two", TEXTS[1]):  # re-delivered short, then long
+        with pytest.raises(ValueError, match="globally unique"):
+            sink(_batch(spark, [(1, text)]), 1)
+    assert latest_version(index_path) == 0

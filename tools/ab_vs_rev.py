@@ -20,7 +20,15 @@ monotone box drift cancels. Per order, each side's median and IQR are
 printed with a verdict: is the new side slower than the old one by
 more than the old side's IQR? A regression is one that is "slower" in
 both orders. The last line per side pools both orders (min, median,
-every timing with the new-first half first).
+every timing with the new-first half first). Next to each per-order
+median it prints the side's janino compile count over that order's
+reps (CodegenMetrics), so a side that misses Spark's generated-code
+cache shows it.
+
+Both sides share one session, so this tool cannot A/B a `get_spark`
+setting (a session or JVM conf such as the generated-code cache size):
+such a change is measured with perfbench (`perfbench/run.py`) run in
+two checkouts, one per revision.
 """
 
 from __future__ import annotations
@@ -44,6 +52,12 @@ def timed(spark, fn) -> float:
     t0 = time.perf_counter()
     fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
+
+
+def compiles(spark) -> int:
+    """Classes janino compiled in this JVM so far (driver and tasks)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _iqr(xs: list[float]) -> float:
@@ -71,18 +85,23 @@ def main() -> None:
         results: dict[str, list[float]] = {"new": [], "old": []}
         for order in (("new", "old"), ("old", "new")):
             run: dict[str, list[float]] = {"new": [], "old": []}
+            compiled = {"new": 0, "old": 0}
             for _ in range(REPS):
                 for side in order:
                     fn = new_fn if side == "new" else old_fn
                     spark.sparkContext.setJobDescription(f"{name} {side}")
+                    c0 = compiles(spark)
                     run[side].append(timed(spark, fn))
+                    compiled[side] += compiles(spark) - c0
             old_med, new_med = (statistics.median(run[s]) for s in ("old", "new"))
             old_iqr = _iqr(run["old"])
             slower = "yes" if new_med - old_med > old_iqr else "no"
             print(
                 f"{name} {order[0]}-first: "
-                f"old median {old_med:.3f}s IQR {old_iqr:.3f}s, "
-                f"new median {new_med:.3f}s IQR {_iqr(run['new']):.3f}s; "
+                f"old median {old_med:.3f}s IQR {old_iqr:.3f}s "
+                f"({compiled['old']} compiles), "
+                f"new median {new_med:.3f}s IQR {_iqr(run['new']):.3f}s "
+                f"({compiled['new']} compiles); "
                 f"new slower by more than old IQR: {slower}",
                 flush=True,
             )
