@@ -76,7 +76,7 @@ def canary_sec(spark, runs: int = 3, warmup: bool = True) -> float:
 def spread_digits(spreads: dict[str, float]) -> str:
     """Per-query spreads as a fixed-width HEX-digit string for the tail
     budget: position i = i-th key in the dict's iteration order (the
-    same order the matching *_per_query line prints), digit = max-min
+    section's order in the full record), digit = max-min
     over the timed runs in DECISECONDS, ceil'd so the reported noise
     floor never understates, hex-encoded and capped at 'f' ('>=1.5 s').
     r15 (VERDICT r14 #2): r14's decimal cap of 9 pegged during the
@@ -92,7 +92,7 @@ def spread_digits(spreads: dict[str, float]) -> str:
 
 
 def _famstrip(key: str) -> str:
-    """'q_dedup_minhash_lsh' -> 'minhash_lsh' (unique across each
+    """'q_dedup_minhash_lsh' -> 'minhash_lsh' (unique across the final
     line's key set — pinned by tests/test_bench_tail.py). Single-segment
     names ('q_foo') keep their full stripped name (ADVICE r14: the old
     [1] indexing crashed output emission AFTER all timings were
@@ -114,7 +114,7 @@ def flat_per_query(
     sections: tuple[dict[str, float], ...], tpch: dict[str, float]
 ) -> dict[str, float]:
     """The final line's flat per-query map across every section, keyed
-    by the same short names as the per-section lines. Every key whose
+    by short names (`_famstrip`; tpch: `_tpch_key`). Every key whose
     short name collides with another key's keeps its full name, so no
     two queries merge and none is favoured by order."""
     short = {k: _famstrip(k) for section in sections for k in section}
@@ -372,98 +372,15 @@ def main() -> None:
         out["incomplete"] = True
     print(json.dumps(out))
     # The driver captures only the LAST 2000 stdout chars (measured:
-    # BENCH_r12's tail is exactly 2000), so the FULL record above is for
-    # local runs; the artifact-visible record is the compact lines
-    # below, printed least-critical FIRST so an overflow truncates from
-    # the top (tests/test_bench_tail.py pins the worst-case sum of
-    # these lines under the tail budget):
-    #   1. analytics_per_query — the 9 most expensive analytics-surface
-    #      timings (full names; VERDICT r12 #5)
-    #   2. llm_per_query    — 26 LLM-battery timings, 2dp; keys drop
-    #      "q_" AND the family segment (r13: the analytics line had to
-    #      fit the fixed 2000-char capture) — full names in the LLM
-    #      tuple above, e.g. "minhash_lsh" = q_dedup_minhash_lsh
-    #   3. rows_only_metrics — accuracy evidence for the oracle=None
-    #      queries (VERDICT r11 #4); key = "<query>:<metric>" with the
-    #      same family-segment strip; legend in accuracy.py
-    #   4. tpch_per_query   — TPC-H timings keyed "1".."22", 2dp
-    #      (VERDICT r11 #7: previously cut off mid-record)
-    #   5. headline_per_query — the 15 headline timings (keys family-
-    #      stripped from r14, like every other line — full names in the
-    #      HEADLINE tuple above)
-    #   6. spread_ds        — per-query spreads for all four sections as
-    #      fixed-width decisecond HEX-digit strings (see spread_digits;
-    #      cap 'f' = >=1.5 s from r15 — the r14 decimal cap pegged at 9
-    #      during the load ramp); key "a"/"l"/"t"/"h" = analytics/llm/
-    #      tpch/headline, position i = i-th key of that section's
-    #      per-query line (4dp spread dicts stay in the full record)
-    #   7. totals           — the driver-parsed final line, carrying
-    #      "canary" — from r15 a PER-SECTION dict {"h","t","l","a"} of
-    #      fixed pure-JVM constant-work secs timed immediately before
-    #      each section (VERDICT r14 #2: one leading canary missed the
-    #      r14 mid-run load ramp): normalize a section's numbers by ITS
-    #      canary_rN/canary_rM before calling a delta a regression; a
-    #      per-query delta inside its spread digit is box noise
-    #      either way.
-    if analytics:
-        print(
-            json.dumps(
-                {
-                    "analytics_per_query": {
-                        _famstrip(k): round(v, 2) for k, v in analytics.items()
-                    }
-                },
-                separators=(",", ":"),
-            )
-        )
-    print(
-        json.dumps(
-            {"llm_per_query": {_famstrip(k): round(v, 2) for k, v in llm.items()}},
-            separators=(",", ":"),
-        )
-    )
-    if metrics:
-        # family-stripped keys in every compact line: the tail budget
-        # is real (tests/test_bench_tail.py pins the worst case)
-        mline = {
-            "rows_only_metrics": {_famstrip(k): v for k, v in metrics.items()}
-        }
-        if metrics_sf_dir != "/root/testdata/sf0.01":
-            mline["metrics_sf_dir"] = metrics_sf_dir
-        print(json.dumps(mline, separators=(",", ":")))
-    print(
-        json.dumps(
-            {
-                "tpch_per_query": {
-                    _tpch_key(k): round(v, 2) for k, v in tpch.items()
-                }
-            },
-            separators=(",", ":"),
-        )
-    )
-    print(
-        json.dumps(
-            {
-                "headline_per_query": {
-                    _famstrip(k): round(v, 2) for k, v in timings.items()
-                }
-            },
-            separators=(",", ":"),
-        )
-    )
-    print(
-        json.dumps(
-            {
-                "spread_ds": {
-                    "a": spread_digits(analytics_spread),
-                    "l": spread_digits(llm_spread),
-                    "t": spread_digits(tpch_spread),
-                    "h": spread_digits(spreads),
-                }
-            },
-            separators=(",", ":"),
-        )
-    )
+    # BENCH_r12's tail is exactly 2000) and parses only the final line,
+    # so the full record above is for local runs and the final line
+    # below is the artifact (tests/test_bench_tail.py pins its worst
+    # case under the budget). It carries "canary", a per-section dict
+    # {"h","t","l","a"} of fixed pure-JVM constant-work secs timed
+    # immediately before each section (VERDICT r14 #2): normalize a
+    # section's numbers by ITS canary_rN/canary_rM before calling a
+    # delta a regression; a per-query delta inside its spread digit is
+    # box noise either way.
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -475,18 +392,15 @@ def main() -> None:
             compact[key] = out[key]
     if canaries:
         compact["canary"] = canaries
-    # r17 (VERDICT r16 #3, PERF contract): the driver parses ONLY the
-    # last stdout line, so the per-query map must ride THIS line for
-    # PERF's round-over-round table to populate — additions-only: every
-    # existing key above is unchanged, methodology untouched. Keys are
-    # the same family-stripped names (tpch: bare "1".."22") as the
-    # per-section lines; a cross-section strip collision (none today —
-    # pinned by tests/test_bench_tail.py) gives every colliding key its
-    # full name rather than silently merging two queries. Because this line
-    # alone now approaches the driver's 2000-char capture, it also
-    # carries the rows-only accuracy metrics and the spread digits:
-    # everything the artifact needs survives even when the (redundant)
-    # per-section lines above truncate from the top.
+    # The flat per-query map (PERF's round-over-round table reads it),
+    # the rows-only accuracy metrics and the spread digits. Keys drop
+    # "q_" and the family segment ("minhash_lsh" = q_dedup_minhash_lsh;
+    # tpch: bare "1".."22"); a cross-section strip collision (none
+    # today — pinned by tests/test_bench_tail.py) gives every colliding
+    # key its full name rather than silently merging two queries.
+    # spread_ds: per-query spreads as decisecond HEX-digit strings (see
+    # spread_digits), key "a"/"l"/"t"/"h" = analytics/llm/tpch/headline,
+    # position i = i-th key of that section in the full record.
     per_query = flat_per_query((timings, llm, analytics), tpch)
     if per_query:
         compact["per_query"] = per_query

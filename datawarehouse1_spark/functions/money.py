@@ -1,4 +1,4 @@
-"""Exact money aggregation.
+"""Exact money aggregation and exact integer arithmetic.
 
 The reference stores money as Postgres DECIMAL(10,2)
 (init-db/init.sql:40,54) so its SUM/AVG are exact decimal arithmetic.
@@ -97,3 +97,26 @@ def units_to_money_double(col: str | Column, scale: int) -> Column:
         c.cast("decimal(38,4)")
         * F.lit(f"0.{'0' * (scale - 1)}1").cast(f"decimal({scale + 1},{scale})")
     ).cast("double")
+
+
+# --- Exact integer arithmetic shared by the rank, score and lift
+# queries of several families (stats, events, orders, text, ...).
+
+# Cross-group sums of integer units: DECIMAL(38,0) holds them exactly
+# at any corpus scale, where a LONG sum could overflow.
+DEC38 = "decimal(38,0)"
+
+# Exact integer cents of the order total, as SQL text for both engines.
+TOTALPRICE_CENTS = sql_cents("o_totalprice")
+
+# floor(log2(n)) for n >= 1 as EXACT integer arithmetic in both
+# engines: the binary representation's length minus one. No float log.
+FLOOR_LOG2_SQL = "(length(bin({n})) - 1)"
+
+
+def exact_floor_div(num: str, den: str) -> Column:
+    """Exact floor(num/den) KEPT IN DECIMAL(38,0) for non-negative
+    decimal `num` (Spark `div` returns BIGINT and overflows loudly past
+    9.2e18; the subtract-modulo form makes the scale-6 decimal divide
+    exact, so no rounding can occur — the r12e lesson)."""
+    return F.expr(f"CAST(({num} - {num} % {den}) / {den} AS DECIMAL(38,0))")

@@ -27,7 +27,10 @@ replays.
 
 from __future__ import annotations
 
+import functools
+import re
 from dataclasses import dataclass, field
+from urllib.parse import urlsplit
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -74,16 +77,25 @@ class Staged:
     counts: BatchCounts
 
 
-def _fs_path(spark, path: str):
-    """(Hadoop FileSystem, Path) of `path` under the session's conf."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+def _hadoop(spark, path: str):
+    """(Hadoop Path class, FileSystem of `path`) under the session's
+    conf, resolved once per context and file system: every name looked
+    up through `sc._jvm` is a py4j round trip on the stream's batch
+    thread, and each commit publishes and deletes under the same roots."""
+    loc = urlsplit(path)
+    return _hadoop_at(spark.sparkContext, f"{loc.scheme}://{loc.netloc}/" if loc.scheme else "/")
+
+
+@functools.lru_cache(maxsize=8)
+def _hadoop_at(sc, root: str):
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    return Path, Path(root).getFileSystem(sc._jsc.hadoopConfiguration())
 
 
 def delete_path(spark, path: str) -> None:
     """Remove `path` and everything below it, if it exists."""
-    fs, hpath = _fs_path(spark, path)
-    fs.delete(hpath, True)
+    Path, fs = _hadoop(spark, path)
+    fs.delete(Path(path), True)
 
 
 def check_same_file_system(spark, staging: str, *targets: str) -> None:
@@ -92,10 +104,10 @@ def check_same_file_system(spark, staging: str, *targets: str) -> None:
     rename cannot cross file systems."""
     from pyspark.errors import IllegalArgumentException
 
-    fs, _ = _fs_path(spark, staging)
+    Path, fs = _hadoop(spark, staging)
     for target in targets:
         try:
-            fs.makeQualified(spark._jvm.org.apache.hadoop.fs.Path(target))
+            fs.makeQualified(Path(target))
         except IllegalArgumentException as e:  # Hadoop's "Wrong FS"
             raise ValueError(
                 f"{target} is not on the file system of {staging} ({fs.getUri()}); "
@@ -138,16 +150,20 @@ def publish_staged(spark, staged_path: str, name: str, table_path: str) -> None:
     appears in the table atomically (one rename); a batch of several
     part files appears file by file, as a Spark append's job commit
     also moves them."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    fs, src = _fs_path(spark, staged_path)
+    Path, fs = _hadoop(spark, staged_path)
     table = Path(table_path)
     fs.mkdirs(table)
-    names = sorted(st.getPath().getName() for st in fs.listStatus(src))
-    parts = [n for n in names if n.startswith("part-")]
-    for i, part in enumerate(parts):
+    # only the part files, not _SUCCESS nor the .crc sidecars; the
+    # staging path itself is escaped so a glob character in it (a
+    # checkpoint under "a[1]") matches literally instead of matching
+    # nothing
+    literal = re.sub(r"([\\\[\]{}*?])", r"\\\1", staged_path)
+    paths = [st.getPath() for st in fs.globStatus(Path(literal, "part-*"))]
+    staged = {p.getName(): p for p in paths}
+    for i, part in enumerate(sorted(staged)):
         ext = part[part.index("."):] if "." in part else ""
         dst = Path(table, f"part-{name}-{i:05d}{ext}")
-        if not fs.exists(dst) and not fs.rename(Path(src, part), dst):
+        if not fs.exists(dst) and not fs.rename(staged[part], dst):
             raise OSError(f"could not publish {staged_path}/{part} as {dst}")
 
 

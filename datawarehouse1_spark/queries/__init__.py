@@ -1,4 +1,13 @@
-"""Declared-query modules. Importing them registers into registry.QUERIES."""
+"""Declared-query modules, one per query family. Importing them
+registers into registry.QUERIES.
+
+A query lives in the family its subject names (the first word after
+`q_`: `q_orders_*` in orders.py, `q_stats_*` in stats.py, ...).
+`deciles.py` holds the shared rank and decile helpers and declares no
+query. Cross-family helpers live in `functions/` (one copy each), so no
+query module imports a private name from another; tests/
+test_query_modules.py pins that layout.
+"""
 
 from __future__ import annotations
 
@@ -18,52 +27,13 @@ _MODULES = (
     "multimodal_ext",
     "scale_ext",
     "profiling",
-    "analytics_ext",
-    "analytics_r5",
-    "text_r5",
+    "stats",
+    "orders",
+    "graph",
     "tpch",
-    "tpch_ext",
     "warc_ext",
     "wds_ext",
-    "curation_r6",
-    "curation_r7",
-    "curation_r8",
-    "profiling_r8",
-    "curation_r9",
-    "profiling_r9",
-    "curation_r10",
-    "layout_r10",
-    "analytics_r10",
-    "events_r10",
-    "analytics_r10b",
-    "text_r10",
-    "vectors_r10",
-    "dedup_r10",
-    "analytics_r10c",
-    "analytics_r10d",
-    "events_r10b",
-    "dedup_r10b",
-    "analytics_r10e",
-    "text_r10b",
-    "vectors_r10b",
-    "analytics_r10f",
-    "events_r10c",
-    "curation_r10b",
-    "analytics_r10g",
-    "layout_r10b",
-    "analytics_r10h",
-    "vectors_r10c",
-    "analytics_r12",
-    "analytics_r12b",
-    "analytics_r12c",
-    "analytics_r12d",
-    "analytics_r12e",
-    "analytics_r12f",
-    "analytics_r12g",
-    "analytics_r12h",
-    "analytics_r12i",
-    "analytics_r12j",
-    "analytics_r12k",
+    "curation",
 )
 
 

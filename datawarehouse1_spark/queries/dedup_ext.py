@@ -2,6 +2,11 @@
 SimHash). Rows-only checks — bucket/bit layouts are engine-specific — but
 deterministic across runs (fixed seeds); tests/test_dedup.py asserts their
 recall against the exact-Jaccard baseline (q_dedup_ngram_jaccard).
+
+Beside the LSH tiers: incremental MinHash, best-keeper clustering, the
+hash-based mixture sample, asymmetric shingle containment (the
+subset-dup tier Jaccard misses) and winnowing fingerprints (Schleimer,
+Wilkerson & Aiken, SIGMOD 2003).
 """
 
 from __future__ import annotations
@@ -10,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.arrays import word_ngrams
+from datawarehouse1_spark.functions.checksum import hexn_to_int_sql
 from datawarehouse1_spark.operators.dedup import (
     dedup_clusters_from_pairs,
     fuzzy_pairs_blocked,
@@ -20,6 +27,7 @@ from datawarehouse1_spark.operators.dedup import (
 )
 from datawarehouse1_spark.registry import declared
 from datawarehouse1_spark.state_memo import AppScopedMemo
+
 
 # Checkpointed minhash history index per (Spark app, corpus dir) — the
 # pipeline's persisted state, rebuilt bit-identically (seeded) if the
@@ -413,3 +421,307 @@ def q_dedup_clusters_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         "keeper",
         (F.col("id") == F.col("keeper")).alias("is_keeper"),
     )
+
+
+@declared(
+    "q_dedup_containment_subset",
+    oracle=r"""
+    WITH base AS (
+      SELECT doc_id, text FROM documents WHERE doc_id < 40
+      UNION ALL
+      SELECT doc_id + 20000 AS doc_id,
+             array_to_string(
+               (list_filter(string_split_regex(lower(text), '\s+'),
+                            t -> t <> ''))[1:10], ' ') AS text
+      FROM documents WHERE doc_id < 40 AND doc_id % 4 = 0
+    ),
+    shingled AS (
+      SELECT doc_id,
+             list_distinct(
+               list_transform(
+                 range(1, greatest(len(toks) - 2, 0) + 1),
+                 i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))
+               AS shingles
+      FROM (SELECT doc_id,
+                   list_filter(string_split_regex(lower(text), '\s+'),
+                               t -> t <> '') AS toks
+            FROM base)
+    )
+    SELECT a.doc_id AS src_doc, b.doc_id AS dst_doc,
+           CAST(len(list_intersect(a.shingles, b.shingles)) AS BIGINT)
+             AS n_common,
+           CAST(len(a.shingles) AS BIGINT) AS n_src_shingles,
+           CAST(len(list_intersect(a.shingles, b.shingles)) * 1000000
+                // len(a.shingles) AS BIGINT) AS containment_e6
+    FROM shingled a JOIN shingled b ON a.doc_id <> b.doc_id
+    WHERE len(a.shingles) > 0 AND len(b.shingles) > 0
+      AND len(list_intersect(a.shingles, b.shingles)) * 1000000
+            // len(a.shingles) >= 800000
+    """,
+)
+def q_dedup_containment_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric 3-word-shingle containment pairs at threshold 0.8:
+    (src, dst) where at least 80% of src's distinct shingles also
+    appear in dst — the subset-duplicate report (a doc that is a
+    near-prefix/excerpt of another). Candidates come from the shingle
+    EQUI-join (exact: containment > 0 implies a shared shingle;
+    distinct shingles make the per-pair match count the intersection
+    size); per-doc shingle counts broadcast; both `div` operands are
+    positive so the floors agree. Every 4th subset doc is staged again
+    as its own 10-token prefix — a guaranteed containment-1.0 subset
+    pair — keeping the oracle comparison non-vacuous at any SF."""
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    prefix_text = F.array_join(F.slice(toks, 1, 10), " ")
+    base = d.select("doc_id", "text").unionByName(
+        d.filter(F.col("doc_id") % 4 == 0).select(
+            (F.col("doc_id") + 20000).alias("doc_id"),
+            prefix_text.alias("text"),
+        )
+    )
+    shingles = F.array_distinct(word_ngrams(toks, 3))
+    # the bounded staged table (<= 50 rows) feeds BOTH join sides and
+    # the count broadcast; localCheckpoint runs the corpus scan +
+    # tokenize ONCE instead of once per consumer (SCALE.md rule 12 —
+    # measured 11.7 s -> ~2 s at the staged 10x dir, where the fat
+    # single-file text scan would otherwise re-decode serially 3x)
+    sh = (
+        base.select("doc_id", shingles.alias("shingles"))
+        .filter(F.size("shingles") > 0)
+        .localCheckpoint(eager=True)
+    )
+    ex = sh.select("doc_id", F.explode("shingles").alias("shingle"))
+    a = ex.alias("a")
+    b = ex.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") != F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("src_doc"),
+            F.col("b.doc_id").alias("dst_doc"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    counts = sh.select(
+        F.col("doc_id").alias("src_doc"),
+        F.size("shingles").cast("long").alias("n_src_shingles"),
+    )
+    return (
+        pairs.join(F.broadcast(counts), "src_doc")
+        .withColumn(
+            "containment_e6",
+            F.expr("n_common * 1000000 div n_src_shingles").cast("long"),
+        )
+        .filter(F.col("containment_e6") >= 800_000)
+        .select(
+            "src_doc", "dst_doc", "n_common", "n_src_shingles",
+            "containment_e6",
+        )
+    )
+
+
+K = 3  # tokens per gram
+
+W = 4  # grams per winnowing window -> guarantee threshold W+K-1 = 6 tokens
+
+
+# Portable 24-bit gram key from md5's first 6 hex nibbles — the shared
+# Spark/DuckDB text lives in functions/checksum.py
+
+
+_HEX6 = hexn_to_int_sql("md5(gram)", 6)
+
+
+# the oracle's window-offset list and gram concat derive from W and K
+# so the twins can never desynchronize on a constant bump
+_OFFSETS = "[" + ", ".join(str(o) for o in range(W)) + "]"
+
+_GRAM_ELEMS = ", ".join(f"toks[i+{j}]" for j in range(K))
+
+
+@declared(
+    "q_dedup_winnowing_fingerprint",
+    oracle=rf"""
+    WITH base AS (
+      SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\s+'),
+                         t -> t <> '') AS toks
+      FROM documents WHERE doc_id < 60
+      UNION ALL
+      SELECT doc_id + 30000 AS doc_id,
+             (list_filter(string_split_regex(lower(text), '\s+'),
+                          t -> t <> ''))[9:28] AS toks
+      FROM documents WHERE doc_id < 60 AND doc_id % 5 = 0
+    ),
+    grams AS (
+      SELECT doc_id,
+             list_transform(
+               range(1, greatest(len(toks) - {K - 1}, 0) + 1),
+               i -> concat_ws(' ', {_GRAM_ELEMS})) AS gs
+      FROM base
+    ),
+    pos AS (
+      SELECT doc_id, CAST(j AS BIGINT) AS j, gs[j] AS gram,
+             len(gs) AS n_grams
+      FROM grams, unnest(range(1, len(gs) + 1)) AS r(j)
+      WHERE len(gs) > 0
+    ),
+    hashed AS (
+      SELECT doc_id, j, gram, n_grams, {_HEX6} AS h FROM pos
+    ),
+    wins AS (
+      SELECT doc_id, j - off AS p, h, j, gram
+      FROM hashed, unnest({_OFFSETS}) AS o(off)
+      WHERE j - off >= 1 AND j - off <= greatest(n_grams - {W - 1}, 1)
+    ),
+    sel AS (
+      SELECT doc_id, p,
+             (min({{'h': h, 'nj': -j, 'g': gram}})).g AS gram
+      FROM wins GROUP BY doc_id, p
+    ),
+    fp AS (SELECT DISTINCT doc_id, gram FROM sel),
+    cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM fp GROUP BY doc_id),
+    pairs AS (
+      SELECT a.doc_id AS src_doc, b.doc_id AS dst_doc,
+             COUNT(*) AS n_shared
+      FROM fp a JOIN fp b ON a.gram = b.gram AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )
+    SELECT p.src_doc, p.dst_doc,
+           CAST(p.n_shared AS BIGINT) AS n_shared,
+           CAST(ca.n_fp AS BIGINT) AS n_src_fp,
+           CAST(cb.n_fp AS BIGINT) AS n_dst_fp,
+           CAST(p.n_shared * 1000000 // least(ca.n_fp, cb.n_fp)
+                AS BIGINT) AS overlap_e6
+    FROM pairs p
+    JOIN cnt ca ON p.src_doc = ca.doc_id
+    JOIN cnt cb ON p.dst_doc = cb.doc_id
+    WHERE p.n_shared >= 3
+    """,
+)
+def q_dedup_winnowing_fingerprint(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Winnowing fingerprint pairs: per doc, 3-token grams are keyed by
+    a portable md5-derived 24-bit hash; each sliding window of W=4
+    gram positions selects its minimum-hash gram (rightmost on ties —
+    min over struct(h, -j), identical in both engines); the DISTINCT
+    selected grams are the doc's fingerprints.  Docs sharing >= 3
+    fingerprints report with overlap_e6 = floored micro-share of the
+    smaller fingerprint set.  Any shared run of W+K-1 = 6 tokens
+    guarantees a shared fingerprint (the winnowing locality theorem) —
+    every 5th doc is staged again as its own 20-token excerpt
+    (tokens 9..28), a guaranteed-detected dup at any SF.
+
+    Plan shape: window membership is an EXPLODE of each gram into its
+    <= W covering windows (narrow (doc, p, h, j) tuples — never an
+    inequality join), selection is one (doc, p) aggregate, and the
+    bounded fingerprint table localCheckpoints (rule 12) before
+    feeding both pair-join sides and the count broadcast.  At corpus
+    scale the same fingerprint table IS the dedup index: candidates
+    come from the fingerprint equi-join (rule 14), density ~2/(W+1),
+    bodies never shuffle."""
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    base = d.select("doc_id", toks.alias("toks")).unionByName(
+        d.filter(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + 30000).alias("doc_id"),
+            F.slice(toks, 9, 20).alias("toks"),
+        )
+    )
+    grams = base.select(
+        "doc_id",
+        word_ngrams(F.col("toks"), K).alias("gs"),
+    ).filter(F.size("gs") > 0)
+    pos = grams.select(
+        "doc_id",
+        F.size("gs").alias("n_grams"),
+        F.posexplode("gs").alias("pos0", "gram"),
+    ).select(
+        "doc_id",
+        "n_grams",
+        (F.col("pos0") + 1).cast("long").alias("j"),
+        "gram",
+    )
+    hashed = pos.withColumn("h", F.expr(_HEX6))
+    wins = (
+        hashed.select(
+            "doc_id",
+            "h",
+            "j",
+            "gram",
+            "n_grams",
+            F.explode(F.array(*[F.lit(o) for o in range(W)])).alias("off"),
+        )
+        .withColumn("p", F.col("j") - F.col("off"))
+        .filter(
+            (F.col("p") >= 1)
+            & (F.col("p") <= F.greatest(F.col("n_grams") - (W - 1), F.lit(1)))
+        )
+    )
+    sel = wins.groupBy("doc_id", "p").agg(
+        F.min(
+            F.struct(
+                F.col("h").alias("h"),
+                (-F.col("j")).alias("nj"),
+                F.col("gram").alias("g"),
+            )
+        ).alias("sel")
+    )
+    # bounded fingerprint table feeds both join sides + the counts:
+    # checkpoint so the tokenize/winnow chain runs once (rule 12)
+    fp = (
+        sel.select("doc_id", F.col("sel.g").alias("gram"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # the per-doc count is consumed by BOTH pair sides; checkpoint the
+    # bounded (<= docs) aggregate so it computes once (rule 12)
+    cnt = (
+        fp.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_fp"))
+        .localCheckpoint(eager=True)
+    )
+    a, b = fp.alias("a"), fp.alias("b")
+    # the fingerprint table is bounded by construction (doc_id < 60
+    # oracle tier), so the self-join probe side broadcasts; the
+    # production-scale form joins against the persisted index instead
+    pairs = (
+        a.join(
+            F.broadcast(b),
+            (F.col("a.gram") == F.col("b.gram"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("src_doc"),
+            F.col("b.doc_id").alias("dst_doc"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= 3)
+    )
+    ca = cnt.select(
+        F.col("doc_id").alias("src_doc"), F.col("n_fp").alias("n_src_fp")
+    )
+    cb = cnt.select(
+        F.col("doc_id").alias("dst_doc"), F.col("n_fp").alias("n_dst_fp")
+    )
+    return (
+        pairs.join(F.broadcast(ca), "src_doc")
+        .join(F.broadcast(cb), "dst_doc")
+        .select(
+            "src_doc",
+            "dst_doc",
+            "n_shared",
+            F.col("n_src_fp").cast("long").alias("n_src_fp"),
+            F.col("n_dst_fp").cast("long").alias("n_dst_fp"),
+            F.expr(
+                "n_shared * 1000000 div least(n_src_fp, n_dst_fp)"
+            )
+            .cast("long")
+            .alias("overlap_e6"),
+        )
+    )
+

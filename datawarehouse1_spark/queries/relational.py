@@ -4,6 +4,9 @@ family (SURVEY.md §2A O1/O3/O5/O6, §2C C1-C7).
 All pure DataFrame built-ins — Catalyst gets full pushdown/pruning; joins
 against dimension tables broadcast (explicitly where the reference's
 schema guarantees the dim is small, else by AQE).
+
+Also here: pivot / unpivot, lateral top-n per nation, set operations,
+recursive hierarchies and the full outer reconcile.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from datawarehouse1_spark.functions.money import (
     sql_money_sum,
     units_to_money_double,
 )
+from datawarehouse1_spark.functions.money import TOTALPRICE_CENTS as _CENTS
 from datawarehouse1_spark.registry import declared
 
 
@@ -368,3 +372,268 @@ def q_subquery_scalar_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM __o_scalar)
         """
     )
+
+
+@declared(
+    "q_pivot_status_by_priority",
+    oracle="""
+    SELECT o_orderpriority,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS status_O,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS status_F,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS status_P
+    FROM orders
+    GROUP BY o_orderpriority
+    """,
+)
+def q_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-tab via pivot with EXPLICIT value list (an implicit pivot
+    adds a distinct-value collection job and nondeterministic column
+    order — never do that at scale)."""
+    o = table(spark, sf_dir, "orders")
+    pivoted = (
+        o.groupBy("o_orderpriority")
+        .pivot("o_orderstatus", ["O", "F", "P"])
+        .agg(F.count(F.lit(1)))
+    )
+    return pivoted.select(
+        "o_orderpriority",
+        F.coalesce(F.col("O"), F.lit(0)).alias("status_O"),
+        F.coalesce(F.col("F"), F.lit(0)).alias("status_F"),
+        F.coalesce(F.col("P"), F.lit(0)).alias("status_P"),
+    )
+
+
+_RECURSIVE_TREE_SQL = """
+    WITH RECURSIVE walk(doc_id, anc, depth) AS (
+      SELECT doc_id, doc_id AS anc, 0 AS depth
+      FROM documents WHERE doc_id < 127
+      UNION ALL
+      SELECT doc_id, CAST(floor((anc - 1) / 2.0) AS BIGINT) AS anc, depth + 1
+      FROM walk WHERE anc > 0
+    )
+    SELECT doc_id,
+           MAX(depth) AS depth,
+           MIN(anc) AS root_id,
+           COUNT(*) AS n_ancestors
+    FROM walk
+    GROUP BY doc_id
+"""
+
+
+@declared("q_hierarchy_sql_recursive", oracle=_RECURSIVE_TREE_SQL)
+def q_hierarchy_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GENUINE SQL recursion (WITH RECURSIVE, new in Spark 4): walk the
+    implicit binary-tree ancestry of doc ids (parent = floor((id-1)/2))
+    to the root and report depth / root / ancestor count per doc. The
+    IDENTICAL query text runs on both engines — Spark's recursive-CTE
+    executor vs DuckDB's — so this certifies the recursion semantics
+    themselves, complementing q_hierarchy_recursive_cte which certifies
+    the DataFrame-loop re-expression of iterative reachability. Bounded
+    to 127 docs (7 levels); each iteration is a narrow self-union."""
+    from datawarehouse1_spark.catalog import register_views
+
+    register_views(spark, sf_dir)
+    return spark.sql(_RECURSIVE_TREE_SQL)
+
+
+@declared(
+    "q_unpivot_metrics",
+    oracle="""
+    WITH wide AS (
+      SELECT n.n_name,
+             CAST(COUNT(*) AS DOUBLE) AS n_orders,
+             CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS revenue,
+             CAST(COUNT(DISTINCT o.o_custkey) AS DOUBLE) AS n_customers
+      FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n   ON c.c_nationkey = n.n_nationkey
+      GROUP BY n.n_name
+    )
+    SELECT n_name, metric, value FROM (
+      SELECT n_name, 'n_orders' AS metric, n_orders AS value FROM wide
+      UNION ALL
+      SELECT n_name, 'revenue', revenue FROM wide
+      UNION ALL
+      SELECT n_name, 'n_customers', n_customers FROM wide
+    )
+    """,
+)
+def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNPIVOT / melt (the inverse of q_pivot_status_by_priority): a
+    wide per-nation metrics row becomes (nation, metric, value) long
+    form — the shape metric stores and BI exports want. Uses the native
+    DataFrame unpivot (Expand under the hood: one pass, no self-union);
+    the oracle spells the same melt as UNION ALL. Money goes through
+    the exact-decimal sum before the double projection, per the
+    determinism contract."""
+    from datawarehouse1_spark.functions.money import money_sum
+
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer")
+    n = table(spark, sf_dir, "nation")
+    wide = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n_orders"),
+            money_sum("o_totalprice", "revenue"),
+            F.count_distinct("o_custkey").cast("double").alias("n_customers"),
+        )
+    )
+    return wide.unpivot(
+        ["n_name"], ["n_orders", "revenue", "n_customers"], "metric", "value"
+    )
+
+
+_LATERAL_SQL = """
+    SELECT n.n_name, top.c_name, top.bal
+    FROM nation n,
+    LATERAL (
+      SELECT c.c_name, CAST(c.c_acctbal AS DOUBLE) AS bal
+      FROM customer c
+      WHERE c.c_nationkey = n.n_nationkey
+      ORDER BY c.c_acctbal DESC, c.c_custkey
+      LIMIT 2
+    ) AS top
+"""
+
+
+@declared("q_lateral_topn_per_nation", oracle=_LATERAL_SQL)
+def q_lateral_topn_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated LATERAL subquery (top-2 customers per nation) — the
+    IDENTICAL query text on Spark's lateral-join planner and DuckDB.
+    Spark decorrelates this into the same window-rank shape as
+    q_window_rank_topn; this query certifies the SQL surface itself, as
+    with q_hierarchy_sql_recursive."""
+    from datawarehouse1_spark.catalog import register_views
+
+    register_views(spark, sf_dir)
+    return spark.sql(_LATERAL_SQL)
+
+
+_SET_ALL_SQL = """
+    SELECT o_orderpriority, 'both_months' AS tag FROM (
+      SELECT o_orderpriority FROM orders WHERE month(o_orderdate) = 1
+      INTERSECT ALL
+      SELECT o_orderpriority FROM orders WHERE month(o_orderdate) = 2
+    )
+    UNION ALL
+    SELECT o_orderpriority, 'jan_surplus' AS tag FROM (
+      SELECT o_orderpriority FROM orders WHERE month(o_orderdate) = 1
+      EXCEPT ALL
+      SELECT o_orderpriority FROM orders WHERE month(o_orderdate) = 2
+    )
+"""
+
+
+@declared("q_set_ops_all", oracle=_SET_ALL_SQL)
+def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bag-semantics set operations (INTERSECT ALL / EXCEPT ALL):
+    multiplicity-preserving overlap and surplus of order priorities
+    between two months — identical SQL text on both engines,
+    complementing the DISTINCT-semantics q_set_intersect/q_set_except.
+    Spark plans these as aggregate+generate (count-min replication),
+    one shuffle each."""
+    from datawarehouse1_spark.catalog import register_views
+
+    register_views(spark, sf_dir)
+    return spark.sql(_SET_ALL_SQL)
+
+
+_HIERARCHY_SQL = """
+    WITH RECURSIVE nodes AS (
+      SELECT c_custkey AS id,
+             CASE WHEN c_custkey < 10 THEN NULL
+                  ELSE CAST(floor(c_custkey / 10.0) AS BIGINT) END AS parent
+      FROM customer WHERE c_custkey < 1000
+    ),
+    chain(id, root, depth) AS (
+      SELECT id, id, 0 FROM nodes WHERE parent IS NULL
+      UNION ALL
+      SELECT n.id, c.root, c.depth + 1
+      FROM nodes n JOIN chain c ON n.parent = c.id
+    )
+    SELECT id, root, depth FROM chain
+"""
+
+
+@declared("q_hierarchy_recursive_cte", oracle=_HIERARCHY_SQL)
+def q_hierarchy_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hierarchy traversal via WITH RECURSIVE (Spark 4's recursive CTE
+    support — the org-chart/category-tree rollup class BI tools emit).
+    The tree is derived deterministically from customer keys (parent =
+    floor(id/10), forest rooted at ids < 10), so both engines recurse
+    over identical edges; recursion depth is the tree height (~3), and
+    each iteration is one bounded join — the same iterate-join shape as
+    operators/dedup.py::dedup_clusters_from_pairs, here expressed in
+    pure SQL and hash-matched against DuckDB's recursive CTE."""
+    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    return spark.sql(_HIERARCHY_SQL)
+
+
+@declared(
+    "q_join_full_outer_reconcile",
+    oracle=f"""
+    WITH a AS (
+      SELECT o_orderkey AS k, {_CENTS} AS v FROM orders
+      WHERE o_orderkey % 3 <> 0
+    ),
+    b AS (
+      SELECT o_orderkey AS k,
+             CASE WHEN o_orderkey % 7 = 0 THEN {_CENTS} + 100
+                  ELSE {_CENTS} END AS v
+      FROM orders WHERE o_orderkey % 5 <> 0
+    ),
+    j AS (
+      SELECT CASE WHEN a.k IS NULL THEN 'right_only'
+                  WHEN b.k IS NULL THEN 'left_only'
+                  WHEN a.v = b.v THEN 'matched'
+                  ELSE 'changed' END AS status,
+             coalesce(a.v, 0) AS av, coalesce(b.v, 0) AS bv
+      FROM a FULL OUTER JOIN b ON a.k = b.k
+    )
+    SELECT status, COUNT(*) AS n_keys,
+           CAST(SUM(bv - av) AS BIGINT) AS value_delta_cents
+    FROM j GROUP BY status
+    """,
+)
+def q_join_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot reconciliation via FULL OUTER join — the diff report a
+    warehouse sync runs between yesterday's and today's extracts: two
+    staged order snapshots (every 3rd key missing on the left, every
+    5th on the right, every 7th value bumped 100 cents on the right)
+    joined full-outer on the key, each key classified matched /
+    changed / left_only / right_only with the exact integer-cents
+    value delta per class. Completes the outer-join coverage of the
+    declared join battery. Plan: both snapshot sides shuffle once on
+    the key (full outer cannot broadcast — the drift-monitor finding,
+    ADVICE r9); the class aggregate is bounded at 4 rows."""
+    o = table(spark, sf_dir, "orders")
+    cents = F.expr(_CENTS)
+    a = o.where(F.col("o_orderkey") % 3 != 0).select(
+        F.col("o_orderkey").alias("k"), cents.alias("av")
+    )
+    b = o.where(F.col("o_orderkey") % 5 != 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.when(F.col("o_orderkey") % 7 == 0, cents + 100)
+        .otherwise(cents)
+        .alias("bv"),
+    )
+    j = a.join(b, "k", "full_outer").select(
+        F.when(F.col("av").isNull(), "right_only")
+        .when(F.col("bv").isNull(), "left_only")
+        .when(F.col("av") == F.col("bv"), "matched")
+        .otherwise("changed")
+        .alias("status"),
+        F.coalesce(F.col("av"), F.lit(0)).alias("av"),
+        F.coalesce(F.col("bv"), F.lit(0)).alias("bv"),
+    )
+    return j.groupBy("status").agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum(F.col("bv") - F.col("av")).cast("long").alias(
+            "value_delta_cents"
+        ),
+    )
+

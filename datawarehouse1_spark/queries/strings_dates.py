@@ -3,6 +3,9 @@
 The reference's data demands these: leading/trailing whitespace in
 clients.adresse / produits.nom, numeric-looking phone strings, and
 date_vente delivered as an Excel serial float (SURVEY.md §5.2).
+
+Calendar queries beside them: month gap-filling and business-day
+counts.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from datawarehouse1_spark.functions.excel_serial import (
     excel_serial_to_timestamp,
     sql_excel_serial_to_timestamp,
 )
+from datawarehouse1_spark.functions.money import money_sum, sql_money_sum
 from datawarehouse1_spark.registry import declared
 
 
@@ -134,3 +138,147 @@ def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_add(d.cast("date"), 30).alias("due_date"),
         F.last_day(d).alias("month_end"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Gap-filled time series (dimension completion)
+# ---------------------------------------------------------------------------
+
+
+@declared(
+    "q_date_gapfill_months",
+    oracle=f"""
+    WITH big AS (
+      SELECT * FROM orders WHERE o_totalprice > 400000
+    ),
+    bounds AS (
+      SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) AS lo,
+             CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS hi
+      FROM orders
+    ),
+    months AS (
+      SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 MONTH)) AS DATE)
+               AS month
+      FROM bounds
+    ),
+    rev AS (
+      SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+             {sql_money_sum("o_totalprice", "revenue")},
+             COUNT(*) AS n_orders
+      FROM big GROUP BY 1
+    )
+    SELECT m.month,
+           COALESCE(r.revenue, 0.0) AS revenue,
+           COALESCE(r.n_orders, 0) AS n_orders
+    FROM months m LEFT JOIN rev r ON m.month = r.month
+    """,
+)
+def q_date_gapfill_months(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-filled monthly revenue of big-ticket orders: the month spine
+    is generated from the FULL table's bounds, so months where no order
+    clears the threshold appear with 0 — the classic reporting
+    dimension-completion the reference gets from Metabase date
+    bucketing. The spine is a one-row aggregate exploded driver-free
+    (sequence + explode), broadcast into the left join; the fact scan
+    is filtered before its one shuffle."""
+    o = table(spark, sf_dir, "orders")
+    big = o.filter(F.col("o_totalprice") > 400000)
+    bounds = o.agg(
+        F.date_trunc("month", F.min("o_orderdate")).cast("date").alias("lo"),
+        F.date_trunc("month", F.max("o_orderdate")).cast("date").alias("hi"),
+    )
+    months = bounds.select(
+        F.explode(
+            F.sequence("lo", "hi", F.expr("INTERVAL 1 MONTH"))
+        ).alias("month")
+    )
+    rev = big.groupBy(
+        F.date_trunc("month", "o_orderdate").cast("date").alias("month")
+    ).agg(
+        money_sum("o_totalprice", "revenue"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+    return (
+        months.join(rev, "month", "left")
+        .select(
+            "month",
+            F.coalesce("revenue", F.lit(0.0)).alias("revenue"),
+            F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Business-day ship latency histogram
+# ---------------------------------------------------------------------------
+
+# W(d) = business days from the Monday epoch 1969-12-29 through d
+# inclusive: 5 full weeks' worth plus min(weekday_index + 1, 5).
+# Latency in business days over (order, ship] is then W(ship) -
+# W(order) — pure integer arithmetic on days-since-epoch, identical in
+# both engines (no DOW builtin, whose week conventions differ).
+
+
+@declared(
+    "q_date_business_days",
+    oracle="""
+    WITH d AS (
+      SELECT o.o_orderpriority,
+             date_diff('day', DATE '1969-12-29',
+                       CAST(l.l_shipdate AS DATE)) AS ms,
+             date_diff('day', DATE '1969-12-29',
+                       CAST(o.o_orderdate AS DATE)) AS mo
+      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    ),
+    w AS (
+      SELECT o_orderpriority,
+             (5 * (ms // 7) + LEAST((ms % 7) + 1, 5))
+           - (5 * (mo // 7) + LEAST((mo % 7) + 1, 5)) AS busdays
+      FROM d
+    )
+    SELECT o_orderpriority, CAST(busdays AS BIGINT) AS busdays,
+           CAST(COUNT(*) AS BIGINT) AS n_lineitems
+    FROM w GROUP BY o_orderpriority, busdays
+    """,
+)
+def q_date_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order→ship latency in BUSINESS days (weekends excluded) per
+    priority class, as an exact histogram — the calendar-aware twin of
+    q_orders_ship_latency.  The weekday count is closed-form integer
+    arithmetic on days since a Monday epoch (W(d) = 5·⌊m/7⌋ +
+    min(m%7+1, 5)), deliberately avoiding each engine's DOW builtin
+    (their week-start conventions differ).  Scale shape: project both
+    sides to (key, date) before the orderkey-keyed fact join, then one
+    partial-combinable aggregate to a |priority|×|latency-domain| grid
+    — bounded by the DATE domain (~15k rows on this testdata, whose
+    synthetic shipdates span ±2400 days around the order), independent
+    of fact row count.  The W() operands are non-negative day counts
+    (dates are post-epoch), so // and Spark div agree even when the
+    resulting latency is negative."""
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.expr(
+            "datediff(CAST(l_shipdate AS DATE), DATE '1969-12-29')"
+        ).alias("ms"),
+    )
+    o = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.expr(
+            "datediff(CAST(o_orderdate AS DATE), DATE '1969-12-29')"
+        ).alias("mo"),
+    )
+    j = li.join(o, li.l_orderkey == o.o_orderkey)
+    w = j.select(
+        "o_orderpriority",
+        (
+            F.expr("5 * (ms div 7) + LEAST((ms % 7) + 1, 5)")
+            - F.expr("5 * (mo div 7) + LEAST((mo % 7) + 1, 5)")
+        )
+        .cast("long")
+        .alias("busdays"),
+    )
+    return w.groupBy("o_orderpriority", "busdays").agg(
+        F.count(F.lit(1)).alias("n_lineitems")
+    )
+

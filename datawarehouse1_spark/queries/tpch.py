@@ -4,11 +4,13 @@ analytics class (SURVEY.md §2C). Q1 (pricing summary), Q3 (shipping
 priority), Q6 (forecast revenue change), adapted to the available
 columns; money arithmetic in exact decimal so both engines agree
 bit-for-bit.
+
+The other queries complete the 22-query canon (Q2, 4, 5, 7-22).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
@@ -424,3 +426,707 @@ def q_tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> Dat
             F.sum(_d("c_acctbal")).cast("double").alias("totacctbal"),
         )
     )
+
+
+def _revenue() -> F.Column:
+    return _d("l_extendedprice") * (F.lit(1).cast(_DEC) - _d("l_discount"))
+
+
+@declared(
+    "q_tpch_q2_min_cost_supplier",
+    oracle="""
+    WITH eligible AS (
+      SELECT p.p_partkey, p.p_name, s.s_suppkey, s.s_name,
+             CAST(s.s_acctbal AS DOUBLE) AS s_acctbal, n.n_name,
+             CAST(l.l_extendedprice AS DOUBLE) AS price
+      FROM part p
+        JOIN lineitem l ON l.l_partkey = p.p_partkey
+        JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        JOIN nation n   ON n.n_nationkey = s.s_nationkey
+        JOIN region r   ON r.r_regionkey = n.n_regionkey
+      WHERE p.p_size = 15 AND p.p_type LIKE '%A%' AND r.r_name = 'EUROPE'
+    )
+    SELECT DISTINCT e.s_acctbal, e.s_name, e.n_name, e.p_partkey, e.p_name,
+                    e.price AS min_price
+    FROM eligible e
+      JOIN (SELECT p_partkey, min(price) AS mp FROM eligible GROUP BY p_partkey) m
+        ON e.p_partkey = m.p_partkey AND e.price = m.mp
+    ORDER BY e.s_acctbal DESC, e.s_name, e.p_partkey
+    LIMIT 100
+    """,
+)
+def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q2 (minimum-cost supplier): the correlated-MIN subquery over
+    a region-restricted 5-way join. Substitution: no partsupp, so the
+    part↔supplier relationship comes from lineitem and ps_supplycost
+    becomes the shipped l_extendedprice. Spark side uses a window MIN
+    over p_partkey instead of the SQL self-join — one shuffle on the
+    partkey, no second scan of the joined input; region/nation dims
+    broadcast."""
+    p = table(spark, sf_dir, "part").filter(
+        (F.col("p_size") == 15) & F.col("p_type").like("%A%")
+    )
+    li = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    eligible = (
+        p.join(li, p.p_partkey == li.l_partkey)
+        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .select(
+            "p_partkey", "p_name", "s_suppkey", "s_name",
+            F.col("s_acctbal").cast("double").alias("s_acctbal"),
+            "n_name",
+            F.col("l_extendedprice").cast("double").alias("price"),
+        )
+    )
+    w = Window.partitionBy("p_partkey")
+    return (
+        eligible.withColumn("mp", F.min("price").over(w))
+        .filter(F.col("price") == F.col("mp"))
+        .select(
+            "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
+            F.col("price").alias("min_price"),
+        )
+        .distinct()
+        .orderBy(F.desc("s_acctbal"), F.asc("s_name"), F.asc("p_partkey"))
+        .limit(100)
+    )
+
+
+@declared(
+    "q_tpch_q4_order_priority",
+    oracle="""
+    SELECT o.o_orderpriority, COUNT(*) AS order_count
+    FROM orders o
+    WHERE o.o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+      AND o.o_orderdate <  TIMESTAMP '1996-10-01 00:00:00'
+      AND EXISTS (SELECT 1 FROM lineitem l
+                  WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
+    GROUP BY o.o_orderpriority
+    """,
+)
+def q_tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 (order-priority checking): quarter-scoped orders with a
+    correlated EXISTS over lineitem, counted per priority. Substitution:
+    the spec's late-delivery predicate (l_commitdate < l_receiptdate —
+    columns absent) becomes l_returnflag = 'R'. The EXISTS is a left-semi
+    join; the returnflag filter pushes into the lineitem scan before the
+    shuffle."""
+    o = table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
+    )
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count"))
+    )
+
+
+@declared(
+    "q_tpch_q7_volume_shipping",
+    oracle="""
+    SELECT supp_nation, cust_nation, l_year, CAST(SUM(volume) AS DOUBLE) AS revenue
+    FROM (
+      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+             year(l.l_shipdate) AS l_year,
+             CAST(l.l_extendedprice AS DECIMAL(18,2))
+               * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS volume
+      FROM supplier s
+        JOIN lineitem l ON s.s_suppkey = l.l_suppkey
+        JOIN orders o   ON o.o_orderkey = l.l_orderkey
+        JOIN customer c ON c.c_custkey = o.o_custkey
+        JOIN nation n1  ON s.s_nationkey = n1.n_nationkey
+        JOIN nation n2  ON c.c_nationkey = n2.n_nationkey
+      WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+    ) shipping
+    GROUP BY supp_nation, cust_nation, l_year
+    """,
+)
+def q_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q7 (volume shipping): bilateral trade volume between two
+    nations per year — the two-role nation join (n1 on the supplier, n2
+    on the customer) with the symmetric OR pair predicate.
+
+    Filter-first shape (r6): the pair predicate implies supp_nation AND
+    cust_nation each lie in the two-nation set, so that necessary
+    condition pushes onto supplier and customer BEFORE any fact join —
+    lineitem shrinks via the broadcast nation-filtered supplier, orders
+    shrinks via the nation-filtered customer, and the fact⋈fact
+    orderkey shuffle carries ~(2/|nations|)² of the naive volume. The
+    exact OR pair (excluding same-nation trade) applies after the
+    orderkey join, on already-small rows. The previous shape joined
+    full-size facts and filtered last — two full fact shuffles of rows
+    that were then discarded."""
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    )
+    o = table(spark, sf_dir, "orders")
+    nations = ("NATION_1", "NATION_2")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name").isin(*nations))
+    s2 = (
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
+    )
+    c2 = (
+        table(spark, sf_dir, "customer")
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("c_custkey", F.col("n_name").alias("cust_nation"))
+    )
+    li2 = li.join(F.broadcast(s2), li.l_suppkey == s2.s_suppkey)
+    o2 = o.join(c2, o.o_custkey == c2.c_custkey).select(
+        "o_orderkey", "cust_nation"
+    )
+    pair = (
+        (F.col("supp_nation") == nations[0]) & (F.col("cust_nation") == nations[1])
+    ) | ((F.col("supp_nation") == nations[1]) & (F.col("cust_nation") == nations[0]))
+    return (
+        li2.join(o2, li2.l_orderkey == o2.o_orderkey)
+        .filter(pair)
+        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
+        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+    )
+
+
+@declared(
+    "q_tpch_q8_market_share",
+    oracle="""
+    SELECT o_year,
+           CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume END) AS DOUBLE)
+             / CAST(SUM(volume) AS DOUBLE) AS mkt_share
+    FROM (
+      SELECT year(o.o_orderdate) AS o_year,
+             CAST(l.l_extendedprice AS DECIMAL(18,2))
+               * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS volume,
+             n2.n_name AS nation
+      FROM part p
+        JOIN lineitem l ON p.p_partkey = l.l_partkey
+        JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n1  ON c.c_nationkey = n1.n_nationkey
+        JOIN region r   ON n1.n_regionkey = r.r_regionkey
+        JOIN nation n2  ON s.s_nationkey = n2.n_nationkey
+      WHERE r.r_name = 'ASIA' AND p.p_type = 'ECONOMY'
+        AND o.o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+        AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+    ) all_nations
+    GROUP BY o_year
+    """,
+)
+def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q8 (national market share): one nation's share of a region's
+    volume per year — conditional-sum over conditional-sum from the full
+    8-way star. The NULL-when-no-match numerator (SUM over an ELSE-less
+    CASE) divides to NULL identically in both engines.
+
+    Region-first shape (r8, SCALE.md rule 2 — derive the implied
+    filter): the customer join exists only to test ASIA membership, so
+    orders is SEMI-joined against region-filtered customers BEFORE the
+    fact join. The r6 shape joined the fat lineitem⋈orders product to
+    full customer on custkey — its biggest shuffle moved rows the ASIA
+    predicate then discarded (~4/5 at 25 nations). Now the custkey
+    shuffle moves only orders+customer/5, the orderkey shuffle moves
+    ~1/5 the orders rows, and the fat product never re-shuffles:
+    c_custkey is the customer PK so semi == inner multiplicity, and
+    n1/region collapse into a broadcast key-set filter."""
+    p = table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    li = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    o = table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+    )
+    c = table(spark, sf_dir, "customer")
+    n1 = table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region")
+    )
+    n2 = table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("nation")
+    )
+    r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    # ASIA nation keys (≤ a handful of rows) broadcast into customer;
+    # semi join keeps exactly the customers the inner c⋈n1⋈r chain kept
+    asia_cust = c.join(
+        F.broadcast(
+            n1.join(r, F.col("n1_region") == F.col("r_regionkey")).select("n1_key")
+        ),
+        F.col("c_nationkey") == F.col("n1_key"),
+        "left_semi",
+    ).select("c_custkey")
+    o_asia = o.join(
+        asia_cust, o.o_custkey == asia_cust.c_custkey, "left_semi"
+    ).select("o_orderkey", "o_orderdate")
+    vol = _revenue().alias("volume")
+    joined = (
+        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(o_asia, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
+        .select(F.year("o_orderdate").alias("o_year"), vol, "nation")
+    )
+    return joined.groupBy("o_year").agg(
+        (
+            F.sum(F.when(F.col("nation") == "NATION_3", F.col("volume"))).cast("double")
+            / F.sum("volume").cast("double")
+        ).alias("mkt_share")
+    )
+
+
+@declared(
+    "q_tpch_q9_product_type_profit",
+    oracle="""
+    SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS sum_profit
+    FROM (
+      SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
+             CAST(l.l_extendedprice AS DECIMAL(18,2))
+               * (1 - CAST(l.l_discount AS DECIMAL(18,2))) AS amount
+      FROM part p
+        JOIN lineitem l ON p.p_partkey = l.l_partkey
+        JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        JOIN orders o   ON o.o_orderkey = l.l_orderkey
+        JOIN nation n   ON s.s_nationkey = n.n_nationkey
+      WHERE p.p_name LIKE '%widget%'
+    ) profit
+    GROUP BY nation, o_year
+    """,
+)
+def q_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q9 (product-type profit): profit by supplier nation and
+    order year for parts matching a name pattern. Substitution: no
+    partsupp, so profit omits the ps_supplycost term (pure discounted
+    revenue) and '%green%' becomes '%widget%' (this generator's
+    vocabulary). The LIKE filter pushes to the part scan, which then
+    broadcasts into the lineitem join."""
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
+    li = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    o = table(spark, sf_dir, "orders")
+    n = table(spark, sf_dir, "nation")
+    return (
+        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .groupBy(
+            F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
+        )
+        .agg(F.sum(_revenue()).cast("double").alias("sum_profit"))
+    )
+
+
+@declared(
+    "q_tpch_q11_important_stock",
+    oracle="""
+    WITH natline AS (
+      SELECT l.l_partkey, CAST(l.l_extendedprice AS DECIMAL(18,2)) AS val
+      FROM lineitem l
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        JOIN nation n   ON s.s_nationkey = n.n_nationkey
+      WHERE n.n_name = 'NATION_5'
+    )
+    SELECT l_partkey, CAST(SUM(val) AS DOUBLE) AS part_value
+    FROM natline
+    GROUP BY l_partkey
+    HAVING CAST(SUM(val) AS DOUBLE)
+         > (SELECT CAST(SUM(val) AS DOUBLE) * 0.001 FROM natline)
+    """,
+)
+def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q11 (important stock): per-part value within one nation,
+    kept when above a fraction of the nation's total — the scalar-
+    aggregate-subquery HAVING. Substitution: no partsupp, so value =
+    shipped l_extendedprice instead of supplycost*availqty.
+
+    Single-scan shape (r6): the global total re-aggregates the per-part
+    DECIMAL partials instead of re-scanning lineitem — decimal addition
+    is exact and associative, so sum-of-group-sums equals the direct
+    global sum bit-for-bit, and the big fact is scanned/joined ONCE
+    (the naive two-branch plan reads it twice; at 100 TB the second
+    scan is the whole cost). Both sides cast to double only at the end;
+    the 0.001 multiply happens once in double."""
+    li = table(spark, sf_dir, "lineitem")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+    natline = (
+        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select("l_partkey", _d("l_extendedprice").alias("val"))
+    )
+    per_part = natline.groupBy("l_partkey").agg(
+        F.sum("val").alias("val_dec")
+    )
+    total = per_part.agg(
+        (F.sum("val_dec").cast("double") * F.lit(0.001)).alias("threshold")
+    )
+    return (
+        per_part.select(
+            "l_partkey", F.col("val_dec").cast("double").alias("part_value")
+        )
+        .join(F.broadcast(total))
+        .filter(F.col("part_value") > F.col("threshold"))
+        .select("l_partkey", "part_value")
+    )
+
+
+@declared(
+    "q_tpch_q12_shipping_priority_class",
+    oracle="""
+    SELECT l.l_returnflag,
+           COUNT(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                      THEN 1 END) AS high_line_count,
+           COUNT(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                      THEN 1 END) AS low_line_count
+    FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    WHERE l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY l.l_returnflag
+    """,
+)
+def q_tpch_q12_shipping_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q12 (shipping modes / order priority): the two conditional
+    counts split by priority class. Substitution: no l_shipmode column,
+    so the grouping mode is l_returnflag, and the receipt-date year
+    filter becomes a shipdate year. COUNT(CASE...) (not SUM of 0/1)
+    keeps both engines in BIGINT — DuckDB's SUM(int) is HUGEINT, which
+    the driver's pandas fetch renders as float."""
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    )
+    o = table(spark, sf_dir, "orders")
+    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.when(high, 1)).alias("high_line_count"),
+            F.count(F.when(~high, 1)).alias("low_line_count"),
+        )
+    )
+
+
+@declared(
+    "q_tpch_q15_top_supplier",
+    oracle="""
+    WITH revenue AS (
+      SELECT l_suppkey AS supplier_no,
+             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                      * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+               AS total_revenue
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
+      GROUP BY l_suppkey
+    )
+    SELECT s.s_suppkey, s.s_name, r.total_revenue
+    FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
+    WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
+    ORDER BY s.s_suppkey
+    """,
+)
+def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q15 (top supplier): the revenue view over one quarter and
+    the supplier(s) hitting its MAX — equality against a scalar
+    aggregate of the SAME derived table. Both engines derive
+    total_revenue from identical exact-decimal sums cast to double, so
+    the max-equality boundary is bit-identical. The one-row max
+    broadcasts. The revenue view feeds BOTH the supplier join and the
+    max — localCheckpoint materializes it once (per-supplier rows, tiny
+    next to lineitem), so the fact scan + aggregation run once instead
+    of twice; without it Catalyst re-executes the whole subtree for
+    each consumer."""
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
+    )
+    revenue = (
+        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
+        .agg(F.sum(_revenue()).cast("double").alias("total_revenue"))
+        .localCheckpoint(eager=False)
+    )
+    mx = revenue.agg(F.max("total_revenue").alias("mx"))
+    s = table(spark, sf_dir, "supplier")
+    return (
+        s.join(revenue, s.s_suppkey == revenue.supplier_no)
+        .join(F.broadcast(mx))
+        .filter(F.col("total_revenue") == F.col("mx"))
+        .select("s_suppkey", "s_name", "total_revenue")
+        .orderBy("s_suppkey")
+    )
+
+
+@declared(
+    "q_tpch_q16_parts_supplier",
+    oracle="""
+    SELECT p.p_brand, p.p_type, p.p_size,
+           COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
+    FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
+    WHERE p.p_brand <> 'Brand#1' AND p.p_type NOT LIKE 'PROMO%'
+      AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
+    GROUP BY p.p_brand, p.p_type, p.p_size
+    """,
+)
+def q_tpch_q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q16 (parts/supplier relationship): distinct-supplier counts
+    per (brand, type, size) bucket under negated + IN-list part filters.
+    Substitution: supplier linkage via lineitem (no partsupp) and the
+    complaint-supplier NOT IN exclusion is dropped (no comment column).
+    Part filters all push to the scan; the distinct count is the only
+    shuffle."""
+    p = table(spark, sf_dir, "part").filter(
+        (F.col("p_brand") != "Brand#1")
+        & ~F.col("p_type").like("PROMO%")
+        & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
+    )
+    li = table(spark, sf_dir, "lineitem")
+    return (
+        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
+    )
+
+
+@declared(
+    "q_tpch_q17_small_quantity_revenue",
+    oracle="""
+    WITH per_part AS (
+      SELECT l_partkey,
+             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
+               AS avg_qty
+      FROM lineitem GROUP BY l_partkey
+    )
+    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
+             AS avg_yearly
+    FROM lineitem l
+      JOIN part p     ON p.p_partkey = l.l_partkey
+      JOIN per_part a ON a.l_partkey = l.l_partkey
+    WHERE p.p_brand = 'Brand#3' AND l.l_quantity < 0.2 * a.avg_qty
+    """,
+)
+def q_tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q17 (small-quantity-order revenue): the correlated
+    per-part-average subquery, decorrelated. r10 rewrite (the Q18
+    aggregate-carry discipline): the brand filter restricts the
+    average's DOMAIN to qualifying parts' lineitems anyway, so instead
+    of a second full-lineitem scan feeding a per-part aggregate, the
+    broadcast-filtered subset computes its own per-part average as a
+    WINDOW — one fact scan total, one exchange bounded by the brand
+    selectivity (|lineitem|/|brands| rows), no join-back. Measured
+    1.02 s → 0.56 s at sf0.1 (min-of-3, bit-identical result). The
+    average is exact-decimal SUM / COUNT so the 0.2× comparison
+    boundary is identical in both engines."""
+    li = table(spark, sf_dir, "lineitem")
+    p = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
+    filtered = li.join(
+        F.broadcast(p), F.col("p_partkey") == F.col("l_partkey")
+    )
+    w = Window.partitionBy("l_partkey")
+    avg_qty = (
+        F.sum(_d("l_quantity")).over(w).cast("double")
+        / F.count(F.lit(1)).over(w)
+    )
+    return (
+        filtered.withColumn("avg_qty", avg_qty)
+        .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
+        .agg((F.sum(_d("l_extendedprice")).cast("double") / 7.0).alias("avg_yearly"))
+    )
+
+
+@declared(
+    "q_tpch_q19_discounted_revenue",
+    oracle="""
+    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
+                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+             AS revenue
+    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
+           AND l.l_quantity BETWEEN 1 AND 11)
+       OR (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 1 AND 10
+           AND l.l_quantity BETWEEN 10 AND 20)
+       OR (p.p_brand = 'Brand#14' AND p.p_size BETWEEN 1 AND 15
+           AND l.l_quantity BETWEEN 20 AND 30)
+    """,
+)
+def q_tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q19 (discounted revenue): the OR-of-conjunctive-bands
+    predicate straddling both join sides — the classic test of OR
+    predicate handling across a join. Substitution: container/shipmode
+    clauses (columns absent) are dropped from each band, keeping the
+    brand + size + quantity structure. The part side reduces to three
+    brands (scan-pushed p_brand IN) and broadcasts; the mixed OR applies
+    post-join.
+
+    r9 envelope pushdown: Catalyst cannot push the cross-side OR below
+    the join, but each side's disjunct ENVELOPE is a single-side
+    implication of it — l_quantity ∈ [1,30] (the union of the three
+    quantity bands) and p_size ∈ [1,15] — so both push into their scans
+    (parquet min/max pruning + pre-probe row drop) while the exact OR
+    still applies post-join. At sf0.1 this removes ~40% of lineitem
+    rows before the broadcast-hash probe; at 100 TB the quantity
+    envelope is the difference between scanning every row group and
+    skipping the ones the bands cannot touch."""
+    li = table(spark, sf_dir, "lineitem").filter(
+        F.col("l_quantity").between(1, 30)
+    )
+    p = table(spark, sf_dir, "part").filter(
+        F.col("p_brand").isin("Brand#12", "Brand#13", "Brand#14")
+        & F.col("p_size").between(1, 15)
+    )
+    band = (
+        (F.col("p_brand") == "Brand#12")
+        & F.col("p_size").between(1, 5)
+        & F.col("l_quantity").between(1, 11)
+    ) | (
+        (F.col("p_brand") == "Brand#13")
+        & F.col("p_size").between(1, 10)
+        & F.col("l_quantity").between(10, 20)
+    ) | (
+        (F.col("p_brand") == "Brand#14")
+        & F.col("p_size").between(1, 15)
+        & F.col("l_quantity").between(20, 30)
+    )
+    return (
+        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .filter(band)
+        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+    )
+
+
+@declared(
+    "q_tpch_q20_part_promotion",
+    oracle="""
+    SELECT s.s_name, CAST(s.s_acctbal AS DOUBLE) AS s_acctbal
+    FROM supplier s
+      JOIN nation n ON s.s_nationkey = n.n_nationkey
+    WHERE n.n_name = 'NATION_7'
+      AND s.s_suppkey IN (
+        SELECT l.l_suppkey
+        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+        WHERE p.p_name LIKE 'red%'
+          AND l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+          AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+        GROUP BY l.l_suppkey
+        HAVING SUM(CAST(l.l_quantity AS DECIMAL(18,2))) > 50
+      )
+    ORDER BY s.s_name
+    """,
+)
+def q_tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q20 (potential part promotion): suppliers in one nation who
+    moved real volume of pattern-named parts in one year — the nested
+    IN-subquery over a grouped HAVING. Substitution: availqty/partsupp
+    absent, so the half-of-stock threshold becomes a fixed shipped-
+    quantity floor (>50, exact decimal). The HAVING set is tiny and
+    becomes a left-semi broadcast join."""
+    li = table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
+    )
+    p = table(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
+    movers = (
+        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .groupBy("l_suppkey")
+        .agg(F.sum(_d("l_quantity")).alias("q"))
+        .filter(F.col("q") > 50)
+        .select("l_suppkey")
+    )
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    return (
+        s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(movers), s.s_suppkey == F.col("l_suppkey"), "left_semi")
+        .select("s_name", F.col("s_acctbal").cast("double").alias("s_acctbal"))
+        .orderBy("s_name")
+    )
+
+
+@declared(
+    "q_tpch_q21_waiting_supplier",
+    oracle="""
+    SELECT s.s_name, COUNT(*) AS numwait
+    FROM supplier s
+      JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
+      JOIN orders o    ON o.o_orderkey = l1.l_orderkey
+      JOIN nation n    ON s.s_nationkey = n.n_nationkey
+    WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+      AND n.n_name = 'NATION_9'
+      AND EXISTS (SELECT 1 FROM lineitem l2
+                  WHERE l2.l_orderkey = l1.l_orderkey
+                    AND l2.l_suppkey <> l1.l_suppkey)
+      AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                      WHERE l3.l_orderkey = l1.l_orderkey
+                        AND l3.l_suppkey <> l1.l_suppkey
+                        AND l3.l_returnflag = 'R')
+    GROUP BY s.s_name
+    ORDER BY numwait DESC, s.s_name
+    LIMIT 100
+    """,
+)
+def q_tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q21 (suppliers who kept orders waiting): the EXISTS +
+    NOT-EXISTS pair with inequality correlation (another supplier on the
+    same order / no OTHER supplier also at fault). Substitution: the
+    receipt>commit lateness predicate becomes l_returnflag = 'R'.
+
+    The correlated pair decorrelates into per-order supplier statistics
+    (the scalable rewrite — correlated per-row EXISTS would rescan
+    lineitem per line at 100 TB): EXISTS other-supplier ⇔ the order has
+    ≥2 distinct suppliers; NOT EXISTS other-at-fault ⇔ exactly 1
+    distinct supplier among its 'R' lines (l1 itself is 'R', so that one
+    is l1's supplier).
+
+    Single-aggregation shape (r16, replacing the r8 pair-grain agg +
+    per-order windows): every per-order statistic the two EXISTS need
+    folds into ONE order-grain aggregate via min/max identities —
+    "some other supplier exists" ⇔ min(suppkey) ≠ max(suppkey), and
+    "exactly one distinct supplier among the order's R lines" ⇔
+    min(R-suppkey) == max(R-suppkey) given n_r_lines > 0 (min/max skip
+    the NULLs the non-R lines contribute). numwait per qualifying order
+    is its total R-line count (all R lines belong to the one R
+    supplier, which IS l1's supplier), and that supplier's key is
+    min(R-suppkey) itself. One lineitem scan with map-side partials
+    collapsing each order's lines before the single fact-grain
+    exchange; the r8 window pass — a second exchange of the pair rows
+    to orderkey grain plus its sort — is gone entirely (3 → 2 shuffles,
+    no Sort/Window operators; plan diff in plans/r16/). A
+    multi-countDistinct would instead plan an Expand that doubles every
+    row before the shuffle; the min/max pair costs nothing extra."""
+    li = table(spark, sf_dir, "lineitem")
+    r_supp = F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
+    per_order = li.groupBy("l_orderkey").agg(
+        F.sum(
+            F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+        ).alias("n_r_lines"),
+        F.min("l_suppkey").alias("_supp_min"),
+        F.max("l_suppkey").alias("_supp_max"),
+        F.min(r_supp).alias("_r_supp_min"),
+        F.max(r_supp).alias("_r_supp_max"),
+    )
+    s = table(spark, sf_dir, "supplier")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    n = table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_9")
+    return (
+        per_order.filter(
+            (F.col("n_r_lines") > 0)
+            & (F.col("_supp_min") != F.col("_supp_max"))
+            & (F.col("_r_supp_min") == F.col("_r_supp_max"))
+        )
+        .join(F.broadcast(s), F.col("_r_supp_min") == F.col("s_suppkey"))
+        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+        .groupBy("s_name")
+        .agg(F.sum("n_r_lines").alias("numwait"))
+        .orderBy(F.desc("numwait"), F.asc("s_name"))
+        .limit(100)
+    )
+

@@ -6,6 +6,9 @@ The reference gets these from Postgres constraints + a hand-rolled
 metadata table (init-db/init.sql:11-17, 23, 50, 58-59; etl/app.py:36-89);
 Spark enforces none of them, so each is an explicit, testable transform
 (also exposed as reusable ops in operators/warehouse.py).
+
+SCD2 history beside them: the per-user state history and its as-of
+lookup.
 """
 
 from __future__ import annotations
@@ -14,6 +17,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.checksum import (
+    MOD_P,
+    hex15_to_long_sql,
+    table_checksum,
+)
 from datawarehouse1_spark.registry import declared
 
 
@@ -214,11 +222,7 @@ def q_union_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- migration reconciliation: order-independent table checksums ---
-from datawarehouse1_spark.functions.checksum import (  # noqa: E402
-    MOD_P,
-    hex15_to_long_sql,
-    table_checksum,
-)
+
 
 _CK_TABLES = {
     "nation": ["n_nationkey", "n_name", "n_regionkey"],
@@ -548,3 +552,54 @@ def q_scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.join(F.broadcast(probes), cond)
         .select("probe_seq", "o_orderkey", "o_orderstatus", "o_totalprice")
     )
+
+
+@declared(
+    "q_scd2_user_state",
+    oracle="""
+    WITH marked AS (
+      SELECT user_id, event_type, ts, event_id,
+             CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
+                  THEN 1 ELSE 0 END AS is_change
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    changes AS (
+      SELECT user_id, event_type, ts AS valid_from, event_id
+      FROM marked WHERE is_change = 1
+    )
+    SELECT user_id, event_type, valid_from,
+           lead(valid_from) OVER (PARTITION BY user_id
+                                  ORDER BY valid_from, event_id) AS valid_to
+    FROM changes
+    """,
+)
+def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD type-2 history build: collapse each user's event stream into
+    [valid_from, valid_to) state intervals, opening a row only when the
+    state actually changes (lag comparison) and closing it with the
+    next change's timestamp (lead). The type-2 companion to
+    q_upsert_latest's type-1 overwrite — both shuffles share the
+    user_id partitioning, so AQE coalesces them onto one exchange."""
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    marked = ev.select(
+        "user_id",
+        "event_type",
+        "ts",
+        "event_id",
+        (
+            ~F.lag("event_type").over(w).eqNullSafe(F.col("event_type"))
+        ).cast("int").alias("is_change"),
+    )
+    changes = marked.filter(F.col("is_change") == 1).select(
+        "user_id", "event_type", F.col("ts").alias("valid_from"), "event_id"
+    )
+    w2 = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
+    return changes.select(
+        "user_id",
+        "event_type",
+        "valid_from",
+        F.lead("valid_from").over(w2).alias("valid_to"),
+    )
+

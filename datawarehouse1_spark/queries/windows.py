@@ -1,6 +1,9 @@
 """Ordering + window family (SURVEY.md C13-C15): top-N, per-group ranking,
 running aggregates. Ties always broken by a unique key so the DuckDB
 oracle hash-matches (SURVEY.md §5.3 determinism rules).
+
+The rest of the window battery: lag deltas, range frames, dense rank,
+ntile, percent rank, cume_dist, first/last and moving averages.
 """
 
 from __future__ import annotations
@@ -9,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark.catalog import table
+from datawarehouse1_spark.functions.money import MONEY, money_sum, sql_money_sum
 from datawarehouse1_spark.registry import declared
 
 
@@ -194,3 +198,158 @@ def q_window_dense_rank_peers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dense_rank().over(w).alias("dense_rk"),
         F.rank().over(w).cast("long").alias("rk"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Window-function extensions (beyond C13-C15: ntile / percent_rank /
+# first-last / moving average)
+# ---------------------------------------------------------------------------
+
+
+@declared(
+    "q_window_ntile_quartile",
+    oracle="""
+    SELECT c_custkey, c_acctbal,
+           ntile(4) OVER (ORDER BY c_acctbal, c_custkey) AS quartile
+    FROM customer
+    """,
+)
+def q_window_ntile_quartile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equal-height quartile bucketing of customers by balance. ntile is
+    a single global sort — at 100 TB swap for approx_percentile cutoffs
+    (3 numbers broadcast) + a narrow CASE; the exact form here is the
+    oracle-checkable semantics."""
+    c = table(spark, sf_dir, "customer")
+    w = Window.orderBy("c_acctbal", "c_custkey")
+    return c.select(
+        "c_custkey", "c_acctbal", F.ntile(4).over(w).alias("quartile")
+    )
+
+
+@declared(
+    "q_window_percent_rank",
+    oracle="""
+    SELECT s_suppkey, s_acctbal,
+           percent_rank() OVER (ORDER BY s_acctbal, s_suppkey) AS pct_rank,
+           cume_dist() OVER (ORDER BY s_acctbal, s_suppkey) AS cume
+    FROM supplier
+    """,
+)
+def q_window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank/cume_dist: (rank-1)/(n-1) and rank/n — single IEEE
+    divisions of small integers, bit-identical across engines."""
+    s = table(spark, sf_dir, "supplier")
+    w = Window.orderBy("s_acctbal", "s_suppkey")
+    return s.select(
+        "s_suppkey",
+        "s_acctbal",
+        F.percent_rank().over(w).alias("pct_rank"),
+        F.cume_dist().over(w).alias("cume"),
+    )
+
+
+@declared(
+    "q_window_first_last",
+    oracle="""
+    SELECT o_custkey, o_orderkey,
+           first_value(o_orderkey) OVER w AS first_order_key,
+           last_value(o_orderkey)  OVER w AS last_order_key
+    FROM orders
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+    """,
+)
+def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First/last order per customer carried onto every row — the
+    window-frame form of a groupBy+join, one shuffle instead of two."""
+    o = table(spark, sf_dir, "orders")
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_orderdate", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.first("o_orderkey").over(w).alias("first_order_key"),
+        F.last("o_orderkey").over(w).alias("last_order_key"),
+    )
+
+
+@declared(
+    "q_window_moving_avg",
+    oracle=f"""
+    WITH daily AS (
+      SELECT CAST(o_orderdate AS DATE) AS day,
+             {sql_money_sum("o_totalprice", "revenue")}
+      FROM orders GROUP BY 1
+    )
+    SELECT day, revenue,
+           CAST(SUM(CAST(revenue AS DECIMAL(18,2))) OVER w AS DOUBLE)
+             / COUNT(*) OVER w AS ma7
+    FROM daily
+    WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    """,
+)
+def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """7-day moving average of daily revenue. The moving SUM runs over
+    DECIMAL (order-independent exact addition) and only the final
+    divide is IEEE — deterministic in both engines. Daily pre-agg
+    shrinks the window input to one row/day before the single sort."""
+    o = table(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(money_sum("o_totalprice", "revenue"))
+    w = Window.orderBy("day").rowsBetween(-6, 0)
+    return daily.select(
+        "day",
+        "revenue",
+        (
+            F.sum(F.col("revenue").cast(MONEY)).over(w).cast("double")
+            / F.count(F.lit(1)).over(w)
+        ).alias("ma7"),
+    )
+
+
+@declared(
+    "q_window_cume_dist",
+    oracle="""
+    SELECT o_orderkey, o_orderpriority, o_totalprice,
+           round(cume_dist() OVER
+                   (PARTITION BY o_orderpriority ORDER BY o_totalprice),
+                 6) AS cd6,
+           round(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER
+                        (PARTITION BY o_orderpriority ORDER BY o_totalprice)
+                      AS DOUBLE)
+                 / CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER
+                          (PARTITION BY o_orderpriority)
+                        AS DOUBLE), 6) AS rev_share6
+    FROM orders
+    """,
+)
+def q_window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """cume_dist per priority class over order value, with the
+    cumulative revenue share beside it — together the Lorenz view
+    ("orders at or below this price carry X% of revenue"). cume_dist
+    and the default RANGE frame both depend only on the ORDER value,
+    so ties are deterministic in both engines; the running and total
+    revenue are exact decimal sums divided once in IEEE doubles. ONE
+    exchange: all three windows share the o_orderpriority partition
+    (the ordered windows sort within it; the total-revenue window
+    needs no order)."""
+    o = table(spark, sf_dir, "orders")
+    wp = Window.partitionBy("o_orderpriority")
+    wo = wp.orderBy("o_totalprice")
+    money = F.col("o_totalprice").cast("decimal(18,2)")
+    return o.select(
+        "o_orderkey",
+        "o_orderpriority",
+        "o_totalprice",
+        F.round(F.cume_dist().over(wo), 6).alias("cd6"),
+        F.round(
+            F.sum(money).over(wo).cast("double")
+            / F.sum(money).over(wp).cast("double"),
+            6,
+        ).alias("rev_share6"),
+    )
+

@@ -1,5 +1,5 @@
 """Continuously-maintained last-touch attribution: the streaming face
-of q_events_attribution_last_touch (queries/events_r10.py).
+of q_events_attribution_last_touch (queries/events.py).
 
 Events arrive as a STREAM ordered by event time per user (the same
 ordered-feed contract the SCD2/CDC maintainers assume — a replayable

@@ -1,7 +1,7 @@
 """Streaming distribution-drift monitor: a foreachBatch maintainer
 that scores every micro-batch's categorical distribution against a
 blessed reference profile with the SAME rational chi-square statistic
-as the batch report (queries/profiling_r8.py::q_drift_chisq_report)
+as the batch report (queries/profiling.py::q_drift_chisq_report)
 and appends one report row per batch to a persisted drift log.
 
 This is the always-on face of the data-quality check: the batch query

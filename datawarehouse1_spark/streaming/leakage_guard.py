@@ -1,5 +1,5 @@
 """Continuously-maintained eval-contamination guard: the streaming
-face of q_split_train_holdout's leakage audit (queries/curation_r10.py).
+face of q_split_train_holdout's leakage audit (queries/curation.py).
 
 Documents arrive as a STREAM of (doc_id, text). Each document belongs
 to a split — a pure function of doc_id (functions/splits.py, the

@@ -26,12 +26,10 @@ bench = _load_bench()
 
 def test_bench_tail_lines_fit_driver_budget():
     """The driver records EXACTLY the last 2000 stdout chars (measured
-    on BENCH_r12); simulate the six compact lines bench.py emits with
-    worst-case realistic widths (9.99 s per query — current max is
+    on BENCH_r12) and parses only the final line; simulate that line
+    with worst-case realistic widths (9.99 s per query — current max is
     5.3 s and a 10 s query is already a flagged regression; 4-decimal
-    metrics; totals 3-digit) and assert they fit with headroom. This is
-    the static twin of VERDICT r11 #7's 'all per-query lines parse from
-    the artifact tail'."""
+    metrics; totals 3-digit) and assert it fits whole with headroom."""
     import ast
 
     src = BENCH_PY.read_text()
@@ -43,16 +41,14 @@ def test_bench_tail_lines_fit_driver_budget():
             and node.targets[0].id in ("HEADLINE", "LLM", "ANALYTICS")
         ):
             names[node.targets[0].id] = ast.literal_eval(node.value)
-    # the family-segment strip must stay collision-free per line (r14:
-    # the headline and analytics lines are family-stripped too, funding
-    # the spread_ds noise line)
+    # the family-segment strip must stay collision-free per section
     for group in ("LLM", "HEADLINE", "ANALYTICS"):
         stripped = [bench._famstrip(k) for k in names[group]]
         assert len(set(stripped)) == len(stripped), group
     mstripped = [bench._famstrip(k) for k in accuracy.METRICS]
     assert len(set(mstripped)) == len(mstripped)
-    # r17: the final line's flat per_query map spans ALL sections, so
-    # the strip must be collision-free ACROSS sections too (a collision
+    # the final line's flat per_query map spans ALL sections, so the
+    # strip must be collision-free ACROSS sections too (a collision
     # would fall back to the full name — allowed, but budget-modeled
     # here as the stripped name, so keep it collision-free)
     all_stripped = [
@@ -61,93 +57,43 @@ def test_bench_tail_lines_fit_driver_budget():
         for k in names[g]
     ]
     assert len(set(all_stripped)) == len(all_stripped)
-    lines = [
-        json.dumps(
-            {
-                "analytics_per_query": {
-                    bench._famstrip(k): 9.99 for k in names["ANALYTICS"]
-                }
+    final = json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": 999.9999,
+            "unit": "sec",
+            "sf": 0.1,
+            "tpch_total": 999.9999,
+            "llm_total": 999.9999,
+            # per-section canaries from r15 (VERDICT r14 #2)
+            "canary": {
+                "h": 9.9999,
+                "t": 9.9999,
+                "l": 9.9999,
+                "a": 9.9999,
             },
-            separators=(",", ":"),
-        ),
-        json.dumps(
-            {"llm_per_query": {bench._famstrip(k): 9.99 for k in names["LLM"]}},
-            separators=(",", ":"),
-        ),
-        json.dumps(
-            {"rows_only_metrics": {k: 0.9999 for k in mstripped}},
-            separators=(",", ":"),
-        ),
-        json.dumps(
-            {"tpch_per_query": {str(i): 9.99 for i in range(1, 23)}},
-            separators=(",", ":"),
-        ),
-        json.dumps(
-            {
-                "headline_per_query": {
-                    bench._famstrip(k): 9.99 for k in names["HEADLINE"]
-                }
-            },
-            separators=(",", ":"),
-        ),
-        # spread_ds digits are one char per query BY CONSTRUCTION
-        # (capped at 9), so this worst case is exact, not estimated
-        json.dumps(
-            {
-                "spread_ds": {
-                    "a": "9" * len(names["ANALYTICS"]),
-                    "l": "9" * len(names["LLM"]),
-                    "t": "9" * 22,
-                    "h": "9" * len(names["HEADLINE"]),
-                }
-            },
-            separators=(",", ":"),
-        ),
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": 999.9999,
-                "unit": "sec",
-                "sf": 0.1,
-                "tpch_total": 999.9999,
-                "llm_total": 999.9999,
-                # per-section canaries from r15 (VERDICT r14 #2)
-                "canary": {
-                    "h": 9.9999,
-                    "t": 9.9999,
-                    "l": 9.9999,
-                    "a": 9.9999,
+            "per_query": {
+                **{
+                    bench._famstrip(k): 9.99
+                    for g in ("HEADLINE", "LLM", "ANALYTICS")
+                    for k in names[g]
                 },
-                # r17 (VERDICT r16 #3): the flat per_query map + the
-                # duplicated metrics/spread ride the FINAL line, which
-                # the driver parses — see the final-line assert below
-                "per_query": {
-                    **{
-                        bench._famstrip(k): 9.99
-                        for g in ("HEADLINE", "LLM", "ANALYTICS")
-                        for k in names[g]
-                    },
-                    **{str(i): 9.99 for i in range(1, 23)},
-                },
-                "rows_only_metrics": {k: 0.9999 for k in mstripped},
-                "spread_ds": {
-                    "a": "f" * len(names["ANALYTICS"]),
-                    "l": "f" * len(names["LLM"]),
-                    "t": "f" * 22,
-                    "h": "f" * len(names["HEADLINE"]),
-                },
-                "incomplete": True,
+                **{str(i): 9.99 for i in range(1, 23)},
             },
-            separators=(",", ":"),
-        ),
-    ]
-    # r17 invariant: the per-section lines are now REDUNDANT with the
-    # final line (per_query/rows_only_metrics/spread_ds duplicated into
-    # it), so the seven lines together may exceed the 2000-char capture
-    # — but the FINAL line, the only one the driver parses, must always
-    # survive WHOLE (truncation eats from the top) and is
-    # self-sufficient. 1990 leaves newline slack.
-    final = lines[-1]
+            "rows_only_metrics": {k: 0.9999 for k in mstripped},
+            # spread_ds digits are one char per query BY CONSTRUCTION
+            # (capped at 'f'), so this worst case is exact
+            "spread_ds": {
+                "a": "f" * len(names["ANALYTICS"]),
+                "l": "f" * len(names["LLM"]),
+                "t": "f" * 22,
+                "h": "f" * len(names["HEADLINE"]),
+            },
+            "incomplete": True,
+        },
+        separators=(",", ":"),
+    )
+    # 1990 leaves newline slack.
     assert len(final) + 1 <= 1990, (
         f"bench final line is {len(final)} chars; the driver captures "
         "exactly 2000 and parses only the last line — it must fit whole"

@@ -16,8 +16,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark import registry
-from datawarehouse1_spark.queries.analytics_r12 import _FD_CASES, _PMI_MIN_COUNT
 from datawarehouse1_spark.queries.deciles import running_sum
+from datawarehouse1_spark.queries.profiling import _FD_CASES
+from datawarehouse1_spark.queries.text import _PMI_MIN_COUNT
 from tests.conftest import SF_DIR
 
 registry.load_all()
@@ -542,9 +543,11 @@ def test_dow_chisq_extremes(spark, tmp_path):
 
 # ---------------------------------------------------- batch 3 laws
 
-from datawarehouse1_spark.queries.analytics_r12c import (  # noqa: E402
+from datawarehouse1_spark.queries.profiling import (  # noqa: E402
     _ADVISOR_ROWS_PER_FILE,
-    _CAL_BIN,
+)
+from datawarehouse1_spark.queries.stats import _CAL_BIN  # noqa: E402
+from datawarehouse1_spark.queries.text import (  # noqa: E402
     _RAKE_MAX_LEN,
     _RAKE_STOP,
     _RAKE_TOP_K,

@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark import registry
-from datawarehouse1_spark.queries.analytics_r12f import (
+from datawarehouse1_spark.queries.stats import (
     _BRIER_CAP,
     _PR_MAX,
     _PR_STEP,

@@ -10,10 +10,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from datawarehouse1_spark import registry
-from datawarehouse1_spark.queries.analytics_r12g import (
-    _COPURCHASE_SUPPORT,
-    _bf_arm,
-)
+from datawarehouse1_spark.queries.graph import _COPURCHASE_SUPPORT
+from datawarehouse1_spark.queries.stats import _bf_arm
 from tests.conftest import SF_DIR
 
 registry.load_all()

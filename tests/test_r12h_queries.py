@@ -10,10 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datawarehouse1_spark import registry
-from datawarehouse1_spark.queries.analytics_r12h import (
-    _ind_arm,
-    _key_arm,
-)
+from datawarehouse1_spark.queries.profiling import _ind_arm, _key_arm
 
 registry.load_all()
 

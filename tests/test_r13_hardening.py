@@ -129,7 +129,7 @@ def test_copurchase_skew_pathological_basket(spark):
     the supported edges of the well-behaved orders intact."""
     from pyspark.sql import functions as F
 
-    from datawarehouse1_spark.queries.copurchase import (
+    from datawarehouse1_spark.queries.graph import (
         copurchase_edges_from_incidence,
     )
 
@@ -196,7 +196,7 @@ def test_copurchase_cap_logs_loudly(spark, caplog):
     """The skew cap must never drop evidence silently."""
     import logging
 
-    from datawarehouse1_spark.queries.copurchase import (
+    from datawarehouse1_spark.queries.graph import (
         copurchase_edges_from_incidence,
     )
 
@@ -204,7 +204,7 @@ def test_copurchase_cap_logs_loudly(spark, caplog):
         [(7, 100 + i) for i in range(30)], ["l_orderkey", "l_partkey"]
     )
     with caplog.at_level(
-        logging.WARNING, logger="datawarehouse1_spark.queries.copurchase"
+        logging.WARNING, logger="datawarehouse1_spark.queries.graph"
     ):
         copurchase_edges_from_incidence(ip, support=2, max_basket=10).count()
     assert any("EXCLUDING" in r.message for r in caplog.records)
